@@ -24,8 +24,11 @@ import org.apache.spark.sql.SparkSession
   * execution (measured: q22 first run 3.9 s, steady state 1.8 s), and
   * warming only the first query would fold that one-time cost into
   * every other query's number. The timed pass then reflects steady
-  * state (what a long-lived cluster sees). Failed queries are reported in a
-  * `failed` list and excluded from the total rather than silently summed.
+  * state (what a long-lived cluster sees). Failed queries — in the warmup
+  * or the timed rep — are reported in a `failed` list and excluded from
+  * the total rather than silently summed. Each base detail line carries
+  * `cg=`, the generated classes compiled during the timed rep (0 when
+  * the codegen cache holds the warm working set).
   * The JSON line is also written to SPARK_GRAFT_BENCH_OUT (if set) so the
   * driver can parse it without scraping sbt log decoration.
   *
@@ -82,10 +85,10 @@ object Bench {
 
   /** One timed rep with full attribution: (wall s, GC s during, own
     * process-CPU s, OTHER-process CPU s from /proc/stat, machine
-    * iowait+steal s from the same read).
+    * iowait+steal s from the same read, generated classes compiled).
     */
   private case class Rep(wall: Double, gc: Double, cpu: Double,
-      other: Double, iow: Double) {
+      other: Double, iow: Double, cg: Long) {
     /** Share of the machine other processes used during the rep. */
     def otherShare(cores: Int): Double =
       if (other < 0 || wall <= 0) 0.0 else other / (wall * cores)
@@ -147,9 +150,13 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def cpuNanos: Long = math.max(0L, osBean.getProcessCpuTime)
+    // generated classes Janino compiled so far (JVM-wide): a warm rep
+    // should compile none, so a codegen-cache regression shows per entry
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
 
     def timeRep(name: String, dir: String): Option[Rep] = {
-      val g0 = gcMillis; val c0 = cpuNanos
+      val g0 = gcMillis; val c0 = cpuNanos; val cg0 = compiles
       val (b0, i0) = statJiffies(); val s0 = selfJiffies()
       val t0 = System.nanoTime()
       try {
@@ -161,7 +168,8 @@ object Bench {
           if (b0 < 0 || s0 < 0) -1.0
           else math.max(0.0, ((b1 - b0) - (selfJiffies() - s0)) / hz)
         val iow = if (i0 < 0) -1.0 else math.max(0.0, (i1 - i0) / hz)
-        Some(Rep(wall, (gcMillis - g0) / 1e3, cpu, other, iow))
+        Some(Rep(wall, (gcMillis - g0) / 1e3, cpu, other, iow,
+          compiles - cg0))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
@@ -178,16 +186,22 @@ object Bench {
       new java.math.BigDecimal(v)
         .setScale(2, java.math.RoundingMode.HALF_UP).toPlainString
 
-    // warmup: run every headline query once, untimed (codegen + JIT)
-    names.foreach { n =>
-      try materialize(spark, n, qmap(n), sfDir) catch { case _: Throwable => () }
-    }
-    val results: Seq[(String, Option[Rep])] =
-      names.map(name => (name, timeRep(name, sfDir)))
+    // warmup: run every headline query once, untimed (codegen + JIT);
+    // an entry whose warmup fails is reported in `failed`, not timed
+    val warmFailed = names.filterNot { n =>
+      try { materialize(spark, n, qmap(n), sfDir); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $n warmup failed: ${e.getMessage}")
+        false
+      }
+    }.toSet
+    val results: Seq[(String, Option[Rep])] = names.map(name =>
+      (name, if (warmFailed(name)) None else timeRep(name, sfDir)))
     results.foreach { case (n, r) =>
       r.foreach(s => System.err.println(
         f"[bench] base $n: ${s.wall}%.2fs gc=${s.gc}%.2fs " +
-          f"cpu=${s.cpu}%.1fs other=${s.other}%.1fs iow=${s.iow}%.1fs"))
+          f"cpu=${s.cpu}%.1fs other=${s.other}%.1fs iow=${s.iow}%.1fs " +
+          s"cg=${s.cg}"))
     }
     val failed = results.filter(_._2.isEmpty).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")

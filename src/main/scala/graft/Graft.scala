@@ -12,7 +12,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Apply engine-standard configs onto a builder. */
+  /** Apply engine-standard configs onto a builder.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes the JVM-wide LRU of
+    * compiled whole-stage/projection classes to the engine's working
+    * set. Spark's default holds 100 classes; one warm Metrica pass
+    * (ingest → compact → Q1/Q2 → hits write → CSV-gzip export →
+    * reconcile) needs 111 distinct classes and one curation pass
+    * (q22/q209/q280/q290) 327, so under the default the LRU evicts
+    * each class just before its reuse and every repeat of the same
+    * plan pays Janino compilation (100–130 ms per 224-column
+    * projection) and a cold JIT again. 1000 is over twice the union of
+    * those working sets and still a bounded LRU. It is a STATIC conf:
+    * `CodeGenerator` reads it once per JVM when it first loads, so it
+    * must be set on the builder — `spark.conf.set` afterwards does
+    * nothing.
+    */
   def tune(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
     // native function surface (graft_minhash64 / graft_simhash64)
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -26,6 +41,7 @@ object Graft {
     // Spark cannot read natively: read as long and convert in table()
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

@@ -318,6 +318,11 @@ object Dedup {
     * are recomputed ONLY for candidate documents (semi-join on the
     * candidate id set) — the property that keeps the verify stage
     * candidate-bounded at 100 TB.
+    *
+    * EAGER by default: with `materialize = true` the candidate-pair
+    * frame is staged ([[graft.Graft.stage]]) inside this call, so the
+    * call itself runs Spark jobs before it returns. `materialize =
+    * false` returns the whole plan unexecuted (same rows).
     */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,

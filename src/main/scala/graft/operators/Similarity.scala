@@ -709,11 +709,18 @@ object Similarity {
     * over the sample: the m subspaces are posexploded together and
     * aggregated by (subspace, code) — fused, not m separate scans.
     * Returns codebooks(s)(c) = centroid of code c in subspace s.
+    *
+    * `totalRows`, when given, must be |vecs| (> 0): it replaces the
+    * count job as the denominator of the `maxTrainRows` sample, so a
+    * wrong value changes which rows train; a non-positive one is
+    * rejected.
     */
   def pqCodebooks(vecs: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, iters: Int,
       maxTrainRows: Long = 100000L,
       totalRows: Option[Long] = None): Array[Array[Seq[Double]]] = {
+    require(totalRows.forall(_ > 0),
+      s"pqCodebooks: totalRows must be positive, got ${totalRows.get}")
     val dim = vecs.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"pqCodebooks: dim $dim not divisible by m=$m")
     val sub = dim / m

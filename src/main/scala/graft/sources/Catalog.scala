@@ -83,6 +83,19 @@ object Catalog {
     import org.apache.spark.sql.functions.col
     val schema = b.schema.getOrElse(throw new IllegalArgumentException(
       s"warehouse binding '${b.name}' needs a declared schema"))
+    // no files yet: the declared shape, plus the partition column the
+    // first write will create
+    def empty: DataFrame =
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType(schema.fields :+
+          org.apache.spark.sql.types.StructField(Warehouse.weekCol,
+            org.apache.spark.sql.types.DateType)))
+    // a just-registered table (Ingest.activate, before the first batch)
+    // has no directory: answer without asking the file source, which
+    // would log a FileNotFoundException stack trace before failing
+    val dir = new org.apache.hadoop.fs.Path(b.path)
+    if (!dir.getFileSystem(spark.sessionState.newHadoopConf()).exists(dir))
+      return empty
     try {
       val raw = Warehouse.read(spark, b.path)
       // Spark refuses to cast away element nullability (see
@@ -113,15 +126,10 @@ object Catalog {
         .map(c => col(s"`$c`"))
       raw.select(declared ++ extras: _*)
     } catch {
-      // no files yet: the declared shape, plus the partition column
-      // the first write will create
+      // an empty directory, or one removed since the check above
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-            e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(schema.fields :+
-            org.apache.spark.sql.types.StructField(Warehouse.weekCol,
-              org.apache.spark.sql.types.DateType)))
+            e.getCondition == "PATH_NOT_FOUND" => empty
     }
   }
 

@@ -34,6 +34,13 @@ import graft.sources.Warehouse
   * work is [[Warehouse.write]]'s (repartition by week → whole sorted
   * files per week). Throughput tuning = `maxFilesPerTrigger` ×
   * executor count; no stateful operator, so no state store to size.
+  * Known per-activation cost: Spark keys its codegen cache by the task
+  * thread's context classloader too, and each streaming activation's
+  * tasks run under a new `ExecutorClassLoader`, while the session's
+  * batch tasks keep one loader. So every activation recompiles its
+  * batch plans' classes (8 per run of the Metrica write path, however
+  * large the cache in [[graft.Graft.tune]]); a long-running stream
+  * pays this once, a run-to-completion loop once per run.
   */
 object Ingest {
 

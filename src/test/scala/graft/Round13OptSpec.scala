@@ -17,7 +17,8 @@ import graft.operators.{Dedup, Similarity}
   *    stages its triplet and hashed-set frames).
   *  - `pqCodebooks(totalRows = Some(n))` (caller-supplied cardinality,
   *    one count job fewer) trains bit-identical codebooks to the
-  *    self-counting form.
+  *    self-counting form, on the full set and on the id-hash sample a
+  *    small `maxTrainRows` selects.
   */
 class Round13OptSpec extends SparkSpec {
   import spark.implicits._
@@ -60,17 +61,14 @@ class Round13OptSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture must produce at least one triplet")
   }
 
-  test("pqCodebooks: caller-supplied totalRows trains bit-identical " +
-      "codebooks to the self-counting form") {
-    val vecs = spark.range(24).select(col("id").as("vec_id"),
-      transform(sequence(lit(1), lit(8)), d =>
-        sin(col("id") * d.cast("double")) * 10.0).as("embedding"))
-      .localCheckpoint() // one snapshot feeds both trainings
-    val n = vecs.count()
-    val a = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
-      m = 2, k = 4, iters = 2)
-    val b = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
-      m = 2, k = 4, iters = 2, totalRows = Some(n))
+  // 8-d vectors with a deterministic spread, one snapshot per size
+  private def pqVecs(n: Int) = spark.range(n).select(col("id").as("vec_id"),
+    transform(sequence(lit(1), lit(8)), d =>
+      sin(col("id") * d.cast("double")) * 10.0).as("embedding"))
+    .localCheckpoint()
+
+  private def assertSameBooks(a: Array[Array[Seq[Double]]],
+      b: Array[Array[Seq[Double]]]): Unit = {
     assert(a.length == b.length)
     for (s <- a.indices) {
       assert(a(s).length == b(s).length, s"subspace $s codeword count")
@@ -79,5 +77,43 @@ class Round13OptSpec extends SparkSpec {
           b(s)(c).map(java.lang.Double.doubleToRawLongBits),
           s"subspace $s code $c drifted")
     }
+  }
+
+  test("pqCodebooks: caller-supplied totalRows trains bit-identical " +
+      "codebooks to the self-counting form") {
+    val vecs = pqVecs(24)
+    val n = vecs.count()
+    val a = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
+      m = 2, k = 4, iters = 2)
+    val b = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
+      m = 2, k = 4, iters = 2, totalRows = Some(n))
+    assertSameBooks(a, b)
+  }
+
+  test("pqCodebooks: with a small maxTrainRows, caller-supplied " +
+      "totalRows trains on the same id-hash sample as the " +
+      "self-counting form") {
+    val vecs = pqVecs(64)
+    val n = vecs.count()
+    // 64 rows / 16 = every 4th id-hash residue class trains
+    val a = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
+      m = 2, k = 4, iters = 2, maxTrainRows = 16L)
+    val b = Similarity.pqCodebooks(vecs, "vec_id", "embedding",
+      m = 2, k = 4, iters = 2, maxTrainRows = 16L, totalRows = Some(n))
+    assertSameBooks(a, b)
+    // and the sample is exactly the id-hash residue class: training
+    // on it explicitly (no further sampling) gives the same books
+    val sample = vecs.filter(pmod(xxhash64(col("vec_id")), lit(4L)) === 0)
+    val c = Similarity.pqCodebooks(sample, "vec_id", "embedding",
+      m = 2, k = 4, iters = 2)
+    assertSameBooks(a, c)
+  }
+
+  test("pqCodebooks rejects a non-positive totalRows") {
+    val vecs = pqVecs(8)
+    val e = intercept[IllegalArgumentException](
+      Similarity.pqCodebooks(vecs, "vec_id", "embedding",
+        m = 2, k = 4, iters = 1, totalRows = Some(0L)))
+    assert(e.getMessage.contains("totalRows"))
   }
 }
