@@ -184,6 +184,34 @@ object Dedup {
   private def bindOnce(e: Column, f: Column => Column): Column =
     element_at(transform(array(e), f), 1)
 
+  /** One `(keep…, band, bkey)` row per LSH band of every row of `df`
+    * with a non-empty `shingles` set. The signature is the native
+    * kernel ([[graft.plans.NativeHashes.minHashSignature64]]; the Column
+    * formulation is interpreted HOF evaluation and dominated the whole
+    * pipeline's CPU), bound ONCE per row so the band keys cannot
+    * re-inline it.
+    */
+  private def bandRows(df: DataFrame, shingles: String, numHashes: Int,
+      bands: Int, keep: Column*): DataFrame = {
+    val r = numHashes / bands
+    require(bands * r == numHashes, "bands must divide numHashes")
+    val keys = bindOnce(
+      graft.plans.NativeHashes.minHashSignature64(col(shingles), numHashes),
+      sig => lshBandKeys(sig, bands, r))
+    df.filter(size(col(shingles)) > 0)
+      .select(keep :+ posexplode(keys).as(Seq("band", "bkey")): _*)
+  }
+
+  /** Exact Jaccard |A∩B| / |A∪B| from the intersection and union
+    * sizes; 0 when the union is empty.
+    */
+  private def jaccard(nInter: Column, nUnion: Column): Column =
+    when(nUnion > 0, nInter.cast("double") / nUnion).otherwise(lit(0.0))
+
+  /** [[jaccard]] of two shingle-set columns. */
+  private def jaccardOf(a: Column, b: Column): Column =
+    jaccard(size(array_intersect(a, b)), size(array_union(a, b)))
+
   /** All (id_a < id_b) pairs within each bucket of a (band, key)
     * bucketing: ONE shuffle on the bucket key, collect ids per bucket,
     * expand combinations in-expression. Deliberately not a self-join —
@@ -261,23 +289,9 @@ object Dedup {
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, shinglesCol: String,
       numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = 10000, obs: Option[Observation] = None): DataFrame = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
-    // native kernel (graft.plans.NativeHashes): the Column formulation
-    // of the signature is interpreted HOF evaluation and dominates the
-    // whole pipeline's CPU; the custom expression does the same loop
-    // codegen'd. bindOnce still guards the 16 band keys from
-    // re-inlining the signature.
-    val keys = bindOnce(
-      graft.plans.NativeHashes.minHashSignature64(col(shinglesCol), numHashes),
-      sig => lshBandKeys(sig, bands, r))
-    val buckets = df
-      .filter(size(col(shinglesCol)) > 0)
-      .select(col(idCol), posexplode(keys))
-      .toDF(idCol, "band", "bkey")
-    pairsWithinBuckets(buckets, idCol, maxBucket, obs)
-  }
+      maxBucket: Int = 10000, obs: Option[Observation] = None): DataFrame =
+    pairsWithinBuckets(bandRows(df, shinglesCol, numHashes, bands, col(idCol)),
+      idCol, maxBucket, obs)
 
   /** Exact Jaccard verification of candidate pairs: join the shingle
     * sets back (two hash joins on the id), compute |A∩B| / |A∪B|.
@@ -294,9 +308,7 @@ object Dedup {
         size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("long"))
       .withColumn("n_union",
         size(array_union(col("__sh_a"), col("__sh_b"))).cast("long"))
-      .withColumn("jaccard",
-        when(col("n_union") > 0,
-          col("n_inter").cast("double") / col("n_union")).otherwise(lit(0.0)))
+      .withColumn("jaccard", jaccard(col("n_inter"), col("n_union")))
       .drop("__sh_a", "__sh_b")
   }
 
@@ -381,20 +393,13 @@ object Dedup {
       maxBucket: Int = 10000): DataFrame = {
     import graft.functions.text
     val spark = batch.sparkSession
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
     val shingled = batch
       .withColumn("__id", col(s"`$idCol`").cast("long"))
       .withColumn("__sh",
         text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN))
-    def bandKeys(frame: DataFrame): DataFrame = {
-      val keys = bindOnce(
-        graft.plans.NativeHashes.minHashSignature64(col("__sh"), numHashes),
-        sig => lshBandKeys(sig, bands, r))
-      frame.filter(size(col("__sh")) > 0)
-        .select(col("__id"), posexplode(keys))
-        .toDF("__id", "band", "bkey")
-    }
+    def bandKeys(frame: DataFrame): DataFrame =
+      bandRows(frame, "__sh", numHashes, bands, col("__id"))
+    val batchBands = bandKeys(shingled)
     def readStore(part: String): Option[DataFrame] =
       try Some(spark.read.parquet(s"$storeDir/$part"))
       catch {
@@ -411,7 +416,7 @@ object Dedup {
         .select(col("band"), col("bkey"))
       val sb = sb0.join(hot, Seq("band", "bkey"), "left_anti")
         .withColumnRenamed("__id", "__hist")
-      val cands = bandKeys(shingled).join(sb, Seq("band", "bkey"))
+      val cands = batchBands.join(sb, Seq("band", "bkey"))
         .select(col("__id"), col("__hist")).distinct()
       val histSh = readStore("shingles").get
         .select(col("__id").as("__hist"), col("__sh").as("__sh_b"))
@@ -419,10 +424,7 @@ object Dedup {
         .join(shingled.select(col("__id"), col("__sh").as("__sh_a")),
           "__id")
         .join(histSh, "__hist")
-        .filter(size(array_union(col("__sh_a"), col("__sh_b"))) > 0 &&
-          size(array_intersect(col("__sh_a"), col("__sh_b")))
-            .cast("double") /
-            size(array_union(col("__sh_a"), col("__sh_b"))) >= threshold)
+        .filter(jaccardOf(col("__sh_a"), col("__sh_b")) >= threshold)
         .select(col("__id")).distinct()
     }.getOrElse(shingled.select(col("__id")).filter(lit(false)))
     val survivors = shingled.join(dupIds, Seq("__id"), "left_anti")
@@ -954,17 +956,13 @@ object Dedup {
   def incrementalSemanticDedup(batch: DataFrame, history: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       cell: Column): DataFrame = {
-    import graft.operators.Similarity.norm
-    val b = batch.select(col(idCol).as("__isd_b"),
-      col(vecCol).as("__isd_bv"), norm(col(vecCol)).as("__isd_bn"),
-      cell.as("__isd_cell"))
-    val h = history.select(col(vecCol).as("__isd_hv"),
-      norm(col(vecCol)).as("__isd_hn"), cell.as("__isd_cell"))
-    val simH = Similarity.guardedSim(col("__isd_bv"), col("__isd_hv"),
-      col("__isd_bn"), col("__isd_hn"))
-    val histVictims = b.join(h, "__isd_cell")
-      .filter(simH >= threshold)
-      .select(col("__isd_b").as(idCol))
+    import Similarity.{Candidates, corpusSide, exactPairsAbove, probeSide}
+    // history ids are never read: batch and history are not ordered
+    val histVictims = exactPairsAbove(
+        corpusSide(batch, col(idCol), col(vecCol), Seq(cell.as("__cell"))),
+        probeSide(history, lit(null), col(vecCol), Seq(cell.as("__cell"))),
+        Candidates.SameKey("__cell"), threshold, ordered = false)
+      .select(col("id_a").as(idCol))
       .distinct()
     semanticDedup(batch, idCol, vecCol, threshold, cell)
       .join(histVictims, Seq(idCol), "left_anti")
@@ -991,25 +989,16 @@ object Dedup {
     */
   def semanticDedup(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, cell: Column): DataFrame = {
-    import graft.operators.Similarity.norm
-    // the float→double widening is hoisted to ONE transform per ROW:
-    // left to the analyzer it becomes a Cast that materializes a
-    // fresh 64-element double array per PAIR inside the join
-    // condition — the dominant cost of this entry at sf1 (measured
-    // 11 s → ~3 s). Hoisted doubles also beat the float-native kernel
-    // path here (4.0 s): the per-pair loop reads contiguous doubles
-    // with no widening. Both forms are value-identical.
-    val dv = transform(col(vecCol), x => x.cast("double"))
-    val a = vecs.select(col(idCol).as("__sd_a"),
-      dv.as("__sd_av"), norm(col(vecCol)).as("__sd_an"),
-      cell.as("__sd_cell"))
-    val b = vecs.select(col(idCol).as("__sd_b"),
-      dv.as("__sd_bv"), norm(col(vecCol)).as("__sd_bn"),
-      cell.as("__sd_cell"))
-    // ONE scoring definition engine-wide: the zero-norm-guarded
-    // cosine every similarity operator routes through
-    val sim = Similarity.guardedSim(col("__sd_av"), col("__sd_bv"),
-      col("__sd_an"), col("__sd_bn"))
+    import Similarity.{Candidates, corpusSide, exactPairsAbove, probeSide}
+    // widen = true: the float→double widening is hoisted to ONE
+    // transform per ROW; left to the analyzer it becomes a Cast that
+    // materializes a fresh 64-element double array per PAIR inside the
+    // join condition — the dominant cost of this entry at sf1
+    // (measured 11 s → ~3 s)
+    val a = corpusSide(vecs, col(idCol), col(vecCol), Seq(cell.as("__cell")),
+      widen = true)
+    val b = probeSide(vecs, col(idCol), col(vecCol), Seq(cell.as("__cell")),
+      widen = true)
     // Parallelism guard (round 11): the cell join broadcasts the
     // (small) b side, so the pair-scoring stage inherits the A SIDE'S
     // partitioning — and a compact parquet corpus scans as one or two
@@ -1018,11 +1007,9 @@ object Dedup {
     // 78M-pair task). One cheap row-level shuffle of the probe side
     // (ids + vectors, linear in N) spreads the quadratic stage across
     // the cluster; output is row-identical.
-    val victims = a.repartition(col("__sd_cell"), col("__sd_a"))
-      .join(b, "__sd_cell")
-      .filter(col("__sd_a") < col("__sd_b"))
-      .filter(sim >= threshold)
-      .select(col("__sd_b").as(idCol))
+    val victims = exactPairsAbove(a.repartition(col("__cell"), col("id")), b,
+        Candidates.SameKey("__cell"), threshold, ordered = true)
+      .select(col("id_b").as(idCol))
       .distinct()
     vecs.join(victims, Seq(idCol), "left_anti")
   }
@@ -1045,24 +1032,21 @@ object Dedup {
   def semanticDedupCandidates(vecs: DataFrame, idCol: String,
       vecCol: String, threshold: Double,
       candidates: DataFrame): DataFrame = {
-    import graft.operators.Similarity.norm
-    // per-ROW widening hoist, same rationale as semanticDedup
-    val dv = transform(col(vecCol), x => x.cast("double"))
-    val a = vecs.select(col(s"`$idCol`").cast("long").as("__sc_a"),
-      dv.as("__sc_av"), norm(col(vecCol)).as("__sc_an"))
-    val b = vecs.select(col(s"`$idCol`").cast("long").as("__sc_b"),
-      dv.as("__sc_bv"), norm(col(vecCol)).as("__sc_bn"))
+    import Similarity.{Candidates, corpusSide, exactPairsAbove, probeSide}
+    val id = col(s"`$idCol`").cast("long")
     val und = candidates
       .select(col("i").cast("long").as("__i"), col("j").cast("long").as("__j"))
       .where(col("__i") =!= col("__j"))
-      .select(least(col("__i"), col("__j")).as("__sc_a"),
-        greatest(col("__i"), col("__j")).as("__sc_b"))
+      .select(least(col("__i"), col("__j")).as("id"),
+        greatest(col("__i"), col("__j")).as("probe_id"))
       .distinct()
-    val sim = Similarity.guardedSim(col("__sc_av"), col("__sc_bv"),
-      col("__sc_an"), col("__sc_bn"))
-    val victims = und.join(a, "__sc_a").join(b, "__sc_b")
-      .filter(sim >= threshold)
-      .select(col("__sc_b").cast(vecs.schema(idCol).dataType).as(idCol))
+    // per-ROW widening hoist, same rationale as semanticDedup; `und` is
+    // canonical (id < probe_id) already
+    val victims = exactPairsAbove(
+        corpusSide(vecs, id, col(vecCol), widen = true),
+        probeSide(vecs, id, col(vecCol), widen = true),
+        Candidates.Listed(und), threshold, ordered = false)
+      .select(col("id_b").cast(vecs.schema(idCol).dataType).as(idCol))
       .distinct()
     vecs.join(victims, Seq(idCol), "left_anti")
   }
@@ -1097,24 +1081,14 @@ object Dedup {
       idCol: String, vecCol: String, threshold: Double,
       cents: Array[(Long, Seq[Double])], nprobe: Int,
       maxPerCell: Int = Int.MaxValue): DataFrame = {
-    import graft.operators.Similarity
-    val binned0 = corpus.select(col(s"`$idCol`").cast("long").as("__sd_c"),
-      transform(col(s"`$vecCol`"), x => x.cast("double")).as("__sd_cv"),
-      Similarity.norm(col(s"`$vecCol`")).as("__sd_cn"),
-      Similarity.assignCell(col(s"`$vecCol`"), cents).as("__cell"),
-      round(Similarity.norm(col(s"`$vecCol`")) * 1e6).cast("long").as("__nq"))
-    val binned = Similarity.capCellLists(binned0, "__cell", "__nq",
-      "__sd_c", maxPerCell)
-    val probing = evalVecs.select(
-      transform(col(s"`$vecCol`"), x => x.cast("double")).as("__sd_ev"),
-      Similarity.norm(col(s"`$vecCol`")).as("__sd_en"),
-      explode(graft.plans.NativeMath.topCells(col(s"`$vecCol`"), cents,
-        nprobe)).as("__cell"))
-    val sim = Similarity.guardedSim(col("__sd_cv"), col("__sd_ev"),
-      col("__sd_cn"), col("__sd_en"))
-    val contaminated = binned.join(probing, "__cell")
-      .filter(sim >= threshold)
-      .select(col("__sd_c").cast(corpus.schema(idCol).dataType).as(idCol))
+    import Similarity.{Candidates, corpusSide, exactPairsAbove, probeSide}
+    val vec = col(s"`$vecCol`")
+    // eval ids are never read: corpus and eval rows are not ordered
+    val contaminated = exactPairsAbove(
+        corpusSide(corpus, col(s"`$idCol`").cast("long"), vec, widen = true),
+        probeSide(evalVecs, lit(null), vec, widen = true),
+        Candidates.Ivf(cents, nprobe, maxPerCell), threshold, ordered = false)
+      .select(col("id_a").cast(corpus.schema(idCol).dataType).as(idCol))
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
@@ -1736,18 +1710,11 @@ object Dedup {
   def buildNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
     import graft.functions.text
     val sh = text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)
-    val keys = bindOnce(
-      graft.plans.NativeHashes.minHashSignature64(col("idx_sh"), numHashes),
-      sig => lshBandKeys(sig, bands, r))
-    docs
-      .select(col(s"`$idCol`").cast("long").as("idx_id"), sh.as("idx_sh"))
-      .filter(size(col("idx_sh")) > 0)
-      .select(col("idx_id"), col("idx_sh"),
-        posexplode(keys).as(Seq("band", "bkey")))
+    bandRows(
+      docs.select(col(s"`$idCol`").cast("long").as("idx_id"), sh.as("idx_sh")),
+      "idx_sh", numHashes, bands, col("idx_id"), col("idx_sh"))
   }
 
   /** Per-batch near-dup intake gate — the STREAMING half of the
@@ -1770,23 +1737,14 @@ object Dedup {
   def nearDupGateBatch(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    val r = numHashes / bands
-    require(bands * r == numHashes, "bands must divide numHashes")
     import graft.functions.text
     val sh = text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)
-    val keys = bindOnce(
-      graft.plans.NativeHashes.minHashSignature64(col("__g_sh"), numHashes),
-      sig => lshBandKeys(sig, bands, r))
-    val probes = batch
-      .select(col(s"`$idCol`").cast("long").as("__g_id"), sh.as("__g_sh"))
-      .filter(size(col("__g_sh")) > 0)
-      .select(col("__g_id"), col("__g_sh"),
-        posexplode(keys).as(Seq("band", "bkey")))
-    val inter = size(array_intersect(col("__g_sh"), col("idx_sh")))
-    val uni = size(col("__g_sh")) + size(col("idx_sh")) - inter
+    val probes = bandRows(
+      batch.select(col(s"`$idCol`").cast("long").as("__g_id"), sh.as("__g_sh")),
+      "__g_sh", numHashes, bands, col("__g_id"), col("__g_sh"))
     val kills = probes.join(index, Seq("band", "bkey"))
       .filter(col("idx_id") =!= col("__g_id"))
-      .filter(inter.cast("double") / uni >= threshold)
+      .filter(jaccardOf(col("__g_sh"), col("idx_sh")) >= threshold)
       .select(col("__g_id")).distinct()
     batch.join(kills,
       batch(s"`$idCol`").cast("long") === kills("__g_id"),

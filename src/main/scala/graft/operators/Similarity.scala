@@ -4,18 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over embedding columns (`array<float>`).
+/** Similarity search over embedding columns (`array<float>`), built as
+  * candidates → one exact verify.
   *
-  * Two paths, as a 100 TB pipeline needs both:
-  *  - exact brute force (broadcast the probe set, scan the corpus once,
-  *    top-k per probe) — the baseline and the verification oracle;
-  *  - LSH-bucketed ANN (random-hyperplane sign buckets + multiprobe) —
-  *    the scale path: candidates come from a bucket equi-join, so the
-  *    corpus is scanned and shuffled once by bucket key instead of
-  *    being crossed with every probe.
+  * Every search and near-dup operator here, and the semantic ones in
+  * [[Dedup]], generates its candidate pairs its own way: all pairs
+  * against a broadcast probe set, a random-hyperplane LSH bucket with
+  * multiprobe, an IVF cell (optionally list-capped), or a shortlist
+  * ranked on int8 codes, PQ-ADC scores or sign-bit Hamming distance.
+  * The candidates then go through ONE exact-verify stage
+  * ([[exactTopK]], [[exactPairsAbove]]): the zero-norm-guarded cosine
+  * over per-row norms, cut to a (sim desc, id asc) top-k or to the
+  * pairs at or above a threshold. The candidate strategy decides recall
+  * and cost; the answer over the candidates is always exact.
   *
-  * All math is Column combinators over `zip_with`/`aggregate` (codegen,
-  * no UDFs), accumulating in double.
+  * The per-row and per-pair math runs in codegen'd native kernels
+  * ([[graft.plans.NativeMath]]: `DotProduct64Expr`, `ArgMaxCosineExpr`,
+  * `TopCellsExpr`, PQ-ADC, Hamming), accumulating in double; the
+  * `...Column` combinators kept here are their value-identical
+  * references.
   */
 object Similarity {
 
@@ -50,6 +57,160 @@ object Similarity {
   private[graft] def guardedSim(v: Column, p: Column, vn: Column, pn: Column): Column =
     when(vn > 0 && pn > 0, dot(v, p) / (vn * pn)).otherwise(lit(0.0))
 
+  /** Exact top-k rows per key by (sim desc, id asc); any column besides
+    * (key, id, sim) rides along. Two-stage by default: stage 1 ranks
+    * within (key, input-partition) — the shuffle key has cardinality
+    * keys × partitions, so every core participates and each sort is a
+    * partition-sized slice; stage 2 ranks the ≤ k×partitions survivors
+    * per key, which is tiny. `twoStage = false` ranks with the stage-2
+    * window alone, for input already bounded per key.
+    */
+  private[graft] def topKPerKey(scored: DataFrame, keyCol: String,
+      k: Int, twoStage: Boolean = true): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val survivors =
+      if (!twoStage) scored
+      else scored
+        .withColumn("__lr", row_number().over(Window
+          .partitionBy(col(keyCol), spark_partition_id())
+          .orderBy(col("sim").desc, col("id").asc)))
+        .filter(col("__lr") <= k)
+        .drop("__lr")
+    val global = Window.partitionBy(col(keyCol))
+      .orderBy(col("sim").desc, col("id").asc)
+    val extra = scored.columns.toSeq.diff(Seq(keyCol, "id", "sim")).map(col)
+    survivors.withColumn("rank", row_number().over(global))
+      .filter(col("rank") <= k)
+      .select(Seq(col(keyCol), col("rank").cast("long").as("rank"),
+        col("id"), col("sim")) ++ extra: _*)
+  }
+
+  // -------------------------------------------------------------------
+  // Exact verify: the one stage every candidate generator feeds
+
+  /** Projects `df` to one side of the exact-verify stage: the id, the
+    * vector and its norm (once per row, never per pair), plus the
+    * `keys` the candidates meet on. `widen` also hoists the float→double
+    * widening to once per row. That pays where each row scores many
+    * pairs inside one stage ([[Dedup.semanticDedup]] at sf1: 11 s →
+    * ~3 s, against 4.0 s for the float-native kernel); where the side
+    * is shuffled it only doubles the payload. Both forms are
+    * value-identical.
+    */
+  private def side(df: DataFrame, names: (String, String, String),
+      id: Column, vec: Column, keys: Seq[Column],
+      widen: Boolean): DataFrame = {
+    val (idName, vecName, normName) = names
+    val v = if (widen) transform(vec, x => x.cast("double")) else vec
+    df.select(Seq(id.as(idName), v.as(vecName), norm(vec).as(normName)) ++
+      keys: _*)
+  }
+
+  /** The corpus side `(id, __v, __vn, keys…)`. It is also the stored
+    * [[writeAnnIndex]] layout, so an index reads back as a corpus side.
+    */
+  private[graft] def corpusSide(df: DataFrame, id: Column, vec: Column,
+      keys: Seq[Column] = Nil, widen: Boolean = false): DataFrame =
+    side(df, ("id", "__v", "__vn"), id, vec, keys, widen)
+
+  /** The probe side `(probe_id, __p, __pn, keys…)`. */
+  private[graft] def probeSide(df: DataFrame, id: Column, vec: Column,
+      keys: Seq[Column] = Nil, widen: Boolean = false): DataFrame =
+    side(df, ("probe_id", "__p", "__pn"), id, vec, keys, widen)
+
+  /** How the candidate pairs of the exact-verify stage form. The
+    * strategy is a value; scoring and the top-k or threshold cut are
+    * shared.
+    */
+  private[graft] sealed trait Candidates
+
+  private[graft] object Candidates {
+    /** Every (corpus, probe) pair. */
+    case object All extends Candidates
+
+    /** Rows sharing the `key` column both sides carry: an LSH bucket or
+      * a semantic-dedup cell.
+      */
+    final case class SameKey(key: String) extends Candidates
+
+    /** IVF cells: corpus rows are binned into their nearest-centroid
+      * cell ([[assignCell]]) and capped at `maxPerCell` rows per cell
+      * ([[capCellLists]]); each probe explodes its `nprobe` best cells
+      * ([[probeCells]]); the two meet through one cell equi-join.
+      */
+    final case class Ivf(cents: Array[(Long, Seq[Double])], nprobe: Int,
+        maxPerCell: Int = Int.MaxValue) extends Candidates {
+      require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+      require(maxPerCell >= 1, s"maxPerCell must be >= 1, got $maxPerCell")
+    }
+
+    /** Exactly the listed `(probe_id, id)` pairs. For [[exactTopK]] they
+      * are a shortlist already bounded per probe, and their other
+      * columns ride to the output.
+      */
+    final case class Listed(pairs: DataFrame) extends Candidates
+  }
+
+  /** Both sides' columns for every candidate pair of `cands`. */
+  private def candidatePairs(corpus: DataFrame, probes: DataFrame,
+      cands: Candidates): DataFrame = cands match {
+    case Candidates.All => corpus.crossJoin(probes)
+    case Candidates.SameKey(key) => corpus.join(probes, key)
+    case Candidates.Ivf(cents, nprobe, maxPerCell) =>
+      val binned = corpus
+        .withColumn("__cell", assignCell(col("__v"), cents))
+        // the cap's ordering key: micro-quantized norm (engine-exact —
+        // sqrt IS correctly rounded, and the round(·1e6) kills any
+        // borderline-tie cross-engine drift), ties by id
+        .withColumn("__nq", round(col("__vn") * 1e6).cast("long"))
+      capCellLists(binned, "__cell", "__nq", "id", maxPerCell)
+        .join(probes.withColumn("__cell",
+          explode(probeCells(col("__p"), cents, nprobe))), "__cell")
+    case Candidates.Listed(pairs) =>
+      pairs.join(corpus, "id").join(probes, "probe_id")
+  }
+
+  /** The verified score of a candidate pair: [[guardedSim]] over the
+    * two sides' vectors and per-row norms.
+    */
+  private def verifiedSim: Column =
+    guardedSim(col("__v"), col("__p"), col("__vn"), col("__pn"))
+
+  /** Exact top-k corpus rows per probe among `cands`, the probe itself
+    * excluded: (probe_id, rank, id, sim), plus the extra columns of a
+    * `Listed` shortlist. Generated candidates rank two-stage
+    * ([[topKPerKey]]); a `Listed` shortlist is already bounded per
+    * probe, so one window ranks it.
+    */
+  private[graft] def exactTopK(corpus: DataFrame, probes: DataFrame,
+      cands: Candidates, k: Int): DataFrame = {
+    val extra = cands match {
+      case Candidates.Listed(pairs) =>
+        pairs.columns.toSeq.diff(Seq("probe_id", "id")).map(col)
+      case _ => Nil
+    }
+    val scored = candidatePairs(corpus, probes, cands)
+      .filter(col("id") =!= col("probe_id"))
+      .select(Seq(col("probe_id"), col("id"), verifiedSim.as("sim")) ++
+        extra: _*)
+    topKPerKey(scored, "probe_id", k,
+      twoStage = !cands.isInstanceOf[Candidates.Listed])
+  }
+
+  /** Exact candidate pairs at or above `threshold`: (id_a, id_b, sim),
+    * id_a from the corpus side. `ordered` keeps only id_a < id_b (each
+    * pair of a self-join once); it filters before the score does.
+    */
+  private[graft] def exactPairsAbove(corpus: DataFrame, probes: DataFrame,
+      cands: Candidates, threshold: Double,
+      ordered: Boolean): DataFrame = {
+    val met = candidatePairs(corpus, probes, cands)
+    (if (ordered) met.filter(col("id") < col("probe_id")) else met)
+      .select(col("id").as("id_a"), col("probe_id").as("id_b"),
+        verifiedSim.as("sim"))
+      .filter(col("sim") >= threshold)
+  }
+
   /** Exact top-k neighbors per probe: broadcast the (small) probe set
     * against the corpus, compute cosine once per (vector, probe) with
     * pre-computed norms, rank per probe. One corpus scan total.
@@ -65,41 +226,10 @@ object Similarity {
     * Output: (probe_id, rank, id, sim).
     */
   def bruteForceTopK(vecs: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"))
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__p"),
-      norm(col(vecCol)).as("__pn"))
-    val scored = v.crossJoin(broadcast(p))
-      .filter(col("id") =!= col("probe_id"))
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    topKPerKey(scored, "probe_id", k)
-  }
-
-  /** Exact top-k rows per key by (sim desc, id asc): stage 1 ranks
-    * within (key, input-partition) — the shuffle key has cardinality
-    * keys × partitions, so every core participates and each sort is a
-    * partition-sized slice; stage 2 ranks the ≤ k×partitions survivors
-    * per key, which is tiny.
-    */
-  private[graft] def topKPerKey(scored: DataFrame, keyCol: String,
-      k: Int): DataFrame = {
-    val local = Window
-      .partitionBy(col(keyCol), spark_partition_id())
-      .orderBy(col("sim").desc, col("id").asc)
-    val survivors = scored
-      .withColumn("__lr", row_number().over(local))
-      .filter(col("__lr") <= k)
-      .drop("__lr")
-    val global = Window.partitionBy(col(keyCol))
-      .orderBy(col("sim").desc, col("id").asc)
-    survivors.withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-      .select(col(keyCol), col("rank").cast("long").as("rank"),
-        col("id"), col("sim"))
-  }
+      vecCol: String, k: Int): DataFrame =
+    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+      broadcast(probeSide(probes, col(idCol), col(vecCol))),
+      Candidates.All, k)
 
   /** Matryoshka truncation recall curve (X200, round 13): for each
     * prefix length d in `dims`, the exact top-k under the FIRST d
@@ -173,21 +303,11 @@ object Similarity {
         (-col("sim")).cast("long").as("hamming"))
     // exact re-rank over the shortlist only: vectors join back by id
     // (shortlist-bounded), probes broadcast
-    val a = vecs.select(col(s"`$idCol`").as("id"),
-      transform(col(s"`$vecCol`"), x => x.cast("double")).as("__v"),
-      norm(col(s"`$vecCol`")).as("__vn"))
-    val pb = probes.select(col(s"`$idCol`").as("probe_id"),
-      transform(col(s"`$vecCol`"), x => x.cast("double")).as("__p"),
-      norm(col(s"`$vecCol`")).as("__pn"))
-    val rer = short.join(a, "id").join(broadcast(pb), "probe_id")
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn")))
-    rer.withColumn("rank", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"),
-        col("id"), col("sim"), col("hamming"))
+    exactTopK(
+      corpusSide(vecs, col(s"`$idCol`"), col(s"`$vecCol`"), widen = true),
+      broadcast(probeSide(probes, col(s"`$idCol`"), col(s"`$vecCol`"),
+        widen = true)),
+      Candidates.Listed(short), k)
   }
 
   /** Per-group embedding centroid drift (X206, round 13) — the
@@ -266,34 +386,15 @@ object Similarity {
     */
   def quantizedTopK(vecs: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int, margin: Int = 4): DataFrame = {
-    // norms precomputed per ROW, not per pair — the convention every
-    // scorer here follows (a post-crossJoin norm would recompute the
-    // 64-element dot once per (vector, probe) pair)
-    val vq = vecs.select(col(idCol).as("id"),
-        quantize8(col(vecCol)).cast("array<double>").as("__qv"))
-      .withColumn("__qvn", norm(col("__qv")))
-    val pq = probes.select(col(idCol).as("probe_id"),
-        quantize8(col(vecCol)).cast("array<double>").as("__qp"))
-      .withColumn("__qpn", norm(col("__qp")))
-    val pool = topKPerKey(
-      vq.crossJoin(broadcast(pq))
-        .filter(col("id") =!= col("probe_id"))
-        .withColumn("sim", guardedSim(col("__qv"), col("__qp"),
-          col("__qvn"), col("__qpn")))
-        .select(col("probe_id"), col("id"), col("sim")),
-      "probe_id", k * margin)
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"))
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__p"),
-      norm(col(vecCol)).as("__pn"))
-    topKPerKey(
-      pool.select(col("probe_id"), col("id"))
-        .join(v, "id")
-        .join(broadcast(p), "probe_id")
-        .withColumn("sim", guardedSim(col("__v"), col("__p"),
-          col("__vn"), col("__pn")))
-        .select(col("probe_id"), col("id"), col("sim")),
-      "probe_id", k)
+    // codes in their own projection: quantized once per row, then normed
+    def codes(df: DataFrame): DataFrame = df.select(col(idCol),
+      quantize8(col(vecCol)).cast("array<double>").as(vecCol))
+    val pool = exactTopK(corpusSide(codes(vecs), col(idCol), col(vecCol)),
+      broadcast(probeSide(codes(probes), col(idCol), col(vecCol))),
+      Candidates.All, k * margin)
+    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+      broadcast(probeSide(probes, col(idCol), col(vecCol))),
+      Candidates.Listed(pool.select(col("probe_id"), col("id"))), k)
   }
 
   /** All pairs with cosine ≥ threshold — embedding-level near-dedup.
@@ -303,17 +404,10 @@ object Similarity {
     * verify pass instead.
     */
   def cosinePairsAbove(vecs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val a = vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va"),
-      norm(col(vecCol)).as("__na"))
-    val b = vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
-      norm(col(vecCol)).as("__nb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .withColumn("sim", guardedSim(col("__va"), col("__vb"),
-        col("__na"), col("__nb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
-  }
+      threshold: Double): DataFrame =
+    exactPairsAbove(corpusSide(vecs, col(idCol), col(vecCol)),
+      probeSide(vecs, col(idCol), col(vecCol)), Candidates.All, threshold,
+      ordered = true)
 
   // -------------------------------------------------------------------
   // LSH (random hyperplane) ANN
@@ -349,20 +443,28 @@ object Similarity {
     array((bucket +: (0 until nBits).map(b =>
       bucket.bitwiseXOR(lit(1L << b)))): _*)
 
-  /** The multiprobe side of a bucket join: (id, vector, norm) exploded
+  /** The multiprobe side of a bucket join: a [[probeSide]] exploded
     * to one row per probed bucket — own bucket + every Hamming-1 flip,
     * the bucket id bound ONCE per row (the nBits+1 entries would
     * otherwise each re-inline the hyperplane projections). All three
     * bucket-join operators build their probing side here.
     */
   private def multiprobeSide(df: DataFrame, idCol: String, vecCol: String,
-      nBits: Int, idOut: String): DataFrame = {
+      nBits: Int): DataFrame = {
     val buckets = element_at(
       transform(array(annBucket(col(vecCol), nBits)),
         b => probeBuckets(b, nBits)), 1)
-    df.select(col(idCol).as(idOut), col(vecCol).as("__p"),
-      norm(col(vecCol)).as("__pn"), explode(buckets).as("__bucket"))
+    probeSide(df, col(idCol), col(vecCol),
+      keys = Seq(explode(buckets).as("__bucket")))
   }
+
+  /** The corpus side of a bucket join: a [[corpusSide]] keyed by its
+    * own [[annBucket]].
+    */
+  private def bucketedSide(df: DataFrame, idCol: String, vecCol: String,
+      nBits: Int): DataFrame =
+    corpusSide(df, col(idCol), col(vecCol),
+      keys = Seq(annBucket(col(vecCol), nBits).as("__bucket")))
 
   /** Embedding near-dup at scale: all pairs above a cosine threshold
     * whose buckets are equal or 1 bit apart — candidates come from a
@@ -375,21 +477,13 @@ object Similarity {
     * [[cosinePairsAbove]] on planted clusters.
     */
   def cosinePairsAboveLsh(vecs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nBits: Int = 4): DataFrame = {
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"),
-      annBucket(col(vecCol), nBits).as("__bucket"))
-    val probing = multiprobeSide(vecs, idCol, vecCol, nBits, "id_p")
-    v.join(probing, "__bucket")
-      .filter(col("id") < col("id_p"))
-      .select(col("id").as("id_a"), col("id_p").as("id_b"),
-        guardedSim(col("__v"), col("__p"), col("__vn"), col("__pn"))
-          .as("sim"))
-      .filter(col("sim") >= threshold)
-    // no dedup needed: only the id < id_p orientation survives, the
+      threshold: Double, nBits: Int = 4): DataFrame =
+    // no dedup needed: only the id_a < id_b orientation survives, the
     // probing side's 5 bucket values are distinct, and the other side
     // sits in exactly one bucket — each pair matches at most once
-  }
+    exactPairsAbove(bucketedSide(vecs, idCol, vecCol, nBits),
+      multiprobeSide(vecs, idCol, vecCol, nBits),
+      Candidates.SameKey("__bucket"), threshold, ordered = true)
 
   // -------------------------------------------------------------------
   // IVF (inverted-file) ANN
@@ -502,22 +596,10 @@ object Similarity {
     */
   def ivfTopK(vecs: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: Array[(Long, Seq[Double])],
-      nprobe: Int): DataFrame = {
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"),
-      assignCell(col(vecCol), cents).as("__cell"))
-    // probe side: rank ALL centroids per probe inline, keep the nprobe
-    // best cells (the centroid table is a literal — no join, no shuffle)
-    val p0 = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__p"),
-      norm(col(vecCol)).as("__pn"),
-      explode(probeCells(col(vecCol), cents, nprobe)).as("__cell"))
-    val scored = v.join(p0, "__cell")
-      .filter(col("id") =!= col("probe_id"))
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    topKPerKey(scored, "probe_id", k)
-  }
+      nprobe: Int): DataFrame =
+    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+      probeSide(probes, col(idCol), col(vecCol)),
+      Candidates.Ivf(cents, nprobe), k)
 
   /** The `nprobe` best cells for a probe vector, ranked by centroid
     * cosine (desc) with centroid order as tie-break — the native
@@ -565,9 +647,7 @@ object Similarity {
     */
   def writeAnnIndex(vecs: DataFrame, idCol: String, vecCol: String,
       dir: String, nBits: Int, mode: String = "overwrite"): Unit =
-    vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-        norm(col(vecCol)).as("__vn"),
-        annBucket(col(vecCol), nBits).as("__bucket"))
+    bucketedSide(vecs, idCol, vecCol, nBits)
       .repartitionByRange(col("__bucket"), col("id"))
       .write.mode(mode).partitionBy("__bucket").parquet(dir)
 
@@ -580,16 +660,10 @@ object Similarity {
     */
   def annTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, idCol: String, vecCol: String, k: Int,
-      nBits: Int = 4): DataFrame = {
-    val v = spark.read.parquet(dir)
-    val p = multiprobeSide(probes, idCol, vecCol, nBits, "probe_id")
-    val scored = v.join(broadcast(p), "__bucket")
-      .filter(col("id") =!= col("probe_id"))
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    topKPerKey(scored, "probe_id", k)
-  }
+      nBits: Int = 4): DataFrame =
+    exactTopK(spark.read.parquet(dir),
+      broadcast(multiprobeSide(probes, idCol, vecCol, nBits)),
+      Candidates.SameKey("__bucket"), k)
 
   /** ANN top-k per probe: corpus bucketed once by [[annBucket]]; each
     * probe joins only its multiprobe bucket list (bucket equi-join →
@@ -598,18 +672,10 @@ object Similarity {
     * against [[bruteForceTopK]] at test scale.
     */
   def annTopK(vecs: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, k: Int, nBits: Int = 4): DataFrame = {
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"),
-      annBucket(col(vecCol), nBits).as("__bucket"))
-    val p = multiprobeSide(probes, idCol, vecCol, nBits, "probe_id")
-    val scored = v.join(p, "__bucket")
-      .filter(col("id") =!= col("probe_id"))
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    topKPerKey(scored, "probe_id", k)
-  }
+      vecCol: String, k: Int, nBits: Int = 4): DataFrame =
+    exactTopK(bucketedSide(vecs, idCol, vecCol, nBits),
+      multiprobeSide(probes, idCol, vecCol, nBits),
+      Candidates.SameKey("__bucket"), k)
 
   /** Domain-similarity map: the pairwise cosine between per-GROUP
     * embedding centroids — which data domains/sources/clusters are
@@ -846,8 +912,7 @@ object Similarity {
         aggregate(zip_with(subSlice(col(vecCol), s, sub), c,
           (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
     }: _*)
-    val p2 = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__p"),
-      lut.as("__lut"))
+    val p2 = probes.select(col(idCol).as("probe_id"), lut.as("__lut"))
     val scored = codes.crossJoin(broadcast(p2))
       .filter(col("id") =!= col("probe_id"))
       // ADC fold as the codegen'd kernel (index-ordered, bit-identical
@@ -857,15 +922,9 @@ object Similarity {
       .select(col("probe_id"), col("id"), col("sim"))
     val short = topKPerKey(scored, "probe_id", shortlist)
       .select(col("probe_id"), col("id"))
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("__v"),
-      norm(col(vecCol)).as("__vn"))
-    val exact = short.join(v, "id")
-      .join(broadcast(p2.select(col("probe_id"), col("__p"),
-        norm(col("__p")).as("__pn2"))), "probe_id")
-      .withColumn("sim", guardedSim(col("__v"), col("__p"),
-        col("__vn"), col("__pn2")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    topKPerKey(exact, "probe_id", k)
+    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+      broadcast(probeSide(probes, col(idCol), col(vecCol))),
+      Candidates.Listed(short), k)
   }
 
   /** Matryoshka prefix-dimension fidelity — for each candidate
@@ -1004,20 +1063,6 @@ object Similarity {
         col("__fwd").getField("rk").as("rk_ij"), col("rk_ji"))
   }
 
-  /** IVF candidate pairs for [[mutualKnnGraph]] (round 11): every
-    * vector probes its `nprobe` best centroid cells (inline literal
-    * ranking, [[probeCells]] — no join, no shuffle) and meets the
-    * vectors BINNED into those cells ([[assignCell]]) through one cell
-    * equi-join — the `ivfTopK` structure emitting the pair list
-    * instead of ranking it. Per-probe candidate volume is
-    * ≈ nprobe/#cells of the corpus, so with #cells ≈ √N the pair
-    * count grows as N·√N·nprobe/N = √N·nprobe per probe instead of
-    * N — the 100 TB swap-in for the exact all-pairs product.
-    * Asymmetry (j probing doesn't guarantee i's cell is probed) is
-    * repaired by the caller's symmetrization; recall vs the exact
-    * graph is probabilistic by design and is contract-gated at the
-    * call site (the q54 pattern).
-    */
   /** Per-cell IVF list-length cap (round 12, verdict ask #8; hoisted
     * round 13, verdict ask #7 — ONE implementation for every call
     * site): keep at most `maxPerCell` rows per `cellCol`, ordered by
@@ -1032,7 +1077,7 @@ object Similarity {
     * contract-gated at the call sites (Round12Spec kNN contract,
     * Round13Spec planted-recall).
     */
-  private[graft] def capCellLists(df: DataFrame, cellCol: String,
+  private def capCellLists(df: DataFrame, cellCol: String,
       normQCol: String, idCol: String, maxPerCell: Int): DataFrame =
     if (maxPerCell == Int.MaxValue) df.drop(normQCol)
     else df
@@ -1042,21 +1087,29 @@ object Similarity {
       .where(col("__cap_r") <= maxPerCell)
       .drop("__cap_r", normQCol)
 
+  /** IVF candidate pairs for [[mutualKnnGraph]] (round 11): every
+    * vector probes its `nprobe` best centroid cells (inline literal
+    * ranking, [[probeCells]] — no join, no shuffle) and meets the
+    * vectors BINNED into those cells ([[assignCell]]) through one cell
+    * equi-join — the `ivfTopK` structure emitting the pair list
+    * instead of ranking it. Per-probe candidate volume is
+    * ≈ nprobe/#cells of the corpus, so with #cells ≈ √N the pair
+    * count grows as N·√N·nprobe/N = √N·nprobe per probe instead of
+    * N — the 100 TB swap-in for the exact all-pairs product.
+    * Asymmetry (j probing doesn't guarantee i's cell is probed) is
+    * repaired by the caller's symmetrization; recall vs the exact
+    * graph is probabilistic by design and is contract-gated at the
+    * call site (the q54 pattern).
+    */
   def knnCandidatesIvf(vecs: DataFrame, idCol: String, embCol: String,
       cents: Array[(Long, Seq[Double])], nprobe: Int,
       maxPerCell: Int = Int.MaxValue): DataFrame = {
-    val binned0 = vecs.select(col(s"`$idCol`").cast("long").as("j"),
-      assignCell(col(s"`$embCol`"), cents).as("__cell"),
-      // the cap's ordering key: micro-quantized norm (engine-exact —
-      // sqrt IS correctly rounded, and the round(·1e6) kills any
-      // borderline-tie cross-engine drift), ties by id
-      round(norm(col(s"`$embCol`")) * 1e6).cast("long").as("__nq"))
-    val binned = capCellLists(binned0, "__cell", "__nq", "j", maxPerCell)
-    val probing = vecs.select(col(s"`$idCol`").cast("long").as("i"),
-      explode(probeCells(col(s"`$embCol`"), cents, nprobe)).as("__cell"))
-    probing.join(binned, "__cell")
-      .where(col("i") =!= col("j"))
-      .select(col("i"), col("j"))
+    val id = col(s"`$idCol`").cast("long")
+    val emb = col(s"`$embCol`")
+    candidatePairs(corpusSide(vecs, id, emb), probeSide(vecs, id, emb),
+        Candidates.Ivf(cents, nprobe, maxPerCell))
+      .where(col("probe_id") =!= col("id"))
+      .select(col("probe_id").as("i"), col("id").as("j"))
   }
 
   /** Pairwise BLEU-2 with a RATIONAL brevity penalty (X158, round

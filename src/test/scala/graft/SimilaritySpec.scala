@@ -315,4 +315,133 @@ class SimilaritySpec extends SparkSpec {
       .select($"probe_id", $"id").as[(Long, Long)].collect().toSet
     assert(pq == exact, s"PQ missed ${(exact -- pq).size} of ${exact.size}")
   }
+
+  // ---- edge inputs through the shared exact-verify stage ----
+
+  /** A 4-dim corpus with a planted zero-norm vector (id 6), probed by a
+    * vector outside it (id 100).
+    */
+  private lazy val zeroPlanted = Seq(
+      (1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0.9f, 0.1f, 0f, 0f)),
+      (3L, Seq(0f, 1f, 0f, 0f)), (4L, Seq(0f, 0f, 1f, 0.2f)),
+      (5L, Seq(-1f, 0f, 0f, 1f)), (6L, Seq(0f, 0f, 0f, 0f)))
+    .toDF("vec_id", "embedding")
+  private lazy val outsideProbe =
+    Seq((100L, Seq(0.5f, 0.4f, 0.3f, 0.2f))).toDF("vec_id", "embedding")
+
+  /** Every top-k operator over `zeroPlanted` as (probes, k) => result.
+    * Shortlists cover the whole corpus and every bucket or cell is
+    * probed, so each operator ranks every corpus row.
+    */
+  private lazy val topKOperators
+      : Seq[(String, (org.apache.spark.sql.DataFrame, Int) =>
+        org.apache.spark.sql.DataFrame)] = {
+    val corpus = zeroPlanted
+    val n = 6
+    val cents: Array[(Long, Seq[Double])] =
+      Array((0L, Seq(1.0, 0.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0, 0.0)))
+    val books = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
+      m = 2, k = 2, iters = 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_edge")
+      .toString
+    Similarity.writeAnnIndex(corpus, "vec_id", "embedding", dir, nBits = 1)
+    Seq(
+      ("bruteForceTopK", (p, k) => Similarity.bruteForceTopK(corpus, p,
+        "vec_id", "embedding", k)),
+      ("quantizedTopK", (p, k) => Similarity.quantizedTopK(corpus, p,
+        "vec_id", "embedding", k)),
+      ("ivfTopK", (p, k) => Similarity.ivfTopK(corpus, p, "vec_id",
+        "embedding", k, cents, nprobe = 2)),
+      ("annTopK", (p, k) => Similarity.annTopK(corpus, p, "vec_id",
+        "embedding", k, nBits = 1)),
+      ("annTopKFromIndex", (p, k) => Similarity.annTopKFromIndex(spark,
+        dir, p, "vec_id", "embedding", k, nBits = 1)),
+      ("pqTopK", (p, k) => Similarity.pqTopK(corpus, p, "vec_id",
+        "embedding", k, books, shortlist = n)),
+      ("binaryHammingTopK", (p, k) => Similarity.binaryHammingTopK(corpus,
+        p, "vec_id", "embedding", k, shortlist = n)))
+  }
+
+  test("every top-k operator returns 0 rows and the (probe_id, rank, id, " +
+      "sim) schema for 0 probes") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    for ((name, op) <- topKOperators) {
+      val got = op(outsideProbe.filter(lit(false)), 6)
+      assert(got.columns.take(4).toSeq == Seq("probe_id", "rank", "id", "sim"),
+        s"$name: ${got.columns.mkString(",")}")
+      assert(got.schema("rank").dataType == LongType, name)
+      assert(got.schema("sim").dataType == DoubleType, name)
+      assert(got.count() == 0, name)
+    }
+  }
+
+  test("a zero-norm corpus vector scores exactly 0.0 (not NaN) through " +
+      "every top-k operator") {
+    for ((name, op) <- topKOperators) {
+      val got = op(outsideProbe, 6)
+        .select($"id", $"sim").as[(Long, Double)].collect().toMap
+      assert(got.keySet == (1L to 6L).toSet, s"$name ranked ${got.keySet}")
+      assert(got(6L) == 0.0 && !got(6L).isNaN, s"$name: ${got(6L)}")
+    }
+  }
+
+  test("a zero-norm vector scores exactly 0.0 (not NaN) through every " +
+      "threshold path") {
+    import graft.operators.Dedup
+    val pair = zeroPlanted.filter($"vec_id".isin(1L, 6L))
+    // the pair operators report the score itself
+    for (pairs <- Seq(
+        Similarity.cosinePairsAbove(pair, "vec_id", "embedding", -1.0),
+        Similarity.cosinePairsAboveLsh(pair, "vec_id", "embedding", -1.0,
+          nBits = 1)))
+      assert(pairs.select($"id_a", $"id_b", $"sim")
+        .as[(Long, Long, Double)].collect().toSeq == Seq((1L, 6L, 0.0)))
+    // the dedup operators only keep or drop: a score of exactly 0.0
+    // clears threshold 0 and fails the smallest positive one (NaN would
+    // clear both, as Spark orders NaN above every number)
+    val one = pair.filter($"vec_id" === 1L)
+    val zero = pair.filter($"vec_id" === 6L)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select($"vec_id").as[Long].collect().toSet
+    def survivors(t: Double): Seq[Set[Long]] = Seq(
+      ids(Dedup.semanticDedup(pair, "vec_id", "embedding", t, lit(0L))),
+      ids(Dedup.semanticDedupCandidates(pair, "vec_id", "embedding", t,
+        Seq((1L, 6L)).toDF("i", "j"))),
+      ids(Dedup.incrementalSemanticDedup(zero, one, "vec_id", "embedding",
+        t, lit(0L))),
+      ids(Dedup.semanticDecontaminate(zero, one, "vec_id", "embedding", t,
+        Array((0L, Seq(1.0, 0.0, 0.0, 0.0))), nprobe = 1)))
+    assert(survivors(0.0) == Seq(Set(1L), Set(1L), Set(), Set()))
+    assert(survivors(Double.MinPositiveValue) ==
+      Seq(Set(1L, 6L), Set(1L, 6L), Set(6L), Set(6L)))
+  }
+
+  test("the shared verify stages reject k < 1, nprobe < 1 and " +
+      "maxPerCell < 1") {
+    import graft.operators.Dedup
+    def rejects(msg: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    for ((name, op) <- topKOperators; k <- Seq(0, -1))
+      withClue(s"$name k=$k: ")(rejects("k must be >= 1")(op(outsideProbe, k)))
+    val cents: Array[(Long, Seq[Double])] =
+      Array((0L, Seq(1.0, 0.0, 0.0, 0.0)))
+    for (nprobe <- Seq(0, -1)) {
+      rejects("nprobe must be >= 1")(Similarity.ivfTopK(zeroPlanted,
+        outsideProbe, "vec_id", "embedding", 3, cents, nprobe))
+      rejects("nprobe must be >= 1")(Similarity.knnCandidatesIvf(
+        zeroPlanted, "vec_id", "embedding", cents, nprobe))
+      rejects("nprobe must be >= 1")(Dedup.semanticDecontaminate(
+        zeroPlanted, outsideProbe, "vec_id", "embedding", 0.9, cents,
+        nprobe))
+    }
+    for (maxPerCell <- Seq(0, -1)) {
+      rejects("maxPerCell must be >= 1")(Similarity.knnCandidatesIvf(
+        zeroPlanted, "vec_id", "embedding", cents, 1, maxPerCell))
+      rejects("maxPerCell must be >= 1")(Dedup.semanticDecontaminate(
+        zeroPlanted, outsideProbe, "vec_id", "embedding", 0.9, cents, 1,
+        maxPerCell))
+    }
+  }
 }
