@@ -48,20 +48,14 @@ object ChDdl {
       val n = inner("FixedString(").trim.toInt
       (if (n >= 16) BinaryType else StringType, false)
     } else if (s.startsWith("Map(")) {
-      val body = inner("Map(")
       // split K, V at the top-level comma
-      var depth = 0
-      val cut = body.indices.find { i =>
-        body.charAt(i) match {
-          case '(' => depth += 1; false
-          case ')' => depth -= 1; false
-          case ',' => depth == 0
-          case _ => false
-        }
-      }.getOrElse(throw new IllegalArgumentException(
-        s"cannot parse Map type: $s"))
-      val (kt, _) = chType(body.substring(0, cut))
-      val (vt, vn) = chType(body.substring(cut + 1))
+      val (k, v) = ChText.pieces(inner("Map(")) match {
+        case k +: v if v.nonEmpty => (k, v.mkString(","))
+        case _ => throw new IllegalArgumentException(
+          s"cannot parse Map type: $s")
+      }
+      val (kt, _) = chType(k)
+      val (vt, vn) = chType(v)
       (MapType(kt, vt, valueContainsNull = vn), false)
     } else if (s.startsWith("DateTime64")) (TimestampType, false)
     else if (s.startsWith("Decimal")) (DoubleType, false)
@@ -101,7 +95,6 @@ object ChDdl {
       // (column, days, action) where action is "delete" or "disk:<p>"
       ttl: Option[(String, Int, String)] = None)
 
-  private val stringLit = """'(?:[^']|'')*'""".r
   // name, optional ON CLUSTER (the cluster is the platform's concern —
   // parsed and dropped), then one of: a column list '(', `AS other`
   // (the reference's schema-clone S3 table, README.md:136), or
@@ -111,22 +104,16 @@ object ChDdl {
       """(?:\s+ON\s+CLUSTER\s+\S+)?\s*""" +
       """(?:(\()|AS\s+(?!SELECT\b)`?([\w.]+)`?|(?=ENGINE\b))""").r
 
-  /** Strip `-- comments`, mask literals, balanced-scan the column list
+  /** Mask literals, strip `-- comments`, balanced-scan the column list
     * and tail clauses. Returns None when the text is not a CH CREATE
     * TABLE with an ENGINE clause (Spark DDL stays Spark's).
     */
   def parseCreateTable(sqlText: String): Option[Parsed] = {
-    val noComments = sqlText.linesIterator
+    // masked first, so a `--` inside a literal is not a comment
+    val (withComments, lits) = ChText.mask(sqlText)
+    val masked = withComments.linesIterator
       .map(l => l.replaceAll("--.*$", "")).mkString("\n")
-    val lits = stringLit.findAllIn(noComments).toVector
-    val masked = lits.zipWithIndex.foldLeft(noComments) {
-      case (acc, (l, i)) => acc.replaceFirst(
-        java.util.regex.Pattern.quote(l),
-        java.util.regex.Matcher.quoteReplacement("\u0001" + i + "\u0001"))
-    }
-    def unmask(s: String): String = lits.zipWithIndex.foldLeft(s) {
-      case (acc, (l, i)) => acc.replace("\u0001" + i + "\u0001", l)
-    }
+    def unmask(s: String): String = ChText.unmask(s, lits)
     createHead.findFirstMatchIn(masked).flatMap { m =>
       if (!masked.toUpperCase.contains("ENGINE")) None
       else {
@@ -139,8 +126,11 @@ object ChDdl {
         }
         val (fields, tailStart) =
           if (hasCols) {
-            val (colsBody, after) = balancedSpan(masked, m.end - 1)
-            (splitTop(colsBody).flatMap(parseColumn), after)
+            val close = ChText.closeParen(masked, m.end - 1)
+            if (close < 0)
+              throw new IllegalArgumentException("unbalanced parens in DDL")
+            (ChText.splitTop(masked.substring(m.end, close))
+              .flatMap(parseColumn), close + 1)
           } else (Seq.empty[StructField], m.end)
         val fullTail = masked.substring(tailStart).replaceAll(";\\s*$", "")
         // the CTAS form: a depth-0 `AS SELECT ...` terminates the
@@ -149,7 +139,7 @@ object ChDdl {
         val ctasRe = """(?is)\bAS\s+(SELECT\b.*)$""".r
         val (tail, ctasSelect) =
           ctasRe.findFirstMatchIn(fullTail) match {
-            case Some(cm) if depth0(fullTail, cm.start) =>
+            case Some(cm) if ChText.depth0(fullTail, cm.start) =>
               (fullTail.substring(0, cm.start),
                 Some(unmask(cm.group(1))))
             case _ => (fullTail, None)
@@ -161,7 +151,7 @@ object ChDdl {
         val (engine, params) = engineFull.indexOf('(') match {
           case -1 => (engineFull.trim, Nil)
           case p => (engineFull.substring(0, p).trim,
-            splitTop(engineFull.substring(p + 1,
+            ChText.splitTop(engineFull.substring(p + 1,
               engineFull.lastIndexOf(')'))).map(x => unmask(x).trim))
         }
         val partCol = clauses.get("PARTITION BY").map { e =>
@@ -176,7 +166,7 @@ object ChDdl {
           val t = e.trim
           val body = if (t.startsWith("(")) t.substring(1, t.lastIndexOf(')'))
             else t
-          splitTop(body).map(_.replace("`", "").trim)
+          ChText.splitTop(body).map(_.replace("`", "").trim)
         }
         val sampleBy = clauses.get("SAMPLE BY").map(_.trim.replace("`", ""))
         val s3 = if (engine == "S3") {
@@ -274,44 +264,6 @@ object ChDdl {
   private def stripQuotes(s: String): String =
     s.trim.stripPrefix("'").stripSuffix("'")
 
-  /** From the '(' at `open`, the balanced body and the index after ')'. */
-  private def balancedSpan(text: String, open: Int): (String, Int) = {
-    var depth = 0
-    var i = open
-    while (i < text.length) {
-      text.charAt(i) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return (text.substring(open + 1, i), i + 1)
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException("unbalanced parens in DDL")
-  }
-
-  /** `String.trim` strips every char <= 0x20 — including the 
-    * literal-mask sentinels — so masked fragments must strip REAL
-    * whitespace only (the same trap TotalsParser documents).
-    */
-  private def stripWs(s: String): String =
-    s.replaceAll("^[ \t\r\n]+|[ \t\r\n]+$", "")
-
-  private def splitTop(body: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    for (i <- body.indices) body.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += body.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += body.substring(start)
-    out.result().map(stripWs).filter(_.nonEmpty)
-  }
-
   // column modifiers parsed-and-dropped: defaults/codecs/comments are
   // storage-engine concerns the parquet layout doesn't carry
   private val columnModifiers = Set("DEFAULT", "MATERIALIZED", "EPHEMERAL",
@@ -332,23 +284,9 @@ object ChDdl {
         require(e > 0, s"cannot parse column definition: $d")
         (d.substring(0, e), d.substring(e + 1).trim)
       }
-    // the type runs to the first depth-0 modifier keyword
-    var i = 0
-    var depth = 0
-    var typeEnd = rest.length
-    while (i < rest.length && typeEnd == rest.length) {
-      rest.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if c.isLetter && depth == 0 =>
-          val w = rest.substring(i)
-            .takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-          if (columnModifiers.contains(w.toUpperCase) && i > 0)
-            typeEnd = i
-          else i += w.length
-        case _ => i += 1
-      }
-    }
+    // the type runs to the first depth-0 modifier keyword after its
+    // first character
+    val typeEnd = ChText.depth0Word(rest, 1, columnModifiers)
     val (dt, nullable) = chType(rest.substring(0, typeEnd))
     Some(StructField(name, dt, nullable))
   }
@@ -373,7 +311,7 @@ object ChDdl {
         val afterI = idx + kw.length
         val after = if (afterI >= upper.length) ' ' else upper.charAt(afterI)
         if (!wordChar(before) && !wordChar(after) &&
-          depth0(tail, idx)) found += ((idx, kw))
+          ChText.depth0(tail, idx)) found += ((idx, kw))
         idx = upper.indexOf(kw, idx + 1)
       }
       found.result()
@@ -387,11 +325,6 @@ object ChDdl {
       kw -> tail.substring(pos + kw.length, end)
         .replaceAll("""^\s+|\s+$""", "")
     }.toMap
-  }
-
-  private def depth0(text: String, pos: Int): Boolean = {
-    val p = text.substring(0, pos)
-    p.count(_ == '(') == p.count(_ == ')')
   }
 }
 

@@ -139,7 +139,7 @@ object ChMatView {
       // stays uniform (one arg column per -State item)
       val packed =
         if (it.kind == "argmin" || it.kind == "argmax") {
-          val parts = splitTop(argSql)
+          val parts = ChText.splitTop(argSql)
           require(parts.length == 2,
             s"${it.kind}State expects (value, ordering), got: $argSql")
           s"named_struct('v', ${parts.head}, 'o', ${parts(1)})"
@@ -207,7 +207,6 @@ object ChMatView {
   // SELECT-shape parsing (command time; literals masked so keywords
   // inside strings never split the list)
 
-  private val stringLit = """'(?:[^']|'')*'""".r
   private val stateRe =
     ("""(?is)^(quantileExact|topK|argMin|argMax|uniq|sum|min|max|count|avg)""" +
       """State\s*\((.*)\)""" +
@@ -224,34 +223,14 @@ object ChMatView {
 
   /** Split the select list / find the source table / classify items. */
   def parseSelect(selectSql: String): ParsedMvSelect = {
-    val lits = stringLit.findAllIn(selectSql).toVector
-    val masked = lits.zipWithIndex.foldLeft(selectSql) {
-      case (acc, (l, i)) => acc.replaceFirst(
-        java.util.regex.Pattern.quote(l),
-        java.util.regex.Matcher.quoteReplacement("\u0001" + i + "\u0001"))
-    }
-    def unmask(s: String): String = lits.zipWithIndex.foldLeft(s) {
-      case (acc, (l, i)) => acc.replace("\u0001" + i + "\u0001", l)
-    }
+    val (masked, lits) = ChText.mask(selectSql)
+    def unmask(s: String): String = ChText.unmask(s, lits)
     // the select list runs from after SELECT to the depth-0 FROM
-    val upper = masked.toUpperCase
-    val selStart = upper.indexOf("SELECT") + "SELECT".length
-    var i = selStart
-    var depth = 0
-    var fromAt = -1
-    while (i < masked.length && fromAt < 0) {
-      masked.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if c.isLetter && depth == 0 =>
-          val w = masked.substring(i).takeWhile(ch =>
-            ch.isLetterOrDigit || ch == '_')
-          if (w.equalsIgnoreCase("FROM")) fromAt = i else i += w.length
-        case _ => i += 1
-      }
-    }
-    require(fromAt > 0, "materialized view select needs a FROM clause")
-    val items = splitTop(masked.substring(selStart, fromAt))
+    val selStart = masked.toUpperCase.indexOf("SELECT") + "SELECT".length
+    val fromAt = ChText.depth0Word(masked, selStart, Set("FROM"))
+    require(masked.regionMatches(true, fromAt, "FROM", 0, 4),
+      "materialized view select needs a FROM clause")
+    val items = ChText.splitTop(masked.substring(selStart, fromAt))
     val srcTable = fromRe.findFirstMatchIn(masked.substring(fromAt))
       .map(m => { val t = m.group(1); t.substring(t.lastIndexOf('.') + 1) })
       .getOrElse(throw new IllegalArgumentException(
@@ -278,22 +257,6 @@ object ChMatView {
       "materialized view needs at least one group column")
     ParsedMvSelect(groupItems, aggItems, srcTable,
       classified.map(_.fold(_._2, _.alias)))
-  }
-
-  private def splitTop(body: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    for (i <- body.indices) body.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += body.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += body.substring(start)
-    out.result()
-      .map(_.replaceAll("^[ \t\r\n]+|[ \t\r\n]+$", ""))
-      .filter(_.nonEmpty)
   }
 }
 

@@ -30,10 +30,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    parsed reduced plan — their expansion needs the resolved child
   *    schema, so [[ChClauseRule]] finishes the job during analysis.
   *
-  * Every rewrite sits BEHIND the delegate parser's failure: Spark's
-  * parser runs first and only a text it rejects is rewritten, so valid
-  * Spark SQL — including string literals containing these phrases — is
-  * never touched.
+  * When the rewrites run:
+  *  - Most sit BEHIND the delegate parser's failure: Spark's parser
+  *    runs first and only a text it rejects is rewritten, so valid
+  *    Spark SQL is never touched.
+  *  - Twelve shapes are rewritten BEFORE Spark's parser runs
+  *    ([[needsPreRewrite]]/[[parseWith]]), because Spark accepts them
+  *    with the wrong meaning or fails only at analysis: ARRAY JOIN,
+  *    FINAL, ASOF, GLOBAL, ANY/ALL, SEMI/ANTI, `numbers()`, quantile,
+  *    parameterized aggregates, DISTINCT ON, quoted-unit `dateDiff`
+  *    and PASTE JOIN. A pre-rewritten text the delegate rejects falls
+  *    back to the original text.
+  *  - `INSERT INTO`/`DROP TABLE`/`TRUNCATE TABLE` on a registered
+  *    binding, DataLens `{{params}}` and, in a text that carried
+  *    params, CH `arr[i]` indexing are handled before the delegate too.
+  *
+  * Every rewrite reads the text through [[ChText]]: string literals
+  * are masked first, so a literal containing these phrases is never
+  * rewritten, and paren depth and top-level commas skip literals,
+  * backquoted identifiers and comments.
   */
 class TotalsParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -64,42 +79,6 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private val settings =
     ("""(?is)\bSETTINGS\s+\w+\s*=\s*(?:[\w.]+|\x01\d+\x01)""" +
       """(\s*,\s*\w+\s*=\s*(?:[\w.]+|\x01\d+\x01))*""").r
-  // a single-quoted SQL literal, '' being the escaped quote
-  private val stringLit = """'(?:[^']|'')*'""".r
-
-  /** Replace every string literal with an opaque placeholder before the
-    * clause regexes run, and restore afterwards — so neither rewrite
-    * can fire inside a literal, and a comma inside a quoted string is
-    * never mistaken for a multi-key TOTALS.
-    */
-  // \u0001 cannot appear in parseable SQL text, so the placeholder can
-  // never collide with real query content
-  private def placeholder(i: Int): String = "\u0001" + i + "\u0001"
-
-  private def maskLiterals(sqlText: String): (String, Seq[String]) = {
-    val found = stringLit.findAllIn(sqlText).toVector
-    val masked = found.zipWithIndex.foldLeft(sqlText) {
-      case (acc, (lit, i)) =>
-        acc.replaceFirst(java.util.regex.Pattern.quote(lit),
-          java.util.regex.Matcher.quoteReplacement(placeholder(i)))
-    }
-    (masked, found)
-  }
-
-  private def unmaskLiterals(sqlText: String, lits: Seq[String]): String =
-    lits.zipWithIndex.foldLeft(sqlText) {
-      case (acc, (lit, i)) =>
-        acc.replace(placeholder(i), lit)
-    }
-
-  /** Strip ONLY real whitespace. `String.trim` removes every char
-    * <= 0x20 — including the \u0001 literal-mask bytes — so trimming a
-    * masked argument that ends in a string literal would corrupt the
-    * placeholder and the literal would never be restored.
-    */
-  private def stripWs(s: String): String =
-    s.replaceAll("^[ \t\r\n]+|[ \t\r\n]+$", "")
-
   /** Rewrite every `quantile*(L)(args)` to `percentile(args, L)`,
     * scanning the second argument list with balanced parens (the
     * argument may itself contain calls).
@@ -108,20 +87,10 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     quantileHead.findFirstMatchIn(text) match {
       case None => text
       case Some(m) =>
-        val argStart = m.end // first char after the opening '('
-        var depth = 1
-        var i = argStart
-        while (i < text.length && depth > 0) {
-          text.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (depth != 0) text // unbalanced: leave for the parser to reject
+        val close = ChText.closeParen(text, m.end - 1)
+        if (close < 0) text // unbalanced: leave for the parser to reject
         else {
-          val arg = stripWs(text.substring(argStart, i - 1))
+          val arg = ChText.strip(text.substring(m.end, close))
           val levels = m.group(2).split(",").map(_.trim)
           // a level LIST (the quantiles(...) plural form) returns an
           // array, exactly percentile's array-of-percentages behavior
@@ -131,13 +100,13 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
           // frequency argument, which sits AFTER the percentage
           val call =
             if (m.group(1).toLowerCase.contains("weighted")) {
-              val parts = splitTopLevel(arg)
+              val parts = ChText.splitTop(arg)
               require(parts.length == 2,
                 s"${m.group(1)} expects (x, weight), got $arg")
               s"percentile(${parts.head}, $lv, ${parts(1)})"
             } else s"percentile($arg, $lv)"
           val replaced = text.substring(0, m.start) +
-            call + text.substring(i)
+            call + text.substring(close + 1)
           rewriteQuantiles(replaced) // next occurrence
         }
     }
@@ -175,20 +144,10 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     paramAggHead.findFirstMatchIn(text) match {
       case None => text
       case Some(m) =>
-        val argStart = m.end
-        var depth = 1
-        var i = argStart
-        while (i < text.length && depth > 0) {
-          text.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (depth != 0) text
+        val close = ChText.closeParen(text, m.end - 1)
+        if (close < 0) text
         else {
-          val arg = stripWs(text.substring(argStart, i - 1))
+          val arg = ChText.strip(text.substring(m.end, close))
           // sequenceNextNode's params are bare KEYWORDS (forward,
           // head, …) — quote them while flattening, or the analyzer
           // rejects them as unresolvable columns before the function
@@ -199,11 +158,14 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
                 .mkString(", ")
             else m.group(2)
           val replaced = text.substring(0, m.start) +
-            s"${m.group(1)}($params, $arg)" + text.substring(i)
+            s"${m.group(1)}($params, $arg)" + text.substring(close + 1)
           rewriteParamAggs(replaced)
         }
     }
   }
+
+  private val prewhereStops = Set("WHERE", "GROUP", "ORDER", "HAVING",
+    "LIMIT", "SETTINGS", "UNION", "WINDOW", "QUALIFY")
 
   /** Fold each PREWHERE into its own scope's WHERE. The merge target
     * is found by a forward scan at paren depth 0 — a WHERE inside (or
@@ -217,32 +179,16 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       case None => text
       case Some(m) =>
         val rest = text.substring(m.end)
-        val stops = Set("GROUP", "ORDER", "HAVING", "LIMIT", "SETTINGS",
-          "UNION", "WINDOW", "QUALIFY")
-        var depth = 0
-        var i = 0
-        var whereAt = -1
-        var done = false
-        while (i < rest.length && whereAt < 0 && !done) {
-          val c = rest.charAt(i)
-          if (c == '(') { depth += 1; i += 1 }
-          else if (c == ')') {
-            if (depth == 0) done = true else { depth -= 1; i += 1 }
-          } else if (c.isLetter && depth == 0) {
-            val w = rest.substring(i)
-              .takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-            val up = w.toUpperCase
-            if (up == "WHERE") whereAt = i
-            else if (stops.contains(up)) done = true
-            else i += w.length
-          } else i += 1
-        }
+        val at = ChText.depth0Word(rest, 0, prewhereStops)
         val folded =
-          if (whereAt >= 0)
-            text.substring(0, m.start) +
-              s"WHERE (${rest.substring(0, whereAt).trim}) AND " +
-              rest.substring(whereAt + "WHERE".length)
-          else text.substring(0, m.start) + "WHERE" + rest
+          if (rest.regionMatches(true, at, "WHERE", 0, 5)) {
+            val pred = rest.substring(0, at).trim
+            // a trailing `-- comment` must not swallow the closing paren
+            val eol =
+              if (pred.lastIndexOf("--") > pred.lastIndexOf('\n')) "\n" else ""
+            text.substring(0, m.start) + s"WHERE ($pred$eol) AND " +
+              rest.substring(at + "WHERE".length)
+          } else text.substring(0, m.start) + "WHERE" + rest
         rewritePrewhere(folded) // each pass consumes one PREWHERE
     }
 
@@ -258,29 +204,6 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       """\s+FROM\s+(.+?)\s+TO\s+(.+?)(?:\s+STEP\s+(.+?))?""" +
       """(?:\s+INTERPOLATE\s*\(([^()]*)\))?(?=\s+LIMIT\b|\s+SETTINGS\b|\s*$)""").r
 
-  private def depth0At(text: String, pos: Int): Boolean = {
-    val prefix = text.substring(0, pos)
-    prefix.count(_ == '(') == prefix.count(_ == ')')
-  }
-
-  /** Split an expression list on top-level commas only. Items strip
-    * real whitespace via [[stripWs]] — the inputs are MASKED text, and
-    * `String.trim` would eat the  literal-mask sentinels.
-    */
-  private def splitTopLevel(text: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    for (i <- text.indices) text.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += text.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += text.substring(start)
-    out.result().map(stripWs).filter(_.nonEmpty)
-  }
-
   /** Parse + constant-fold a clause bound (`DATE '...'`, a number, an
     * INTERVAL) into a Literal.
     */
@@ -293,12 +216,12 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private def extractLimitBy(masked: String, lits: Seq[String])
       : (String, Option[LogicalPlan => LogicalPlan]) =
     limitByRe.findFirstMatchIn(masked) match {
-      case Some(m) if depth0At(masked, m.start) =>
+      case Some(m) if ChText.depth0(masked, m.start) =>
         val (off, n) = Option(m.group(2)) match {
           case Some(nn) => (m.group(1).toInt, nn.toInt)
           case None => (0, m.group(1).toInt)
         }
-        val keys = splitTopLevel(unmaskLiterals(m.group(3), lits))
+        val keys = ChText.splitTop(ChText.unmask(m.group(3), lits))
           .map(delegate.parseExpression)
         val reduced = masked.substring(0, m.start) + masked.substring(m.end)
         (reduced, Some(insertAboveSort(_, ChLimitBy(n, off, keys, _))))
@@ -316,23 +239,14 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private def extractDistinctOn(masked: String, lits: Seq[String])
       : (String, Option[LogicalPlan => LogicalPlan]) =
     distinctOnRe.findFirstMatchIn(masked) match {
-      case Some(m) if depth0At(masked, m.start) =>
-        var depth = 1
-        var i = m.end
-        while (i < masked.length && depth > 0) {
-          masked.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        require(depth == 0, "DISTINCT ON: unbalanced key list")
-        val keys = splitTopLevel(unmaskLiterals(
-          masked.substring(m.end, i - 1), lits)).map(delegate.parseExpression)
+      case Some(m) if ChText.depth0(masked, m.start) =>
+        val close = ChText.closeParen(masked, m.end - 1)
+        require(close >= 0, "DISTINCT ON: unbalanced key list")
+        val keys = ChText.splitTop(ChText.unmask(
+          masked.substring(m.end, close), lits)).map(delegate.parseExpression)
         require(keys.nonEmpty, "DISTINCT ON needs at least one key")
         val reduced = masked.substring(0, m.start) + "SELECT " +
-          masked.substring(i)
+          masked.substring(close + 1)
         (reduced, Some(insertAboveSort(_, ChLimitBy(1, 0, keys, _))))
       case _ => (masked, None)
     }
@@ -347,7 +261,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private def extractLimitTies(masked: String)
       : (String, Option[LogicalPlan => LogicalPlan]) =
     limitTiesRe.findFirstMatchIn(masked) match {
-      case Some(m) if depth0At(masked, m.start) =>
+      case Some(m) if ChText.depth0(masked, m.start) =>
         val n = m.group(1).toInt
         val reduced = masked.substring(0, m.start) + masked.substring(m.end)
         (reduced, Some(p => ChLimitTies(n, p)))
@@ -357,14 +271,14 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private def extractWithFill(masked: String, lits: Seq[String])
       : (String, Option[LogicalPlan => LogicalPlan]) =
     withFillRe.findFirstMatchIn(masked) match {
-      case Some(m) if depth0At(masked, m.start) =>
+      case Some(m) if ChText.depth0(masked, m.start) =>
         val axis = m.group(2).replace("`", "")
-        val from = foldLit(unmaskLiterals(m.group(4), lits))
-        val to = foldLit(unmaskLiterals(m.group(5), lits))
+        val from = foldLit(ChText.unmask(m.group(4), lits))
+        val to = foldLit(ChText.unmask(m.group(5), lits))
         val step = Option(m.group(6))
-          .map(s => foldLit(unmaskLiterals(s, lits)))
+          .map(s => foldLit(ChText.unmask(s, lits)))
         val interp = Option(m.group(7)).toSeq
-          .flatMap(g => splitTopLevel(unmaskLiterals(g, lits)))
+          .flatMap(g => ChText.splitTop(ChText.unmask(g, lits)))
         val reduced = masked.substring(0, m.start) +
           m.group(1) + m.group(2) + Option(m.group(3)).getOrElse("") +
           masked.substring(m.end)
@@ -461,7 +375,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     """(?i)\b(SEMI|ANTI)\s+(LEFT|RIGHT)\s+(?=JOIN\b)""".r
 
   private def needsPreRewrite(sqlText: String): Boolean = {
-    val (masked, _) = maskLiterals(sqlText)
+    val (masked, _) = ChText.mask(sqlText)
     arrayJoinKw.findFirstIn(masked).isDefined ||
       finalRe.findFirstIn(masked).isDefined ||
       asofRe.findFirstIn(masked).isDefined ||
@@ -567,27 +481,10 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       case None => text
       case Some(m) =>
         val outer = if (m.group(1) != null) "OUTER " else ""
-        // scan the item list: ends at a depth-0 clause keyword, the
+        // the item list ends at a depth-0 clause keyword, the
         // enclosing subquery's ')', or end of text
-        var i = m.end
-        var depth = 0
-        var end = text.length
-        var done = false
-        while (i < text.length && !done) {
-          val c = text.charAt(i)
-          if (c == '(') { depth += 1; i += 1 }
-          else if (c == ')') {
-            if (depth == 0) { end = i; done = true }
-            else { depth -= 1; i += 1 }
-          } else if (c.isLetter && depth == 0) {
-            val w = text.substring(i)
-              .takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-            if (arrayJoinStops.contains(w.toUpperCase)) {
-              end = i; done = true
-            } else i += w.length
-          } else i += 1
-        }
-        val items = splitTopLevel(text.substring(m.end, end)).map {
+        val end = ChText.depth0Word(text, m.end, arrayJoinStops)
+        val items = ChText.splitTop(text.substring(m.end, end)).map {
           case asAliasRe(e, a) => (e, a)
           case bare if bareNameRe.matches(bare) =>
             (bare, bare.split('.').last)
@@ -610,7 +507,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private def extractSample(masked: String)
       : (String, Option[LogicalPlan => LogicalPlan]) =
     sampleRe.findFirstMatchIn(masked) match {
-      case Some(m) if depth0At(masked, m.start) =>
+      case Some(m) if ChText.depth0(masked, m.start) =>
         val f = m.group(1).toDouble
         val o = Option(m.group(2)).map(_.toDouble).getOrElse(0.0)
         val reduced = masked.substring(0, m.start) + masked.substring(m.end)
@@ -721,7 +618,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     * is.
     */
   private def parseInsertBinding(sqlText: String): Option[LogicalPlan] = {
-    val (masked, lits) = maskLiterals(sqlText)
+    val (masked, lits) = ChText.mask(sqlText)
     def managed(t: String) =
       graft.sources.Catalog.binding(t).isDefined || ChMatView.isMv(t)
     masked match {
@@ -729,11 +626,11 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       // Spark table name) — no binding gate, so an unregistered name
       // reaches the command's helpful error instead of a ParseException
       case yqlInsertRe(conn, path, opts, select) =>
-        Some(ChYqlInsertCommand(conn, path, unmaskLiterals(opts, lits),
-          unmaskLiterals(select, lits)))
+        Some(ChYqlInsertCommand(conn, path, ChText.unmask(opts, lits),
+          ChText.unmask(select, lits)))
       case insertRe(table, select)
           if graft.sources.Catalog.binding(table).isDefined =>
-        Some(ChInsertIntoCommand(table, unmaskLiterals(select, lits)))
+        Some(ChInsertIntoCommand(table, ChText.unmask(select, lits)))
       // DROP TABLE also detaches materialized views (CH accepts both
       // spellings for MVs)
       case dropRe(table) if managed(table) =>
@@ -751,41 +648,41 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     * unmask before they become expression SQL.
     */
   private def parseAlterTable(sqlText: String): Option[LogicalPlan] = {
-    val (masked, lits) = maskLiterals(sqlText)
+    val (masked, lits) = ChText.mask(sqlText)
     def short(t: String): String = t.substring(t.lastIndexOf('.') + 1)
     masked match {
       case addProjRe(table, pname, body) =>
         Some(ChAddProjectionCommand(short(table), pname,
-          unmaskLiterals(body, lits)))
+          ChText.unmask(body, lits)))
       case matProjRe(table, pname) =>
         Some(ChMaterializeProjectionCommand(short(table), pname))
       case dropProjRe(table, pname) =>
         Some(ChDropProjectionCommand(short(table), pname))
       case partOpRe(table, op, part) =>
         Some(ChPartitionCommand(short(table), op.toUpperCase,
-          unmaskLiterals(part, lits).replaceAll("^'|'$", "")))
+          ChText.unmask(part, lits).replaceAll("^'|'$", "")))
       case movePartRe(table, part, to) =>
         Some(ChPartitionCommand(short(table), "MOVE",
-          unmaskLiterals(part, lits).replaceAll("^'|'$", ""),
+          ChText.unmask(part, lits).replaceAll("^'|'$", ""),
           Some(short(to))))
       case matTtlRe(table, asOf) =>
         Some(ChMaterializeTtlCommand(short(table),
           Option(asOf).map(a =>
-            unmaskLiterals(a, lits).replaceAll("^'|'$", ""))))
+            ChText.unmask(a, lits).replaceAll("^'|'$", ""))))
       case alterDeleteRe(table, cond) =>
-        Some(ChAlterTableCommand(table, Nil, unmaskLiterals(cond, lits)))
+        Some(ChAlterTableCommand(table, Nil, ChText.unmask(cond, lits)))
       case alterUpdateRe(table, assigns, cond) =>
-        val pairs = splitTopLevel(assigns).map { a =>
+        val pairs = ChText.splitTop(assigns).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"ALTER TABLE UPDATE expects col = expr, got $a")
-          (stripWs(a.substring(0, eq)).replace("`", ""),
-            unmaskLiterals(stripWs(a.substring(eq + 1)), lits))
+          (ChText.strip(a.substring(0, eq)).replace("`", ""),
+            ChText.unmask(ChText.strip(a.substring(eq + 1)), lits))
         }
-        Some(ChAlterTableCommand(table, pairs, unmaskLiterals(cond, lits)))
+        Some(ChAlterTableCommand(table, pairs, ChText.unmask(cond, lits)))
       case optimizeRe(table, partition, dedup, dedupCols) =>
         Some(ChOptimizeTableCommand(table,
           Option(partition).map(p =>
-            unmaskLiterals(p, lits).replaceAll("^'|'$", "")),
+            ChText.unmask(p, lits).replaceAll("^'|'$", "")),
           deduplicate = dedup != null,
           dedupBy = Option(dedupCols).toSeq.flatMap(cs =>
             cs.split(",").map(_.trim.replace("`", ""))
@@ -798,7 +695,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
         val name = name0.substring(name0.lastIndexOf('.') + 1)
         Some(ChCreateMvCommand(name,
           """(?i)\bPOPULATE\b""".r.findFirstIn(mid).isDefined,
-          unmaskLiterals(select, lits)))
+          ChText.unmask(select, lits)))
       case _ => None
     }
   }
@@ -817,34 +714,12 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
 
   private val scalarWithHead = """(?is)^\s*WITH\s+""".r
 
-  /** Index of the first depth-0 occurrence of keyword `kw` at or after
-    * `from`, or -1.
-    */
-  private def depth0Keyword(text: String, from: Int, kw: String): Int = {
-    var i = from
-    var depth = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if ((c.isLetter || c == '_') &&
-          (i == 0 || { val p = text.charAt(i - 1)
-            !p.isLetterOrDigit && p != '_' && p != '.' && p != '`' })) {
-        val w = text.substring(i)
-          .takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-        if (depth == 0 && w.equalsIgnoreCase(kw)) return i
-        i += math.max(w.length, 1)
-      } else i += 1
-    }
-    -1
-  }
-
   private def rewriteScalarWith(masked: String): String = {
     val head = scalarWithHead.findFirstMatchIn(masked).getOrElse(
       return masked)
-    val selAt = depth0Keyword(masked, head.end, "SELECT")
-    if (selAt < 0) return masked
-    val items = splitTopLevel(masked.substring(head.end, selAt))
+    val selAt = ChText.depth0Word(masked, head.end, Set("SELECT"))
+    if (!masked.regionMatches(true, selAt, "SELECT", 0, 6)) return masked
+    val items = ChText.splitTop(masked.substring(head.end, selAt))
     // every item must be `expr AS name` — aliases may reference
     // earlier aliases, so each expression expands against the
     // definitions before it (CH's left-to-right WITH scoping)
@@ -857,10 +732,9 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     // the alias for its column — spell it `name AS name` so the
     // substitution below rewrites the value and keeps the name
     val names = defs.map(_._2).toSet
-    val listEnd0 = depth0Keyword(masked, selAt + "SELECT".length, "FROM")
-    val listEnd = if (listEnd0 < 0) masked.length else listEnd0
     val listStart = selAt + "SELECT".length
-    val selList = splitTopLevel(masked.substring(listStart, listEnd))
+    val listEnd = ChText.depth0Word(masked, listStart, Set("FROM"))
+    val selList = ChText.splitTop(masked.substring(listStart, listEnd))
       .map(it => if (names.contains(it)) s"$it AS $it" else it)
       .mkString(" ", ", ", " ")
     val body = "SELECT" + selList + masked.substring(listEnd)
@@ -903,22 +777,13 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     var m = yqlScanHead.findFirstMatchIn(cur)
     while (m.isDefined) {
       val mm = m.get
-      var i = mm.end
-      var depth = 1
-      while (i < cur.length && depth > 0) {
-        cur.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      require(depth == 0, "YQL WITH clause: unbalanced parentheses")
-      val body = unmaskLiterals(cur.substring(mm.end, i - 1), lits)
+      val close = ChText.closeParen(cur, mm.end - 1)
+      require(close >= 0, "YQL WITH clause: unbalanced parentheses")
+      val body = ChText.unmask(cur.substring(mm.end, close), lits)
       val (format, compression, schema) = YqlText.parseOptions(body)
       val id = YqlText.registerScan(YqlText.ScanSpec(
         mm.group(1), mm.group(2), format, compression, schema))
-      cur = cur.substring(0, mm.start) + s"FROM `$id`" + cur.substring(i)
+      cur = cur.substring(0, mm.start) + s"FROM `$id`" + cur.substring(close + 1)
       m = yqlScanHead.findFirstMatchIn(cur)
     }
     cur
@@ -937,17 +802,6 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private val qualifyTail =
     """(?i)\b(ORDER|LIMIT|UNION|SETTINGS|FORMAT)\b""".r
   private val qualifyFrom = """(?i)\bFROM\b""".r
-
-  private def depth0(s: String, i: Int): Boolean = {
-    var d = 0
-    var j = 0
-    while (j < i) {
-      val c = s.charAt(j)
-      if (c == '(') d += 1 else if (c == ')') d -= 1
-      j += 1
-    }
-    d == 0
-  }
 
   // ---------------------------------------------------------------
   // CH `PASTE JOIN` (23.11+): horizontal concatenation of two result
@@ -973,30 +827,6 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       "PASTE JOIN requires `(SELECT ... ORDER BY ...) AS a PASTE JOIN " +
         s"(SELECT ... ORDER BY ...) AS b` — $what")
 
-  private def matchParenFwd(text: String, openIdx: Int): Int = {
-    var d = 0
-    var i = openIdx
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  private def matchParenBack(text: String, closeIdx: Int): Int = {
-    var d = 0
-    var i = closeIdx
-    while (i >= 0) {
-      val c = text.charAt(i)
-      if (c == ')') d += 1
-      else if (c == '(') { d -= 1; if (d == 0) return i }
-      i -= 1
-    }
-    -1
-  }
-
   private def rewritePasteJoin(text: String): String = {
     val ms = pasteRe.findAllMatchIn(text).toList
     if (ms.isEmpty) return text
@@ -1017,14 +847,14 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       ms: List[scala.util.matching.Regex.Match]): String = {
     if (ms.size > 1) pasteErr("one PASTE JOIN per statement")
     val m = ms.head
-    if (!depth0(text, m.start)) pasteErr("supported at depth 0 only")
+    if (!ChText.depth0(text, m.start)) pasteErr("supported at depth 0 only")
     // right side: ( sub ) AS alias
     var i = m.end
     while (i < text.length && text.charAt(i).isWhitespace) i += 1
     if (i >= text.length || text.charAt(i) != '(')
       pasteErr("the right side must be a parenthesized subquery")
     val openR = i
-    val closeR = matchParenFwd(text, openR)
+    val closeR = ChText.closeParen(text, openR)
     if (closeR < 0) pasteErr("unbalanced parentheses on the right side")
     val aliasRe = """(?is)\s*AS\s+([A-Za-z_][A-Za-z0-9_]*)""".r
     val afterR = text.substring(closeR + 1)
@@ -1049,18 +879,18 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     if (j < 0 || text.charAt(j) != ')')
       pasteErr("the left side must be a parenthesized subquery")
     val closeL = j
-    val openL = matchParenBack(text, closeL)
+    val openL = ChText.openParen(text, closeL)
     if (openL < 0) pasteErr("unbalanced parentheses on the left side")
     val subL = text.substring(openL + 1, closeL)
     val subR = text.substring(openR + 1, closeR)
     def orderKeys(sub: String, side: String): String = {
       val hit = """(?is)\bORDER\s+BY\b""".r.findAllMatchIn(sub)
-        .find(o => depth0(sub, o.start))
+        .find(o => ChText.depth0(sub, o.start))
         .getOrElse(pasteErr(s"the $side side has no top-level ORDER BY" +
           " — row position must be defined"))
       val tail = sub.substring(hit.end)
       val stop = """(?is)\b(LIMIT|OFFSET|SETTINGS|FORMAT)\b""".r
-        .findAllMatchIn(tail).find(s => depth0(tail, s.start))
+        .findAllMatchIn(tail).find(s => ChText.depth0(tail, s.start))
         .map(_.start).getOrElse(tail.length)
       val keys = tail.substring(0, stop).trim
       if (keys.isEmpty) pasteErr(s"the $side side's ORDER BY has no keys")
@@ -1069,18 +899,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       // row_number() OVER (...) window spec an integer literal is a
       // CONSTANT — the numbering would be nondeterministic and the
       // paste silently wrong (round-12 ADVICE). Contract error.
-      def depth0Splits(s: String): Seq[String] = {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var i = 0
-        while (i < s.length) {
-          if (s.charAt(i) == ',' && depth0(s, i)) out += i
-          i += 1
-        }
-        (Seq(-1) ++ out ++ Seq(s.length)).sliding(2).map {
-          case Seq(a, b) => s.substring(a + 1, b)
-        }.toSeq
-      }
-      depth0Splits(keys).foreach { k =>
+      ChText.splitTop(keys).foreach { k =>
         val bare = k.trim
           .replaceAll("(?is)\\s+NULLS\\s+(FIRST|LAST)\\s*$", "")
           .replaceAll("(?is)\\s+(ASC|DESC)\\s*$", "").trim
@@ -1111,26 +930,18 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     // `EXCEPT (__paste_rn)`. A star qualified by something OTHER than
     // the two paste aliases cannot carry the helper and is left alone.
     val selList = """(?is)\bSELECT\b""".r.findAllMatchIn(text)
-      .filter(s => s.end < openL && depth0(text, s.start))
+      .filter(s => s.end < openL && ChText.depth0(text, s.start))
       .toList.lastOption.flatMap { s =>
         """(?is)\bFROM\b""".r.findAllMatchIn(text)
           .find(f => f.start > s.end && f.start < openL &&
-            depth0(text, f.start))
+            ChText.depth0(text, f.start))
           .map(f => (s.end, f.start))
       }
     def patchStars(listText: String): String = {
-      val cuts = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < listText.length) {
-        if (listText.charAt(i) == ',' && depth0(listText, i)) cuts += i
-        i += 1
-      }
-      val items = (Seq(-1) ++ cuts ++ Seq(listText.length)).sliding(2)
-        .map { case Seq(a, b) => listText.substring(a + 1, b) }.toSeq
       val qualStar =
         ("""(?is)^\s*(?:DISTINCT\s+)?(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)""" +
           """\s*\.\s*\*\s*$""").r
-      items.map { it =>
+      ChText.pieces(listText).map { it =>
         val t = it.trim
         if (t == "*" || (t.toUpperCase.startsWith("DISTINCT") &&
             t.drop(8).trim == "*"))
@@ -1163,25 +974,25 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     // Thrown as DialectContractException so the rewrite guard in
     // [[rewrite]] RETHROWS it (plain exceptions there fall back to
     // the untouched text by design).
-    if (matches.exists(m => !depth0(text, m.start)))
+    if (matches.exists(m => !ChText.depth0(text, m.start)))
       throw new TotalsParser.DialectContractException(
         "QUALIFY is supported at the top level of the statement only " +
           "(depth 0); rewrite the subquery's QUALIFY as a WHERE over " +
           "a derived table with the window expression as a column")
-    matches.find(m => depth0(text, m.start)) match {
+    matches.find(m => ChText.depth0(text, m.start)) match {
       case None => text
       case Some(m) =>
         val head = text.substring(0, m.start)
         val after = text.substring(m.end)
         val (pred0, tail) = qualifyTail.findAllMatchIn(after)
-          .find(t => depth0(after, t.start)) match {
+          .find(t => ChText.depth0(after, t.start)) match {
           case Some(t) =>
             (after.substring(0, t.start), after.substring(t.start))
           case None => (after, "")
         }
         val pred = pred0.replaceAll("[;\\s]+$", "")
         qualifyFrom.findAllMatchIn(head)
-          .find(f => depth0(head, f.start)) match {
+          .find(f => ChText.depth0(head, f.start)) match {
           case None => text
           case Some(f) =>
             val inner = head.substring(0, f.start) +
@@ -1193,7 +1004,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   }
 
   private def rewrite(sqlText: String): Option[Rewritten] = {
-    val (masked, lits) = maskLiterals(sqlText)
+    val (masked, lits) = ChText.mask(sqlText)
     val m00 =
       try extractYqlScan(masked, lits) catch { case _: Exception => masked }
     // scalar WITH expands first so every later rewrite sees the
@@ -1265,7 +1076,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       formatTailRe.replaceAllIn(rewriteNumbers(afterPrewhere), "")
     val afterReplace = rewriteStarReplace(afterNumbers)
     val rewritten = settings.replaceAllIn(afterReplace, "")
-    val finalText = unmaskLiterals(rewritten, lits)
+    val finalText = ChText.unmask(rewritten, lits)
     if (finalText == sqlText && lbWrap.isEmpty && fillWrap.isEmpty &&
       sampleWrap.isEmpty && finalWrap.isEmpty && asofWrap.isEmpty &&
       anyWrap.isEmpty && tiesWrap.isEmpty && doWrap.isEmpty) None
@@ -1297,20 +1108,10 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     starReplaceRe.findFirstMatchIn(text) match {
       case None => text
       case Some(m) =>
-        var depth = 1
-        var i = m.end
-        while (i < text.length && depth > 0) {
-          text.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (depth != 0) text
+        val close = ChText.closeParen(text, m.end - 1)
+        if (close < 0) text
         else {
-          val items = splitTopLevel(text.substring(m.end, i - 1))
-            .map(stripWs)
+          val items = ChText.splitTop(text.substring(m.end, close))
           val asRe = """(?is)\s+AS\s+`?(\w+)`?\s*$""".r
           val names = items.map(it =>
             asRe.findFirstMatchIn(it).map(_.group(1)).getOrElse(
@@ -1319,7 +1120,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
           val replaced = s"* EXCEPT (${names.mkString(", ")}), " +
             items.mkString(", ")
           rewriteStarReplace(text.substring(0, m.start) + replaced +
-            text.substring(i))
+            text.substring(close + 1))
         }
     }
 
@@ -1426,7 +1227,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   private val bracketGroup = """\[([^\[\]]+)\]""".r
 
   private def chBracketIndex(sqlText: String): String = {
-    val (masked, lits) = maskLiterals(sqlText)
+    val (masked, lits) = ChText.mask(sqlText)
     var cur = masked
     var changed = true
     while (changed) {
@@ -1440,7 +1241,7 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       changed = next != cur
       cur = next
     }
-    unmaskLiterals(cur, lits)
+    ChText.unmask(cur, lits)
   }
 
   override def parseExpression(sqlText: String): Expression =

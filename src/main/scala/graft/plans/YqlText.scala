@@ -98,21 +98,6 @@ object YqlText {
 
   def scan(id: String): Option[ScanSpec] = Option(scans.get(id))
 
-  /** Split `k = v, k = v, Schema = (...)` at top-level commas. */
-  def splitTopLevel(body: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    for (i <- body.indices) body.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += body.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += body.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Parse a YQL `WITH (...)` options body (already unmasked) into
     * (format, compression, schema). `format` is required; bare words
     * and quoted values are both accepted (the README uses both:
@@ -123,7 +108,7 @@ object YqlText {
     var format: Option[String] = None
     var compression: Option[String] = None
     var schema: Option[StructType] = None
-    splitTopLevel(body).foreach { item =>
+    ChText.splitTop(body).foreach { item =>
       val eq = item.indexOf('=')
       require(eq > 0, s"YQL WITH option needs key = value, got: $item")
       val k = item.substring(0, eq).trim.toLowerCase
@@ -136,7 +121,7 @@ object YqlText {
           require(v.startsWith("(") && v.endsWith(")"),
             s"YQL Schema expects a parenthesized column list, got: $v")
           schema = Some(StructType(
-            splitTopLevel(v.substring(1, v.length - 1)).map(yqlField)))
+            ChText.splitTop(v.substring(1, v.length - 1)).map(yqlField)))
         case other => throw new IllegalArgumentException(
           s"unsupported YQL WITH option: $other")
       }

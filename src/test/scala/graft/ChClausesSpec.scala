@@ -325,4 +325,76 @@ class ChClausesSpec extends SparkSpec {
     // max live version is 2; raw rows with ver=2: exactly one
     assert(n == 1L)
   }
+
+  // a paren inside a comment or a backquoted name is not a paren: the
+  // clause still sits at depth 0 and rewrites
+  private def lexFixture(): Unit =
+    spark.range(12).selectExpr("id", "id % 3 AS k", "id % 2 AS g")
+      .createOrReplaceTempView("lex_t")
+
+  private def pairs(sql: String): Seq[(Long, Long)] =
+    spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  private val firstPerK = Seq((0L, 0L), (1L, 1L), (2L, 2L))
+
+  test("LIMIT BY after a line comment holding a paren") {
+    lexFixture()
+    assert(pairs("SELECT k, id FROM lex_t -- note (\n" +
+      "ORDER BY k, id LIMIT 1 BY k") == firstPerK)
+  }
+
+  test("LIMIT BY after a block comment holding a paren") {
+    lexFixture()
+    assert(pairs("SELECT k, id FROM lex_t /* ( */ " +
+      "ORDER BY k, id LIMIT 1 BY k") == firstPerK)
+  }
+
+  test("LIMIT BY on a backquoted name holding a paren") {
+    lexFixture()
+    assert(pairs("SELECT k AS `k(`, id FROM lex_t " +
+      "ORDER BY `k(`, id LIMIT 1 BY `k(`") == firstPerK)
+  }
+
+  test("an optimizer hint before LIMIT BY reaches Spark unchanged") {
+    lexFixture()
+    val sql = "SELECT /*+ REPARTITION(2) */ k, id FROM lex_t " +
+      "ORDER BY k, id LIMIT 1 BY k"
+    assert(pairs(sql) == firstPerK)
+    assert(spark.sql(sql).queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
+        r.numPartitions
+    }.contains(2))
+  }
+
+  test("WITH FILL after a block comment holding a paren") {
+    lexFixture()
+    assert(pairs("SELECT k AS d, count(1) AS c FROM lex_t GROUP BY k " +
+      "/* ) */ ORDER BY d WITH FILL FROM 0 TO 4") ==
+      Seq((0L, 4L), (1L, 4L), (2L, 4L), (3L, 0L)))
+  }
+
+  test("WITH TIES after a line comment holding a paren") {
+    lexFixture()
+    val ties = spark.sql("SELECT id FROM lex_t ORDER BY k -- (\n" +
+      "LIMIT 2 WITH TIES").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ties == Seq(0L, 3L, 6L, 9L))
+  }
+
+  test("PREWHERE folds into a WHERE that follows a comment holding a paren") {
+    lexFixture()
+    val ids = spark.sql("SELECT id FROM lex_t PREWHERE k = 1 -- (\n" +
+      "WHERE g = 0 ORDER BY id DESC").collect().map(_.getLong(0)).toSeq
+    assert(ids == Seq(10L, 4L))
+  }
+
+  test("* REPLACE rewrites each item to EXCEPT + the new expression") {
+    lexFixture()
+    val r = spark.sql("SELECT * REPLACE (k * 10 AS k, concat('(', g) AS g) " +
+      "FROM lex_t WHERE id = 4")
+    // replaced columns move to the end (the documented deviation)
+    assert(r.columns.toSeq == Seq("id", "k", "g"))
+    val row = r.collect().head
+    assert((row.getLong(0), row.getLong(1), row.getString(2)) ==
+      ((4L, 10L, "(0")))
+  }
 }

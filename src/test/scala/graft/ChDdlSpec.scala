@@ -452,4 +452,24 @@ class ChDdlSpec extends SparkSpec {
         err.getMessage.toLowerCase.contains("not found"))
     } finally spark.conf.unset("spark.graft.warehouse")
   }
+
+  test("a backquoted column name holding a paren parses") {
+    val p = ChDdl.parseCreateTable(
+      "CREATE TABLE bq_paren (`k(` UInt8, `d` Date) " +
+        "ENGINE = MergeTree ORDER BY (`k(`, d)").get
+    assert(p.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("k(", ShortType), ("d", DateType)))
+    assert(p.orderKey == Seq("k(", "d"))
+  }
+
+  test("a -- inside a DDL string literal is not a comment") {
+    val p = ChDdl.parseCreateTable(
+      "CREATE TABLE lit_dash (`d` Date COMMENT 'a--b', `n` UInt32) " +
+        "ENGINE = MergeTree ORDER BY d -- a real comment (\n" +
+        "SETTINGS index_granularity = 8192")
+    assert(p.isDefined)
+    assert(p.get.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("d", DateType), ("n", LongType)))
+    assert(p.get.orderKey == Seq("d"))
+  }
 }
