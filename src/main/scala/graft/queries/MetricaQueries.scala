@@ -516,12 +516,19 @@ object MetricaQueries {
   // parameter; the injected parser substitutes it and applies the CH
   // bracket-index rewrite (gated on the placeholder presence).
 
+  /** The reference checkout: the recipe's README, `ddl/` and `csv/`. */
+  private[graft] val referenceRoot: java.nio.file.Path =
+    java.nio.file.Paths.get("/root/reference")
+
+  /** The README whose chart queries q102/q103 run verbatim. */
+  private[graft] val referenceReadme: java.nio.file.Path =
+    referenceRoot.resolve("README.md")
+
   /** The fenced ```sql block of the README containing `anchor`, table
     * stand-in replaced with `view`.
     */
   private def readmeChartSql(anchor: String, view: String): String = {
-    val text = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/README.md")),
+    val text = new String(java.nio.file.Files.readAllBytes(referenceReadme),
       java.nio.charset.StandardCharsets.UTF_8)
     val sql = """(?s)```sql\s*\n(.*?)```""".r.findAllMatchIn(text)
       .map(_.group(1))

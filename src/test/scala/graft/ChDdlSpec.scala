@@ -16,7 +16,7 @@ class ChDdlSpec extends SparkSpec {
 
   private def refDdl(file: String): String =
     new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/reference/ddl/$file")), "UTF-8")
+      referenceFile(s"ddl/$file")), "UTF-8")
       .replace("<id трансфера>", "x1")
 
   test("the reference hits.sql parses to the transcribed 106-col schema") {

@@ -125,6 +125,7 @@ class ParamsSpec extends SparkSpec {
   }
 
   test("README Q1/Q2 run byte-verbatim and match the DataFrame forms") {
+    val readme = referenceFile(MetricaQueries.referenceReadme)
     val q1 = MetricaQueries.q102MetricaQ1Placeholders.fn(spark, "unused")
       .orderBy(col("`ym:s:date`").asc_nulls_last).collect().toSeq
     val q1df = MetricaQueries.q28MetricaQ1.fn(spark, "unused")
@@ -136,8 +137,7 @@ class ParamsSpec extends SparkSpec {
       .collect().toSeq
     assert(q2 == q2df && q2.nonEmpty)
     // the texts really carried the placeholders into the parser
-    val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/README.md")))
+    val raw = new String(java.nio.file.Files.readAllBytes(readme))
     assert(raw.contains("{{interval_from}}"))
   }
 

@@ -19,11 +19,13 @@ package graft
   */
 class ReferenceCensusSpec extends SparkSpec {
 
-  private val readme = new String(java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/README.md")),
+  // read on first use, so that each test cancels on its own where the
+  // checkout is absent instead of the suite aborting at construction
+  private lazy val readme = new String(java.nio.file.Files.readAllBytes(
+    referenceFile(graft.queries.MetricaQueries.referenceReadme)),
     java.nio.charset.StandardCharsets.UTF_8)
 
-  private val sqlBlocks =
+  private lazy val sqlBlocks =
     """(?s)```sql\s*\n(.*?)```""".r.findAllMatchIn(readme)
       .map(_.group(1)).toVector
 
@@ -59,15 +61,14 @@ class ReferenceCensusSpec extends SparkSpec {
   }
 
   test("the dim CSV block matches the shipped dimension file") {
+    val dimCsv = referenceFile("csv/dim_browser_country.csv")
     // the one non-sql fenced block a user copies: the SCD2 dimension
     // rows (README.md csv). The shipped csv file is the authority the
     // q34 entry reads; both must keep describing the same dimension.
     val csv = """(?s)```csv\s*\n(.*?)```""".r.findFirstMatchIn(readme)
     assert(csv.isDefined, "README csv block disappeared")
     assert(csv.get.group(1).contains("BrowserCountry"))
-    val shipped = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/csv/dim_browser_country.csv")),
+    val shipped = new String(java.nio.file.Files.readAllBytes(dimCsv),
       java.nio.charset.StandardCharsets.UTF_8)
     assert(shipped.contains("BrowserCountry") && shipped.contains("ru"))
   }
