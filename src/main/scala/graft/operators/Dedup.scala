@@ -52,17 +52,7 @@ object Dedup {
     val spark = batch.sparkSession
     val inBatch = exactDedup(batch, key, idCol).drop("dup_count")
       .withColumn("__key", key)
-    // store detection by attempting the read (not java.io.File, which
-    // only sees the local filesystem — the store may be object storage).
-    // ONLY the missing-path condition means "no history yet": a corrupt
-    // or unreadable store must propagate, not silently disable all
-    // dedup history and be re-seeded
-    val store =
-      try Some(spark.read.parquet(storeDir).select(col("__key")))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
-      }
+    val store = readStore(spark, storeDir).map(_.select(col("__key")))
     val novel = store.fold(inBatch) { st =>
       // null-safe equality: a NULL key (e.g. fingerprint of NULL text)
       // must match its stored NULL, or the row re-emits every batch
@@ -74,6 +64,27 @@ object Dedup {
     out.select(col("__key"), col(idCol).cast("long").as("__id"))
       .write.mode("append").parquet(storeDir)
     out.drop("__key")
+  }
+
+  /** The parquet history store at `dir`, or None before its first
+    * append. Existence is asked of the session's Hadoop FS (not
+    * java.io.File: the store may be object storage), because the file
+    * source logs a FileNotFoundException stack trace for a missing
+    * path before it fails. The PATH_NOT_FOUND catch covers a store
+    * removed in between; only a missing path means "no history yet" —
+    * a corrupt or unreadable store propagates, never silently disables
+    * all dedup history.
+    */
+  private def readStore(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else
+      try Some(spark.read.parquet(dir))
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "PATH_NOT_FOUND" => None
+      }
   }
 
   /** [[incrementalDedup]] with BLOOM semi-join reduction — identical
@@ -114,12 +125,7 @@ object Dedup {
       .withColumn("__key", key)
       .persist()
     try {
-      val store =
-        try Some(spark.read.parquet(storeDir).select(col("__key")))
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" => None
-        }
+      val store = readStore(spark, storeDir).map(_.select(col("__key")))
       def bloomOf(df: DataFrame): Array[Byte] = {
         val n = math.max(df.count(), 1L)
         val bf = df.select(xxhash64(col("__key")).as("__h"))
@@ -400,13 +406,7 @@ object Dedup {
     def bandKeys(frame: DataFrame): DataFrame =
       bandRows(frame, "__sh", numHashes, bands, col("__id"))
     val batchBands = bandKeys(shingled)
-    def readStore(part: String): Option[DataFrame] =
-      try Some(spark.read.parquet(s"$storeDir/$part"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
-      }
-    val dupIds = readStore("bands").map { sb0 =>
+    val dupIds = readStore(spark, s"$storeDir/bands").map { sb0 =>
       // the hot-bucket cap, on the INDEX side: a band value shared by
       // > maxBucket stored docs is a boilerplate class, not a dedup
       // bucket (the pairsWithinBuckets rationale) — its fan-out would
@@ -418,7 +418,7 @@ object Dedup {
         .withColumnRenamed("__id", "__hist")
       val cands = batchBands.join(sb, Seq("band", "bkey"))
         .select(col("__id"), col("__hist")).distinct()
-      val histSh = readStore("shingles").get
+      val histSh = readStore(spark, s"$storeDir/shingles").get
         .select(col("__id").as("__hist"), col("__sh").as("__sh_b"))
       cands
         .join(shingled.select(col("__id"), col("__sh").as("__sh_a")),

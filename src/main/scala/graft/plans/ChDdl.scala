@@ -104,15 +104,12 @@ object ChDdl {
       """(?:\s+ON\s+CLUSTER\s+\S+)?\s*""" +
       """(?:(\()|AS\s+(?!SELECT\b)`?([\w.]+)`?|(?=ENGINE\b))""").r
 
-  /** Mask literals, strip `-- comments`, balanced-scan the column list
-    * and tail clauses. Returns None when the text is not a CH CREATE
-    * TABLE with an ENGINE clause (Spark DDL stays Spark's).
+  /** Mask literals and comments ([[ChText.mask]]), balanced-scan the
+    * column list and tail clauses. Returns None when the text is not a
+    * CH CREATE TABLE with an ENGINE clause (Spark DDL stays Spark's).
     */
   def parseCreateTable(sqlText: String): Option[Parsed] = {
-    // masked first, so a `--` inside a literal is not a comment
-    val (withComments, lits) = ChText.mask(sqlText)
-    val masked = withComments.linesIterator
-      .map(l => l.replaceAll("--.*$", "")).mkString("\n")
+    val (masked, lits) = ChText.mask(sqlText)
     def unmask(s: String): String = ChText.unmask(s, lits)
     createHead.findFirstMatchIn(masked).flatMap { m =>
       if (!masked.toUpperCase.contains("ENGINE")) None
@@ -291,39 +288,28 @@ object ChDdl {
     Some(StructField(name, dt, nullable))
   }
 
-  private val clauseKws = Seq("ENGINE", "PARTITION BY", "PRIMARY KEY",
-    "ORDER BY", "SAMPLE BY", "TTL", "SETTINGS")
+  // the first word of each tail clause -> the clause
+  private val clauseKws = Map("ENGINE" -> "ENGINE",
+    "PARTITION" -> "PARTITION BY", "PRIMARY" -> "PRIMARY KEY",
+    "ORDER" -> "ORDER BY", "SAMPLE" -> "SAMPLE BY", "TTL" -> "TTL",
+    "SETTINGS" -> "SETTINGS")
 
-  /** Slice the DDL tail into its clauses (TTL and SETTINGS parse but
-    * are dropped: execution tuning / the TTL move is
-    * [[graft.sources.Warehouse.tierByTtl]]'s scheduled job).
+  /** Slice the DDL tail into its clauses at their depth-0 keywords (TTL
+    * and SETTINGS parse but are dropped: execution tuning / the TTL
+    * move is [[graft.sources.Warehouse.tierByTtl]]'s scheduled job).
     */
   private def splitClauses(tail: String): Map[String, String] = {
-    val upper = tail.toUpperCase
-    val hits = clauseKws.flatMap { kw =>
-      var idx = upper.indexOf(kw)
-      val found = Seq.newBuilder[(Int, String)]
-      while (idx >= 0) {
-        // '_' is a word char: ENGINE inside a snake_case SETTINGS key
-        // (engine_flag = 1) must not start a clause
-        def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
-        val before = if (idx == 0) ' ' else upper.charAt(idx - 1)
-        val afterI = idx + kw.length
-        val after = if (afterI >= upper.length) ' ' else upper.charAt(afterI)
-        if (!wordChar(before) && !wordChar(after) &&
-          ChText.depth0(tail, idx)) found += ((idx, kw))
-        idx = upper.indexOf(kw, idx + 1)
-      }
-      found.result()
-    }.sortBy(_._1)
-    hits.zipWithIndex.map { case ((pos, kw), i) =>
-      val end = if (i + 1 < hits.length) hits(i + 1)._1 else tail.length
-      // NOT String.trim: it strips every char ≤ U+0020, including the
-      //  literal-mask sentinel — a clause ENDING with a masked
-      // string literal (TTL ... TO DISK '<path>') lost its closing
-      // sentinel and could never unmask (found live by the TTL DDL)
-      kw -> tail.substring(pos + kw.length, end)
-        .replaceAll("""^\s+|\s+$""", "")
+    def next(from: Int) = ChText.depth0Word(tail, from, clauseKws.keySet)
+    val starts = Iterator.iterate(next(0))(i => next(i + 1))
+      .takeWhile(i => i < tail.length && tail.charAt(i) != ')').toSeq
+    starts.zip(starts.drop(1) :+ tail.length).map { case (pos, end) =>
+      val kw = clauseKws(tail.substring(pos)
+        .takeWhile(c => c.isLetterOrDigit || c == '_').toUpperCase)
+      // ChText.strip, not String.trim: a clause ENDING with a masked
+      // string literal (TTL ... TO DISK '<path>') must keep its
+      // closing sentinel to unmask
+      kw -> ChText.strip(tail.substring(pos, end)
+        .replaceFirst("(?i)^" + kw.replace(" ", "\\s+"), ""))
     }.toMap
   }
 }

@@ -59,16 +59,18 @@ object ChProjections {
     */
   private[plans] def parseBody(table: String, name: String, body: String,
       path: String): ProjDef = {
-    val gi = """(?is)\bGROUP\s+BY\b""".r.findFirstMatchIn(body).getOrElse(
+    val (masked, lits) = ChText.mask(body)
+    val gi = ChText.depth0Word(masked, 0, Set("GROUP"))
+    val keyList = masked.substring(gi).replaceFirst("(?is)^GROUP\\s+BY\\b", "")
+    if (keyList.length == masked.length - gi) // nothing stripped
       throw new IllegalArgumentException(
-        s"ADD PROJECTION $name: body needs GROUP BY")).start
-    val selectPart = body.substring(0, gi)
-      .replaceFirst("(?is)^\\s*SELECT\\s+", "")
-    val keys = body.substring(gi).replaceFirst("(?is)^\\s*GROUP\\s+BY\\s+", "")
-      .split(",").map(_.trim.replace("`", "")).filter(_.nonEmpty).toSeq
+        s"ADD PROJECTION $name: body needs GROUP BY")
+    val keys = ChText.splitTop(keyList).map(_.replace("`", ""))
+    val items = ChText.splitTop(masked.substring(0, gi)
+      .replaceFirst("(?is)^\\s*SELECT\\s+", ""))
     val aggRe = """(?i)^(sum|min|max)\s*\(\s*`?([\w]+)`?\s*\)$""".r
     val cntRe = """(?i)^count\s*\(\s*(?:\*|1)?\s*\)$""".r
-    val aggs = selectPart.split(",").map(_.trim).filter(_.nonEmpty).flatMap {
+    val aggs = items.flatMap {
       case aggRe(fn, c) => Some(fn.toLowerCase -> c)
       case cntRe() => Some("count" -> "")
       case bare if bare.replace("`", "").matches("""[\w]+""") =>
@@ -77,9 +79,9 @@ object ChProjections {
           s"ADD PROJECTION $name: bare column $b must be a GROUP BY key")
         None
       case other => throw new IllegalArgumentException(
-        s"ADD PROJECTION $name: unsupported item '$other' " +
-          "(keys, sum/min/max(col), count())")
-    }.toSeq
+        s"ADD PROJECTION $name: unsupported item " +
+          s"'${ChText.unmask(other, lits)}' (keys, sum/min/max(col), count())")
+    }
     require(aggs.nonEmpty, s"ADD PROJECTION $name: no aggregates")
     ProjDef(table, name, keys, aggs, path)
   }

@@ -136,10 +136,16 @@ case class ChSystemRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case MapType(k, v, _) => s"Map(${chType(k)}, ${chType(v)})"
       case other => other.catalogString
     }
+    val conf = spark.sessionState.newHadoopConf()
     val rows = graft.sources.Catalog.bindings.flatMap { b =>
+      // a binding whose storage is gone lists no columns; asking the
+      // file source would log a FileNotFoundException stack trace
       val schema =
-        try spark.read.format(b.format).load(b.path).schema
-        catch { case _: Exception => new StructType() }
+        try {
+          val p = new org.apache.hadoop.fs.Path(b.path)
+          if (!p.getFileSystem(conf).exists(p)) new StructType()
+          else spark.read.format(b.format).load(b.path).schema
+        } catch { case _: Exception => new StructType() }
       schema.fields.zipWithIndex.map { case (f, i) =>
         ("default", b.name, f.name, (i + 1).toLong, chType(f.dataType))
       }

@@ -1,33 +1,35 @@
 package graft.plans
 
 /** How ClickHouse SQL text is lexed: the one place the dialect front
-  * end ([[TotalsParser]], [[ChDdl]], [[ChMatView]], [[YqlText]]) learns
-  * what a string literal is, what paren depth 0 means and where a
-  * top-level comma is.
+  * end ([[TotalsParser]], [[ChDdl]], [[ChMatView]], [[ChProjections]],
+  * [[YqlText]]) learns what a string literal and a comment are, what
+  * paren depth 0 means and where a top-level comma is.
   *
   * Lexical rules, shared by every function here:
-  *  - A string literal is `'…'` with `''` as the escaped quote (the
-  *    regex `'(?:[^']|'')*'`; a backslash does not escape, and a quote
-  *    that never closes is an ordinary character). [[mask]] replaces
-  *    each literal with the placeholder `\u0001N\u0001`, a byte no
-  *    parseable SQL contains, so the clause regexes that run over
-  *    masked text never fire inside a literal; [[unmask]] restores them.
-  *  - A backquoted identifier `` `…` `` and a comment, `--` to the end
-  *    of the line or `/* … */`, are stepped over whole: the parens,
-  *    commas, quotes and words inside them do not count. A `/*+ hint */`
-  *    is such a comment; nothing here removes or rewrites it, so it
-  *    reaches Spark's parser unchanged. The opening of an unclosed
+  *  - A string literal is `'…'` in which a backslash escapes the next
+  *    character and `''` is an escaped quote (the regex
+  *    `'(?:[^'\\]|\\.|'')*'`, CH's and Spark's rule); a quote that
+  *    never closes is an ordinary character.
+  *  - A comment is `--` to the end of the line or `/* … */`. A
+  *    `/*+ hint */` is an optimizer hint, not a comment.
+  *  - A backquoted identifier `` `…` `` is one token. The parens,
+  *    commas, quotes and words inside a literal, comment, hint or
+  *    backquoted identifier do not count. The opening of an unclosed
   *    backquote or block comment is an ordinary character.
   *  - Depth counts the `(` and `)` outside those tokens. A word is a run
   *    of letters, digits and `_` that starts with a letter or `_` and
   *    does not follow a word character, `.` or a backquote.
   *
-  * The clause regexes that callers run over masked text still match
-  * keywords inside comments; only the scans here skip them.
+  * [[mask]] is the view every clause regex runs over: each literal and
+  * each hint becomes the placeholder `\u0001N\u0001` (a byte no
+  * parseable SQL contains) and each comment becomes one space, so no
+  * clause regex ever fires inside a literal or a comment. [[unmask]]
+  * restores literals and hints byte for byte; comments stay gone.
   */
 private[graft] object ChText {
 
-  private val literal = java.util.regex.Pattern.compile("'(?:[^']|'')*'")
+  private val literal =
+    java.util.regex.Pattern.compile("""(?s)'(?:[^'\\]|\\.|'')*'""")
   private val placeholder = """\x01(\d+)\x01""".r
 
   /** The end of the literal, backquoted identifier or comment that
@@ -75,8 +77,9 @@ private[graft] object ChText {
     s.length
   }
 
-  /** `s` with every string literal replaced by its placeholder, and the
-    * literals in placeholder order.
+  /** `s` with every string literal and hint replaced by its
+    * placeholder and every comment by one space, and the literals and
+    * hints in placeholder order.
     */
   def mask(s: String): (String, IndexedSeq[String]) = {
     val out = new StringBuilder(s.length)
@@ -87,19 +90,20 @@ private[graft] object ChText {
       val j = skip(s, i)
       if (j == i) { out += s.charAt(i); i += 1 }
       else {
-        if (s.charAt(i) == '\'') {
+        if (s.charAt(i) == '\'' || s.startsWith("/*+", i)) {
           lits += s.substring(i, j)
           out.append('\u0001').append(n).append('\u0001')
           n += 1
-        } else out ++= s.substring(i, j)
+        } else if (s.charAt(i) == '`') out ++= s.substring(i, j)
+        else out += ' '
         i = j
       }
     }
     (out.toString, lits.result())
   }
 
-  /** Put back the literals [[mask]] took out (placeholders may have been
-    * moved or copied meanwhile).
+  /** Put back the literals and hints [[mask]] took out (placeholders
+    * may have been moved or copied meanwhile).
     */
   def unmask(s: String, lits: Seq[String]): String =
     if (lits.isEmpty) s

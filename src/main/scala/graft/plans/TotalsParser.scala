@@ -39,16 +39,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    with the wrong meaning or fails only at analysis: ARRAY JOIN,
   *    FINAL, ASOF, GLOBAL, ANY/ALL, SEMI/ANTI, `numbers()`, quantile,
   *    parameterized aggregates, DISTINCT ON, quoted-unit `dateDiff`
-  *    and PASTE JOIN. A pre-rewritten text the delegate rejects falls
-  *    back to the original text.
+  *    and PASTE JOIN. A pre-rewrite shape fails closed: when the
+  *    delegate rejects the rewritten text, its ParseException is
+  *    raised (the original text would parse with the wrong meaning).
   *  - `INSERT INTO`/`DROP TABLE`/`TRUNCATE TABLE` on a registered
   *    binding, DataLens `{{params}}` and, in a text that carried
   *    params, CH `arr[i]` indexing are handled before the delegate too.
   *
-  * Every rewrite reads the text through [[ChText]]: string literals
-  * are masked first, so a literal containing these phrases is never
-  * rewritten, and paren depth and top-level commas skip literals,
-  * backquoted identifiers and comments.
+  * Every rewrite reads the text through [[ChText.mask]]: string
+  * literals and hints are masked and comments are blanked first, so a
+  * literal or comment containing these phrases is never rewritten,
+  * and paren depth and top-level commas skip literals and backquoted
+  * identifiers.
   */
 class TotalsParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -181,14 +183,11 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
         val rest = text.substring(m.end)
         val at = ChText.depth0Word(rest, 0, prewhereStops)
         val folded =
-          if (rest.regionMatches(true, at, "WHERE", 0, 5)) {
-            val pred = rest.substring(0, at).trim
-            // a trailing `-- comment` must not swallow the closing paren
-            val eol =
-              if (pred.lastIndexOf("--") > pred.lastIndexOf('\n')) "\n" else ""
-            text.substring(0, m.start) + s"WHERE ($pred$eol) AND " +
+          if (rest.regionMatches(true, at, "WHERE", 0, 5))
+            text.substring(0, m.start) +
+              s"WHERE (${rest.substring(0, at).trim}) AND " +
               rest.substring(at + "WHERE".length)
-          } else text.substring(0, m.start) + "WHERE" + rest
+          else text.substring(0, m.start) + "WHERE" + rest
         rewritePrewhere(folded) // each pass consumes one PREWHERE
     }
 
@@ -327,9 +326,8 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   // `FROM t FINAL` parses as an alias, `t ARRAY JOIN e` as an
   // alias + condition-less join — so the rewrite-on-parse-failure
   // route never fires for them. [[parsePlan]] pre-rewrites when (and
-  // only when) the literal-masked text contains one of these shapes;
-  // if the rewritten text fails to parse, the original text proceeds
-  // down the normal path untouched.
+  // only when) the masked text contains one of these shapes; if the
+  // rewritten text fails to parse, that failure is raised.
 
   private val arrayJoinKw = """(?i)\b(LEFT\s+)?ARRAY\s+JOIN\b""".r
   // a table reference (possibly backticked / dotted) followed by FINAL
@@ -693,8 +691,8 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
         Some(ChRenameTableCommand(a, b, exchange = true))
       case createMvRe(name0, mid, select) =>
         val name = name0.substring(name0.lastIndexOf('.') + 1)
-        Some(ChCreateMvCommand(name,
-          """(?i)\bPOPULATE\b""".r.findFirstIn(mid).isDefined,
+        Some(ChCreateMvCommand(name, mid.regionMatches(true,
+          ChText.depth0Word(mid, 0, Set("POPULATE")), "POPULATE", 0, 8),
           ChText.unmask(select, lits)))
       case _ => None
     }
@@ -799,9 +797,8 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
   // QUALIFY). Depth-0 occurrences only — a subquery QUALIFY is out
   // of contract (parses to the same error it always did).
   private val qualifyKw = """(?i)\bQUALIFY\b""".r
-  private val qualifyTail =
-    """(?i)\b(ORDER|LIMIT|UNION|SETTINGS|FORMAT)\b""".r
-  private val qualifyFrom = """(?i)\bFROM\b""".r
+  private val qualifyStops =
+    Set("ORDER", "LIMIT", "UNION", "SETTINGS", "FORMAT")
 
   // ---------------------------------------------------------------
   // CH `PASTE JOIN` (23.11+): horizontal concatenation of two result
@@ -884,15 +881,13 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     val subL = text.substring(openL + 1, closeL)
     val subR = text.substring(openR + 1, closeR)
     def orderKeys(sub: String, side: String): String = {
-      val hit = """(?is)\bORDER\s+BY\b""".r.findAllMatchIn(sub)
-        .find(o => ChText.depth0(sub, o.start))
-        .getOrElse(pasteErr(s"the $side side has no top-level ORDER BY" +
-          " — row position must be defined"))
-      val tail = sub.substring(hit.end)
-      val stop = """(?is)\b(LIMIT|OFFSET|SETTINGS|FORMAT)\b""".r
-        .findAllMatchIn(tail).find(s => ChText.depth0(tail, s.start))
-        .map(_.start).getOrElse(tail.length)
-      val keys = tail.substring(0, stop).trim
+      val order = ChText.depth0Word(sub, 0, Set("ORDER"))
+      val tail = sub.substring(order).replaceFirst("(?is)^ORDER\\s+BY\\b", "")
+      if (tail.length == sub.length - order) // nothing stripped
+        pasteErr(s"the $side side has no top-level ORDER BY" +
+          " — row position must be defined")
+      val keys = tail.substring(0, ChText.depth0Word(tail, 0,
+        Set("LIMIT", "OFFSET", "SETTINGS", "FORMAT"))).trim
       if (keys.isEmpty) pasteErr(s"the $side side's ORDER BY has no keys")
       // ordinal keys (ORDER BY 1 DESC) are positional in the
       // subquery's own ORDER BY, but transplanted into a
@@ -929,13 +924,16 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     // old patch handled only a bare `*`) each gain
     // `EXCEPT (__paste_rn)`. A star qualified by something OTHER than
     // the two paste aliases cannot carry the helper and is left alone.
-    val selList = """(?is)\bSELECT\b""".r.findAllMatchIn(text)
-      .filter(s => s.end < openL && ChText.depth0(text, s.start))
+    // the owner's select list: from the last depth-0 SELECT before the
+    // left side to the depth-0 FROM after it
+    def selectAt(from: Int) = ChText.depth0Word(text, from, Set("SELECT"))
+    val selList = Iterator.iterate(selectAt(0))(s => selectAt(s + 6))
+      .takeWhile(s => s < openL && text.regionMatches(true, s, "SELECT", 0, 6))
       .toList.lastOption.flatMap { s =>
-        """(?is)\bFROM\b""".r.findAllMatchIn(text)
-          .find(f => f.start > s.end && f.start < openL &&
-            ChText.depth0(text, f.start))
-          .map(f => (s.end, f.start))
+        val f = ChText.depth0Word(text, s + 6, Set("FROM"))
+        if (f < openL && text.regionMatches(true, f, "FROM", 0, 4))
+          Some((s + 6, f))
+        else None
       }
     def patchStars(listText: String): String = {
       val qualStar =
@@ -984,21 +982,15 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
       case Some(m) =>
         val head = text.substring(0, m.start)
         val after = text.substring(m.end)
-        val (pred0, tail) = qualifyTail.findAllMatchIn(after)
-          .find(t => ChText.depth0(after, t.start)) match {
-          case Some(t) =>
-            (after.substring(0, t.start), after.substring(t.start))
-          case None => (after, "")
-        }
-        val pred = pred0.replaceAll("[;\\s]+$", "")
-        qualifyFrom.findAllMatchIn(head)
-          .find(f => ChText.depth0(head, f.start)) match {
-          case None => text
-          case Some(f) =>
-            val inner = head.substring(0, f.start) +
-              s", ($pred) AS __graft_q " + head.substring(f.start)
-            s"SELECT * EXCEPT (__graft_q) FROM ($inner) __graft_qsub " +
-              s"WHERE __graft_q $tail"
+        val t = ChText.depth0Word(after, 0, qualifyStops)
+        val pred = after.substring(0, t).replaceAll("[;\\s]+$", "")
+        val f = ChText.depth0Word(head, 0, Set("FROM"))
+        if (!head.regionMatches(true, f, "FROM", 0, 4)) text
+        else {
+          val inner = head.substring(0, f) +
+            s", ($pred) AS __graft_q " + head.substring(f)
+          s"SELECT * EXCEPT (__graft_q) FROM ($inner) __graft_qsub " +
+            s"WHERE __graft_q ${after.substring(t)}"
         }
     }
   }
@@ -1077,9 +1069,11 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
     val afterReplace = rewriteStarReplace(afterNumbers)
     val rewritten = settings.replaceAllIn(afterReplace, "")
     val finalText = ChText.unmask(rewritten, lits)
-    if (finalText == sqlText && lbWrap.isEmpty && fillWrap.isEmpty &&
-      sampleWrap.isEmpty && finalWrap.isEmpty && asofWrap.isEmpty &&
-      anyWrap.isEmpty && tiesWrap.isEmpty && doWrap.isEmpty) None
+    // unchanged up to the blanked comments: nothing to rewrite
+    if (finalText == ChText.unmask(masked, lits) && lbWrap.isEmpty &&
+      fillWrap.isEmpty && sampleWrap.isEmpty && finalWrap.isEmpty &&
+      asofWrap.isEmpty && anyWrap.isEmpty && tiesWrap.isEmpty &&
+      doWrap.isEmpty) None
     else Some(Rewritten(finalText, plan => {
       // final innermost (compaction applies at the relation before
       // anything else reads it), then asof/any (their Joins sit above
@@ -1126,30 +1120,26 @@ class TotalsParser(delegate: ParserInterface) extends ParserInterface {
 
   /** ARRAY JOIN / FINAL texts parse SUCCESSFULLY in Spark's grammar
     * (as aliases/joins) with the wrong meaning, so when those shapes
-    * are present the rewrite runs FIRST; a rewritten text the
-    * delegate rejects falls back to the untouched original.
+    * are present the rewrite runs FIRST and fails closed: a rewritten
+    * text the delegate rejects raises its own ParseException, never
+    * falls back to the original.
     */
   private def parseWith[T](sqlText: String,
-      parse: String => T, wrap: (Rewritten, T) => T): T = {
-    val pre: Option[T] =
-      if (!needsPreRewrite(sqlText)) None
-      else rewrite(sqlText).flatMap { rw =>
-        try Some(wrap(rw, parse(rw.text)))
-        catch { case _: ParseException => None }
-      }
-    pre.getOrElse {
-      try parse(sqlText)
-      catch {
-        case e: ParseException =>
-          rewrite(sqlText) match {
-            case Some(rw) =>
-              try wrap(rw, parse(rw.text))
-              catch { case _: ParseException => throw e }
-            case None => throw e
-          }
-      }
+      parse: String => T, wrap: (Rewritten, T) => T): T =
+    (if (needsPreRewrite(sqlText)) rewrite(sqlText) else None) match {
+      case Some(rw) => wrap(rw, parse(rw.text))
+      case None =>
+        try parse(sqlText)
+        catch {
+          case e: ParseException =>
+            rewrite(sqlText) match {
+              case Some(rw) =>
+                try wrap(rw, parse(rw.text))
+                catch { case _: ParseException => throw e }
+              case None => throw e
+            }
+        }
     }
-  }
 
   /** Mutation statements parse to the command node directly — they
     * have no delegate-parseable form to rewrite into.

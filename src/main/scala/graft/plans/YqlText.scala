@@ -162,8 +162,18 @@ case class YqlScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
         YqlText.requireSupported(spec.format)
         val path = conn.path.stripSuffix("/") + "/" +
           spec.glob.stripPrefix("/")
+        // the glob resolves here: handed a single unmatched pattern, the
+        // file source logs a FileNotFoundException stack trace while it
+        // looks for a streaming metadata directory. A glob matching
+        // nothing reads as itself and fails with PATH_NOT_FOUND.
+        val hp = new org.apache.hadoop.fs.Path(path)
+        val paths = Option(hp.getFileSystem(spark.sessionState.newHadoopConf())
+          .globStatus(hp)).toSeq.flatten.map(_.getPath.toString) match {
+          case Seq() => Seq(path)
+          case found => found
+        }
         val df =
-          if (spec.format == "parquet") spark.read.parquet(path)
+          if (spec.format == "parquet") spark.read.parquet(paths: _*)
           else {
             val schema = spec.schema.getOrElse(
               throw new IllegalArgumentException(
@@ -187,7 +197,7 @@ case class YqlScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
             spark.read.schema(schema)
               .option("header", "true")
               .option("escape", "\"")
-              .csv(path)
+              .csv(paths: _*)
           }
         df.queryExecution.analyzed
       case u: UnresolvedRelation

@@ -397,4 +397,37 @@ class ChClausesSpec extends SparkSpec {
     assert((row.getLong(0), row.getLong(1), row.getString(2)) ==
       ((4L, 10L, "(0")))
   }
+
+  // the fin_t fixture reads 450 raw (400 / 50 per id) and 250 collapsed
+  // (200 / 50): a keyword inside a comment or behind a backslash-escaped
+  // quote must not change which one a query gets
+  private def perId(sql: String): Seq[(Long, Double)] =
+    spark.sql(sql).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .toSeq.sortBy(_._1)
+
+  private val collapsedPerId = Seq((1L, 200.0), (2L, 50.0))
+
+  test("WITH TOTALS inside a line comment keeps FINAL") {
+    finalFixture("fin_t")
+    assert(perId("SELECT id, sum(value) AS s FROM fin_t FINAL " +
+      "GROUP BY id -- maybe WITH TOTALS later") == collapsedPerId)
+  }
+
+  test("WITH TOTALS inside a block comment keeps FINAL") {
+    finalFixture("fin_t")
+    assert(perId("SELECT id, sum(value) AS s FROM fin_t FINAL " +
+      "GROUP BY id /* no WITH TOTALS */") == collapsedPerId)
+  }
+
+  test("FROM t FINAL inside a comment leaves a plain read raw") {
+    finalFixture("fin_t")
+    assert(spark.sql("SELECT sum(value) AS s FROM fin_t " +
+      "-- not FROM fin_t FINAL").collect().head.getDouble(0) == 450.0)
+  }
+
+  test("a backslash-escaped quote keeps WITH TOTALS inside its literal") {
+    finalFixture("fin_t")
+    assert(perId("SELECT id, sum(value) AS s FROM fin_t FINAL GROUP BY id " +
+      "HAVING max('x\\'') <> ' WITH TOTALS'") == collapsedPerId)
+  }
 }

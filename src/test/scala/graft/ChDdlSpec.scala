@@ -472,4 +472,65 @@ class ChDdlSpec extends SparkSpec {
       Seq(("d", DateType), ("n", LongType)))
     assert(p.get.orderKey == Seq("d"))
   }
+
+  test("a block comment after a column type is not part of the type") {
+    val p = ChDdl.parseCreateTable(
+      "CREATE TABLE cmt_type (`k` UInt64 /* key */, `d` Date) " +
+        "ENGINE = MergeTree ORDER BY k")
+    assert(p.get.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("k", LongType), ("d", DateType)))
+  }
+
+  test("a backslash-escaped quote stays inside its DDL literal") {
+    val p = ChDdl.parseCreateTable(
+      "CREATE TABLE esc_default (`s` String DEFAULT 'it\\'s, (x', " +
+        "`n` UInt8) ENGINE = MergeTree ORDER BY n")
+    assert(p.get.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("s", StringType), ("n", ShortType)))
+  }
+
+  test("a line comment after an MV select item is not part of the next") {
+    val ps = graft.plans.ChMatView.parseSelect(
+      "SELECT toMonday(d) AS wk, -- the day\n" +
+        "uniqState(uid) AS u FROM mv_src GROUP BY wk")
+    assert(ps.groupItems == Seq(("toMonday(d)", "wk")))
+    assert(ps.aggItems.map(a => (a.kind, a.argSql, a.alias)) ==
+      Seq(("uniq", "uid", "u")))
+    assert(ps.srcTable == "mv_src")
+  }
+
+  test("a FROM inside a block comment of an MV select is not a clause") {
+    val ps = graft.plans.ChMatView.parseSelect(
+      "SELECT toMonday(d) AS wk /* not FROM other */, " +
+        "uniqState(uid) AS u FROM mv_src GROUP BY wk")
+    assert(ps.groupItems == Seq(("toMonday(d)", "wk")))
+    assert(ps.aliasesInOrder == Seq("wk", "u"))
+    assert(ps.srcTable == "mv_src")
+  }
+
+  test("comments inside an ADD PROJECTION body are not items or clauses") {
+    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_projcmt"
+    FsUtil.rmTree(root)
+    spark.conf.set("spark.graft.warehouse", root)
+    try {
+      spark.sql("""
+        CREATE TABLE proj_cmt (`k` UInt32, `z` UInt32, `x` Int64, `d` Date)
+        ENGINE = MergeTree PARTITION BY toMonday(d) ORDER BY (k)""")
+      Seq((1L, 2L, 3L)).toDF("k", "z", "x")
+        .createOrReplaceTempView("proj_cmt_src")
+      spark.sql("INSERT INTO proj_cmt " +
+        "SELECT k, z, x, DATE '2024-01-02' AS d FROM proj_cmt_src")
+      spark.sql("ALTER TABLE proj_cmt ADD PROJECTION p_list " +
+        "(SELECT k, /* a, b */ sum(x) GROUP BY k)")
+      spark.sql("ALTER TABLE proj_cmt ADD PROJECTION p_group " +
+        "(SELECT k /* GROUP BY z */, sum(x) GROUP BY k)")
+      Seq("p_list", "p_group").foreach { n =>
+        val d = graft.plans.ChProjections.get("proj_cmt", n).get
+        assert((d.keys, d.aggs) == ((Seq("k"), Seq(("sum", "x")))), n)
+      }
+    } finally {
+      spark.conf.unset("spark.graft.warehouse")
+      graft.plans.ChProjections.clear()
+    }
+  }
 }

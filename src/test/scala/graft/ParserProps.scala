@@ -32,10 +32,11 @@ object ParserProps extends Properties("parser") {
       val spark = SparkSpec.spark
       val quoted = lit.replace("'", "''")
       // a CH clause in the text forces the full rewrite machinery to
-      // run around the literal
+      // run around the literal; the same fragments inside a block and a
+      // line comment must fire nothing either
       val out = spark.sql(
-        s"SELECT '$quoted' AS s, count(1) AS n FROM range(7) " +
-          "GROUP BY 1 WITH TOTALS ORDER BY s NULLS LAST LIMIT 0, 5")
+        s"SELECT '$quoted' AS s /* $lit */, count(1) AS n FROM range(7) " +
+          s"-- $lit\nGROUP BY 1 WITH TOTALS ORDER BY s NULLS LAST LIMIT 0, 5")
         .collect()
       (out.length == 2) :| s"rows: ${out.length}" &&
         (out.head.getString(0) == lit) :| s"got '${out.head.getString(0)}'"
