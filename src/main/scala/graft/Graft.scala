@@ -194,6 +194,63 @@ object Graft {
     } else df.localCheckpoint()
   }
 
+  /** The scratch directory a registered query or fixture keeps its
+    * intermediate data in, for data dir `dir`:
+    * `<java.io.tmpdir>/graft_<tag>_<basename(dir)>_<hex hash of dir's
+    * absolute path>`. The hash keeps two data dirs that share a
+    * basename (`…/testdata/sf0.1`, `…/scratch/sf0.1`) apart, so JVMs
+    * running over different data dirs never share a directory. Two
+    * runs over the SAME dir do share it.
+    */
+  def scratchPath(dir: String, tag: String): String = {
+    val f = new java.io.File(dir)
+    scratchPath(s"${tag}_${f.getName}_" +
+      Integer.toHexString(f.getAbsolutePath.hashCode))
+  }
+
+  /** `<java.io.tmpdir>/graft_<tag>`, keyed on no data dir, so every JVM
+    * shares it. Only for data with no data dir to key on: q51's export
+    * and the Metrica visits fixture, whose DuckDB oracles read the
+    * files by a literal path after the JVM exits (the oracle SQL is
+    * fixed text that cannot name a data dir), and the DDL warehouse
+    * default.
+    */
+  def scratchPath(tag: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_$tag"
+
+  /** [[scratchPath]], emptied: a fresh run starts from an empty
+    * directory, whatever an earlier run left there.
+    */
+  def scratchDir(dir: String, tag: String): String =
+    emptied(scratchPath(dir, tag))
+
+  /** The keyless [[scratchPath]], emptied. */
+  def scratchDir(tag: String): String = emptied(scratchPath(tag))
+
+  /** [[scratchPath]] of a fixture built once per JVM: the first call
+    * for a path empties it and runs `build` on it under `built`'s lock;
+    * the path joins `built` only once `build` returns, so a caller never
+    * reads a half-built fixture and a failed build is retried.
+    */
+  def scratchFixture(dir: String, tag: String,
+      built: scala.collection.mutable.Set[String])(
+      build: String => Unit): String = {
+    val p = scratchPath(dir, tag)
+    built.synchronized {
+      if (!built.contains(p)) {
+        build(emptied(p))
+        built += p
+      }
+    }
+    p
+  }
+
+  private def emptied(p: String): String = {
+    FsUtil.rmTree(p)
+    new java.io.File(p).mkdirs()
+    p
+  }
+
   /** ISO date / date-time as a session-local (UTC) timestamp string. */
   private def isoLocal(iso: String): String =
     if (iso.length == 10) iso + " 00:00:00" else iso.replace("T", " ")

@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is printed on stderr and recorded in verify_failures.json
+  * (entry → message; `{}` when all ran); the run goes on and the exit
+  * code stays 0.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
@@ -12,11 +15,14 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only.toSet).toMap
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -31,9 +37,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      json(failures))
     spark.stop()
   }
 }

@@ -243,6 +243,14 @@ object ChDdl {
     })
   }
 
+  /** The root CREATE TABLE and CREATE MATERIALIZED VIEW keep their
+    * data under: `spark.graft.warehouse`, by default the keyless
+    * scratch path `<tmp>/graft_warehouse` (DDL names no data dir).
+    */
+  private[plans] def warehouseRoot(spark: SparkSession): String =
+    spark.conf.getOption("spark.graft.warehouse")
+      .getOrElse(graft.Graft.scratchPath("warehouse"))
+
   /** Recompute the (sign, version) engine params for [[stamp]] from a
     * Parsed — mirrors the ENGINE dispatch in the parser.
     */
@@ -382,8 +390,7 @@ case class ChCreateTableCommand(parsed: ChDdl.Parsed)
         if (!path.contains("://")) new java.io.File(path).mkdirs()
         sb
       case None =>
-        val root = spark.conf.getOption("spark.graft.warehouse")
-          .getOrElse(s"${sys.props("java.io.tmpdir")}/graft_warehouse")
+        val root = ChDdl.warehouseRoot(spark)
         // RENAME/EXCHANGE move names, not directories — a re-created
         // name whose derived path is now OWNED by a different table
         // (the blue-green cycle's second round) must refuse loudly,

@@ -12,8 +12,8 @@ import graft.functions.{ch, url}
   * builder delegates to the corresponding `graft.functions.ch`
   * combinator via the Column↔Expression bridge — the SQL surface and
   * the Scala API cannot drift apart because they are the same
-  * expressions. Registered by [[GraftExtensions]] (build-time sessions)
-  * and [[NativeHashes.register]] (existing sessions).
+  * expressions. Registered into every session by [[GraftExtensions]],
+  * which [[graft.Graft.tune]] names in `spark.sql.extensions`.
   */
 object ChDialect {
 

@@ -275,11 +275,12 @@ case class ChCreateMvCommand(name: String, populate: Boolean,
 
   override def run(spark: SparkSession): Seq[Row] = {
     val ps = ChMatView.parseSelect(selectSql)
-    val root = spark.conf.getOption("spark.graft.warehouse")
-      .getOrElse(s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-    // dot-prefixed: table names cannot start with '.', so MV state
-    // can never collide with (or clobber) a CREATE TABLE data dir
-    val stateDir = s"$root/.mv_$name"
+    // `mv.<name>`: a CREATE TABLE dir is named by the part of the
+    // table name after its last '.', so it never holds a '.' and can
+    // never collide with (or clobber) MV state. Not dot- or
+    // underscore-prefixed: the file source ignores such a root as
+    // hidden.
+    val stateDir = s"${ChDdl.warehouseRoot(spark)}/mv.$name"
     // a NEW view starts empty even if an earlier same-named MV left
     // state behind
     val sp = new org.apache.hadoop.fs.Path(stateDir)

@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -132,23 +132,6 @@ object NativeHashes {
   def bloomMightContain(hash: Column, bloomBytes: Array[Byte]): Column =
     GraftSqlBridge.column(BloomMightContainExpr(
       GraftSqlBridge.expression(hash), bloomBytes))
-
-  /** SQL surface: `graft_minhash64(shingles, k)`, `graft_simhash64(toks)`
-    * on an existing session (the extensions route below covers sessions
-    * built with spark.sql.extensions).
-    */
-  def register(spark: SparkSession): Unit = {
-    GraftSqlBridge.registerFunction(spark, "graft_minhash64",
-      args => MinHashSignature64Expr(args.head, args(1) match {
-        case Literal(v: Int, _) => v
-        case other => other.eval().asInstanceOf[Int]
-      }))
-    GraftSqlBridge.registerFunction(spark, "graft_simhash64",
-      args => SimHash64Expr(args.head))
-    ChDialect.functions.foreach { case (name, builder) =>
-      GraftSqlBridge.registerFunction(spark, name, builder)
-    }
-  }
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` injects the

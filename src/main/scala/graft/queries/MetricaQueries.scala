@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QueryDef
+import graft.{Graft, QueryDef}
 import graft.functions.ch._
 import graft.operators.Relational._
 import graft.schemas.Metrica
@@ -33,7 +33,9 @@ import graft.sources.Warehouse
   */
 object MetricaQueries {
 
-  val fixtureDir = "/tmp/graft_metrica/visits"
+  // keyless: the fixture is no function of the data dir, and the
+  // oracle SQL names its files by this literal path
+  val fixtureDir = Graft.scratchPath("metrica") + "/visits"
 
   private val utms = Seq("google", "yandex", "newsletter")
 
@@ -285,9 +287,7 @@ object MetricaQueries {
     (s, dir) => {
       import graft.streaming.Ingest
       fixture(s) // the oracle reads the raw pairs from the fixture dir
-      val base = s"${sys.props("java.io.tmpdir")}/graft_cdc_q65_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "cdc_q65")
       val raw = rawVisitPairs(s)
       raw.repartition(5).write.mode("overwrite").parquet(s"$base/src")
       val sink = Ingest.Sink(s"$base/wh", "visits", "t65",
@@ -404,7 +404,6 @@ object MetricaQueries {
   // the cross-engine hash never rides double summation order.
 
   private val goalsBuilt = scala.collection.mutable.Set.empty[String]
-  private val goalsLock = new Object
 
   private def goalsArray(body: String): org.apache.spark.sql.Column = expr(
     s"""CASE WHEN VisitID % 4 = 0 THEN CAST(array() AS ARRAY<BIGINT>)
@@ -412,45 +411,34 @@ object MetricaQueries {
 
   private[graft] def scaledGoalsWarehouse(s: SparkSession,
       dir: String): String = {
-    // keyed by the FULL dir path (hashed), not the basename: two
-    // dirs sharing a basename must never share a cached fixture
-    val out = s"${sys.props("java.io.tmpdir")}/graft_goals_" +
-      new java.io.File(dir).getName + "_" +
-      java.lang.Integer.toHexString(new java.io.File(dir)
-        .getAbsolutePath.hashCode)
-    val tbl = goalsBucketTable(out)
-    goalsLock.synchronized {
-      if (!goalsBuilt.contains(out)) {
-        val base = graft.Graft.table(s, dir, "events").select(
-          col("event_id").as("VisitID"),
-          to_date(col("ts")).as("StartDate"),
-          lit(1L).as("VisitVersion"),
-          lit(1).as("Sign"),
-          col("event_type"),
-          col("value").as("Duration"))
-        val clicks = base.filter(col("event_type") === "click")
-        val pairs = base
-          .unionByName(clicks.withColumn("Sign", lit(-1)))
-          .unionByName(clicks.withColumn("VisitVersion", lit(2L))
-            .withColumn("Duration", col("Duration") * 2))
-          .withColumn("Goals.ID", goalsArray(
-            "transform(sequence(1, CAST(VisitID % 4 AS INT)), g -> VisitID * 10 + g)"))
-          .withColumn("Goals.Price", goalsArray(
-            "transform(sequence(1, CAST(VisitID % 4 AS INT)), g -> CAST(g * 100 AS BIGINT))"))
-          .withColumn("Goals.Serial", goalsArray(
-            "CAST(sequence(1, CAST(VisitID % 4 AS INT)) AS ARRAY<BIGINT>)"))
-        // round 11 (verdict ask #7): week-partitioned AND
-        // VisitID-bucketed — the q259/X168 pay-shuffle-once layout on
-        // the Metrica visits path itself. The FINAL collapse windows
-        // over VisitID; the bucketed scan hands it
-        // HashPartitioning(VisitID, 32) so no Exchange runs below the
-        // window (Round11Spec audits the executed plan).
-        Warehouse.writeBucketedWeekly(pairs, tbl, out, "StartDate",
-          "VisitID", 32)
-        goalsBuilt += out
-      }
+    Graft.scratchFixture(dir, "goals", goalsBuilt) { out =>
+      val base = Graft.table(s, dir, "events").select(
+        col("event_id").as("VisitID"),
+        to_date(col("ts")).as("StartDate"),
+        lit(1L).as("VisitVersion"),
+        lit(1).as("Sign"),
+        col("event_type"),
+        col("value").as("Duration"))
+      val clicks = base.filter(col("event_type") === "click")
+      val pairs = base
+        .unionByName(clicks.withColumn("Sign", lit(-1)))
+        .unionByName(clicks.withColumn("VisitVersion", lit(2L))
+          .withColumn("Duration", col("Duration") * 2))
+        .withColumn("Goals.ID", goalsArray(
+          "transform(sequence(1, CAST(VisitID % 4 AS INT)), g -> VisitID * 10 + g)"))
+        .withColumn("Goals.Price", goalsArray(
+          "transform(sequence(1, CAST(VisitID % 4 AS INT)), g -> CAST(g * 100 AS BIGINT))"))
+        .withColumn("Goals.Serial", goalsArray(
+          "CAST(sequence(1, CAST(VisitID % 4 AS INT)) AS ARRAY<BIGINT>)"))
+      // round 11 (verdict ask #7): week-partitioned AND
+      // VisitID-bucketed — the q259/X168 pay-shuffle-once layout on
+      // the Metrica visits path itself. The FINAL collapse windows
+      // over VisitID; the bucketed scan hands it
+      // HashPartitioning(VisitID, 32) so no Exchange runs below the
+      // window (Round11Spec audits the executed plan).
+      Warehouse.writeBucketedWeekly(pairs, goalsBucketTable(out), out,
+        "StartDate", "VisitID", 32)
     }
-    out
   }
 
   private[graft] def goalsBucketTable(out: String): String =

@@ -18,14 +18,12 @@ object SourceQueries {
   // partitionBy: one scan, one directory of fresh objects per day),
   // re-read with an explicit schema, aggregate. The oracle computes the
   // same result straight from parquet, so the roundtrip itself is what's
-  // being verified (README.md:145-168). The export path is deterministic
-  // and written with mode=overwrite, so reruns replace instead of
-  // accumulating gzipped copies in /tmp.
+  // being verified (README.md:145-168).
   val q13CsvRoundtrip = QueryDef(
     "q13_csv_roundtrip",
     (s, dir) => {
       val days = Seq("2024-01-05", "2024-01-06", "2024-01-07")
-      val out = s"${sys.props("java.io.tmpdir")}/graft_csv_export"
+      val out = Graft.scratchDir(dir, "csv_export")
       // Graft.events bounds the scan on the raw nanos BELOW the ns→µs
       // conversion, so the 3-day export prunes parquet row groups
       // instead of scanning all history (the in-query isin filter then
@@ -168,14 +166,12 @@ object SourceQueries {
     "q34_scd2_csv_dim",
     (s, dir) => {
       import graft.operators.Relational.scd2Join
-      val dimDir = s"${sys.props("java.io.tmpdir")}/graft_dim_csv"
+      val dimDir = Graft.scratchDir(dir, "dim_csv")
       val csv =
         "etype,descr,from_dt,to_dt\n" +
           "click,Click era 1,2024-01-01,2024-01-15\n" +
           "click,Click era 2,2024-01-16,2099-12-31\n" +
           "view,View all-time,2024-01-01,2099-12-31\n"
-      val f = new java.io.File(dimDir)
-      f.mkdirs()
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dimDir/dim.csv"), csv)
       val dim = CsvGzip.read(s, s"$dimDir/dim.csv", StructType(Seq(
@@ -255,8 +251,11 @@ object SourceQueries {
   val q51HitsExportReconcile = QueryDef(
     "q51_hits_export_reconcile",
     (s, _) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_hits"
-      graft.FsUtil.rmTree(base)
+      // keyless, unlike every other entry's scratch dir: the DuckDB
+      // oracle below reads these files by a literal path after the JVM
+      // has exited, and its SQL is fixed text that cannot name a data
+      // dir (the fixture is no function of one either)
+      val base = Graft.scratchDir("hits")
       val days = Seq("2023-11-01", "2023-11-02", "2023-11-03")
       graft.sources.Warehouse.write(hitsFixture(s), s"$base/warehouse",
         graft.schemas.Metrica.hitsPartitionDate,
@@ -306,7 +305,7 @@ object SourceQueries {
                CAST(sum(len(GoalsReached)) AS BIGINT) AS goals_total,
                CAST(sum(coalesce(list_aggregate("ParsedParams.Quantity", 'sum'), 0)) AS BIGINT) AS quant_total,
                TRUE AS sliced_ok
-        FROM read_parquet('${sys.props("java.io.tmpdir")}/graft_hits/warehouse/*/*.parquet')
+        FROM read_parquet('${Graft.scratchPath("hits")}/warehouse/*/*.parquet')
         WHERE EventDate BETWEEN DATE '2023-11-01' AND DATE '2023-11-03'
       ), s3 AS (
         SELECT 's3' AS storage, CAST(count(1) AS BIGINT) AS cnt,
@@ -314,7 +313,7 @@ object SourceQueries {
                CAST(sum(json_array_length(GoalsReached)) AS BIGINT) AS goals_total,
                CAST(sum(coalesce(list_aggregate(CAST(json_transform("ParsedParams.Quantity", '["BIGINT"]') AS BIGINT[]), 'sum'), 0)) AS BIGINT) AS quant_total,
                count(DISTINCT filename) >= count(DISTINCT EventDate) AS sliced_ok
-        FROM read_csv('${sys.props("java.io.tmpdir")}/graft_hits/s3/*/*.csv.gz',
+        FROM read_csv('${Graft.scratchPath("hits")}/s3/*/*.csv.gz',
                       header=true, all_varchar=true, filename=true)
       )
       SELECT * FROM ch UNION ALL SELECT * FROM s3 ORDER BY storage"""))
@@ -361,9 +360,7 @@ object SourceQueries {
   val q59TtlTiering = QueryDef(
     "q59_ttl_tiering",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ttl_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "ttl")
       val cutoff = "2024-01-15" // keep 2 weeks as of the corpus's end
       val ev = Graft.table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
@@ -424,9 +421,7 @@ object SourceQueries {
   val q93MutationDelete = QueryDef(
     "q93_mutation_delete",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_mut_q93_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "mut_q93")
       val ev = Graft.table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), to_date(col("ts")).as("d"))
@@ -475,9 +470,7 @@ object SourceQueries {
   val q97ChInsertSelectSql = QueryDef(
     "q97_ch_insert_select_sql",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ins_q97_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "ins_q97")
       new java.io.File(s"$base/s3").mkdirs()
       Graft.table(s, dir, "events").createOrReplaceTempView("events_src_v")
       graft.sources.Catalog.register(s, Binding(
@@ -527,9 +520,7 @@ object SourceQueries {
   val q162JsonEachRow = QueryDef(
     "q162_json_each_row",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_json_q162_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "json_q162")
       Graft.table(s, dir, "documents")
         .createOrReplaceTempView("docs_src_v")
       s.sql(s"""
@@ -564,9 +555,7 @@ object SourceQueries {
   val q104YqlInlineScan = QueryDef(
     "q104_yql_inline_scan",
     (s, dir) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_yql_q104_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(root)
+      val root = Graft.scratchDir(dir, "yql_q104")
       Graft.events(s, dir, "2024-01-05", "2024-01-08")
         .select(col("event_id"), to_date(col("ts")).as("d"),
           col("user_id"), col("event_type"), col("value"))
@@ -613,9 +602,7 @@ object SourceQueries {
   val q105YqlFederatedInsert = QueryDef(
     "q105_yql_federated_insert",
     (s, dir) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_yql_q105_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(root)
+      val root = Graft.scratchDir(dir, "yql_q105")
       new java.io.File(s"$root/dim").mkdirs()
       // the README's versioned dim shape (README.md:273-277), over
       // event types: the second window supersedes the first mid-range
@@ -685,9 +672,7 @@ object SourceQueries {
   val q259BucketedJoin = QueryDef(
     "q259_bucketed_join",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bucket_q259_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "bucket_q259")
       val ev = Graft.table(s, dir, "events")
         .select(col("user_id"), (col("event_id") % 100).as("m"))
       val usr = ev.select(col("user_id")).distinct()

@@ -20,7 +20,7 @@ object StreamingQueries {
   val q31StreamIngest = QueryDef(
     "q31_stream_ingest",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q31"
+      val base = Graft.scratchDir(dir, "stream_q31")
       val srcDir = s"$base/src"
       // stage: the raw table (ts normalized to a µs long) as 4 source files
       val raw = Graft.eventsMicros(s, dir)
@@ -61,8 +61,7 @@ object StreamingQueries {
   val q48StreamSourceAgg = QueryDef(
     "q48_stream_source_agg",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q48_" +
-        new java.io.File(dir).getName
+      val base = Graft.scratchDir(dir, "stream_q48")
       val srcDir = s"$base/src"
       val raw = s.read.parquet(s"$dir/events.parquet")
       raw.repartition(3).write.mode("overwrite").parquet(srcDir)
@@ -97,9 +96,7 @@ object StreamingQueries {
   val q52CompactWarehouse = QueryDef(
     "q52_compact_warehouse",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_compact_q52_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "compact_q52")
       // ts normalized to µs long = DuckDB's epoch_us, either layout
       val raw = Graft.eventsMicros(s, dir)
       val state = raw.select(
@@ -166,9 +163,7 @@ object StreamingQueries {
   val q57StreamWindowedAgg = QueryDef(
     "q57_stream_windowed_agg",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q57_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q57")
       val srcDir = s"$base/src"
       val raw = Graft.eventsMicros(s, dir) // ts = µs long
       val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
@@ -217,9 +212,7 @@ object StreamingQueries {
     "q58_stream_sessionize",
     (s, dir) => {
       import s.implicits._
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q58_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q58")
       val srcDir = s"$base/src"
       val gapUs = 30L * 60 * 1000000 // 30 min
       val raw = Graft.eventsMicros(s, dir) // ts = µs long
@@ -301,9 +294,7 @@ object StreamingQueries {
   val q71StreamDedup = QueryDef(
     "q71_stream_dedup",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q71_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q71")
       val raw = Graft.eventsMicros(s, dir) // ts = µs long
       val redelivered = raw.unionByName(
         raw.filter(pmod(col("event_id"), lit(10)) === 3))
@@ -349,9 +340,7 @@ object StreamingQueries {
   val q80StreamStreamJoin = QueryDef(
     "q80_stream_stream_join",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q80_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q80")
       val srcDir = s"$base/src"
       val raw = Graft.eventsMicros(s, dir) // ts = µs long
       raw.repartition(3).write.mode("overwrite").parquet(srcDir)
@@ -414,9 +403,7 @@ object StreamingQueries {
     (s, dir) => {
       import graft.streaming.MatView
       import graft.functions.ch.toMonday
-      val base = s"${sys.props("java.io.tmpdir")}/graft_mv_q95_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "mv_q95")
       val raw = Graft.eventsMicros(s, dir)
       raw.repartition(4).write.parquet(s"$base/src")
       MatView.runHllRollup(s, s"$base/src", raw.schema, s"$base/state",
@@ -462,9 +449,7 @@ object StreamingQueries {
     "q112_stream_intake",
     (s, dir) => {
       import graft.functions.text
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q112_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q112")
       val raw = s.read.parquet(s"$dir/documents.parquet")
       // every 10th doc redelivers under a shifted id — same content
       val redelivered = raw.unionByName(
@@ -571,15 +556,13 @@ object StreamingQueries {
   val q114BlueGreenMvSwap = QueryDef(
     "q114_bluegreen_mv_swap",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q114_" +
-        new java.io.File(dir).getName
+      val base = Graft.scratchDir(dir, "stream_q114")
       // same-JVM re-run hygiene: detach anything a previous execution
-      // of this entry registered, then start from empty dirs
+      // of this entry registered
       if (graft.plans.ChMatView.isMv("q114_mv"))
         graft.plans.ChMatView.remove(s, "q114_mv")
       graft.sources.Catalog.bindings.filter(_.path.startsWith(base))
         .foreach(b => graft.sources.Catalog.unregister(s, b.name))
-      graft.FsUtil.rmTree(base)
       s.conf.set("spark.graft.warehouse", s"$base/wh")
       try {
         val raw = Graft.eventsMicros(s, dir)
@@ -662,9 +645,7 @@ object StreamingQueries {
     "q117_stream_lm_gate",
     (s, dir) => {
       import graft.operators.Lm
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q117_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q117")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val m = Lm.trainUnigram(docs, "text", "lm_q117", topV = 16)
       docs.repartition(3).write.parquet(s"$base/src")
@@ -723,9 +704,7 @@ object StreamingQueries {
     "q158_stream_bigram_gate",
     (s, dir) => {
       import graft.operators.Lm
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q158_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q158")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val m = Lm.trainBigram(docs, "text", "lm_q158", topV = 24,
         topB = 48)
@@ -826,9 +805,7 @@ object StreamingQueries {
     "q168_stream_clean_intake",
     (s, dir) => {
       import graft.operators.{Dedup, Lm}
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q168_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q168")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val m = Lm.trainBigram(docs, "text", "lm_q168", topV = 24,
         topB = 48)
@@ -970,9 +947,7 @@ object StreamingQueries {
     (s, dir) => {
       import graft.operators.Pack
       import graft.functions.text
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q128_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q128")
       val raw = s.read.parquet(s"$dir/documents.parquet")
       raw.repartition(4).write.mode("overwrite").parquet(s"$base/src")
       val stream = s.readStream.schema(raw.schema).parquet(s"$base/src")
@@ -1034,9 +1009,7 @@ object StreamingQueries {
     "q180_stream_neardup_gate",
     (s, dir) => {
       import graft.operators.Dedup
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q180_" +
-        new java.io.File(dir).getName
-      graft.FsUtil.rmTree(base)
+      val base = Graft.scratchDir(dir, "stream_q180")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val existing = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val incoming = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
@@ -1108,8 +1081,7 @@ object StreamingQueries {
   val q257StreamSketch = QueryDef(
     "q257_stream_sketch_distinct",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q257_" +
-        new java.io.File(dir).getName
+      val base = Graft.scratchDir(dir, "stream_q257")
       val srcDir = s"$base/src"
       val raw = s.read.parquet(s"$dir/events.parquet")
       raw.repartition(5).write.mode("overwrite").parquet(srcDir)
@@ -1178,8 +1150,7 @@ object StreamingQueries {
   val q275StreamAnomaly = QueryDef(
     "q275_stream_anomaly",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_q275_" +
-        new java.io.File(dir).getName
+      val base = Graft.scratchDir(dir, "stream_q275")
       val srcDir = s"$base/src"
       val raw = s.read.parquet(s"$dir/events.parquet")
       raw.repartition(5).write.mode("overwrite").parquet(srcDir)

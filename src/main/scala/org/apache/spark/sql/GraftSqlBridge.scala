@@ -3,10 +3,10 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into spark-sql's `private[sql]` Column <-> Expression
-  * converters and the session FunctionRegistry, so graft's native
-  * Catalyst expressions (graft.plans.NativeHashes) can surface as
-  * ordinary `Column`s and SQL functions. Standard extension-library
-  * technique; uses only stable classic-session entry points.
+  * converters, so graft's native Catalyst expressions
+  * (graft.plans.NativeHashes) can surface as ordinary `Column`s and SQL
+  * function builders. Standard extension-library technique; uses only
+  * stable classic-session entry points.
   */
 object GraftSqlBridge {
 
@@ -32,10 +32,4 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Register a function builder on an existing (classic) session. */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -40,8 +40,7 @@ class CatalogSpec extends SparkSpec {
     // writeStream -> foreachBatch -> df.write.jdbc(append) path against
     // the embedded engine (append auto-creates the table on first batch)
     val url = "jdbc:derby:memory:graft_spec;create=true"
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_jdbc_src")
-      .toString
+    val srcDir = tempDir("jdbc_src")
     import org.apache.spark.sql.functions._
     spark.range(0, 100).select(col("id"), (col("id") % 5).as("grp"))
       .write.mode("overwrite").parquet(srcDir)
@@ -62,7 +61,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("file binding applies the declared schema on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bind").toString
+    val dir = tempDir("bind")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/d.csv"), "id,name\n7,zeta\n")
     Catalog.register(spark, Binding("b_csv_spec", s"$dir/d.csv",

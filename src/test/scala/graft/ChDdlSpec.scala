@@ -58,8 +58,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("CREATE -> INSERT -> FINAL -> OPTIMIZE -> ALTER DELETE, all SQL") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_wh"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_wh")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       val created = spark.sql("""
@@ -107,8 +106,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("ENGINE = S3 DDL binds the csv-gzip export path") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_s3"
-    FsUtil.rmTree(dir)
+    val dir = tempDir("ddlspec_s3")
     spark.sql(s"""
       CREATE TABLE mini_s3
       (`k` UInt64, `t` String)
@@ -125,8 +123,7 @@ class ChDdlSpec extends SparkSpec {
 
   test("CREATE TABLE ... AS other ENGINE = S3: the reference's schema-clone " +
       "export table (README.md:136)") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_clone"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_clone")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -155,8 +152,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("CTAS: CREATE TABLE ... ENGINE = ... AS SELECT creates and fills") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_ctas"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_ctas")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       Seq((1L, "2024-01-02", 2.5), (2L, "2024-01-09", 4.0))
@@ -175,8 +171,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("CREATE MATERIALIZED VIEW: updates on INSERT, reads via uniqMerge") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_mv"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_mv")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -218,8 +213,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("MATERIALIZED VIEW with the full -State family: exact merges") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_mvfam"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_mvfam")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -257,8 +251,7 @@ class ChDdlSpec extends SparkSpec {
 
   test("MV quantile/argMin/argMax states: fold across inserts equals " +
       "the direct aggregate, ties deterministic") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_mvq"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_mvq")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -306,8 +299,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("MV fold with a batch id is exactly-once: replays never refold") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_mvbatch"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_mvbatch")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -337,8 +329,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("MATERIALIZED VIEW with POPULATE folds pre-existing data in") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_mvpop"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_mvpop")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -363,8 +354,7 @@ class ChDdlSpec extends SparkSpec {
 
   test("the reference's visits DDL + collapsing pairs + Q1 over FINAL " +
       "end-to-end") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_visits"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_visits")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       // the reference's own 224-column CREATE TABLE, verbatim
@@ -429,8 +419,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("TRUNCATE empties a binding's data; DROP detaches it") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_drop"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_drop")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -509,8 +498,7 @@ class ChDdlSpec extends SparkSpec {
   }
 
   test("comments inside an ADD PROJECTION body are not items or clauses") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_ddlspec_projcmt"
-    FsUtil.rmTree(root)
+    val root = tempDir("ddlspec_projcmt")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""

@@ -89,8 +89,7 @@ class CodegenCacheSpec extends SparkSpec {
 
   test("a second run of the same Metrica and curation plans compiles no " +
       "generated class") {
-    val root = java.nio.file.Files.createTempDirectory("graft_codegen_cache")
-      .toString
+    val root = tempDir("codegen_cache")
     val idInName = "spark.sql.codegen.useIdInClassName"
     val prev = spark.conf.getOption(idInName)
     spark.conf.set(idInName, "false")

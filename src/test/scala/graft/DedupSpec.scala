@@ -79,8 +79,7 @@ class DedupSpec extends SparkSpec {
 
   test("incrementalDedup: store-backed novelty across batches") {
     import org.apache.spark.sql.functions.col
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_inc_store").toString + "/fp"
+    val store = tempDir("inc_store") + "/fp"
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("id", "t")
     val fp = text.fingerprint(col("t"))
     // batch 1: two distinct texts, one in-batch dup (min id wins)
@@ -104,8 +103,7 @@ class DedupSpec extends SparkSpec {
   test("incrementalDedupBloom: same results as the exact form — " +
       "novelty, NULL keys, and the empty-store seed") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bloom_store").toString
+    val root = tempDir("bloom_store")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("id", "t")
     val fp = text.fingerprint(col("t"))
     // seed an empty store (missing path) with batch 1 incl. a NULL key

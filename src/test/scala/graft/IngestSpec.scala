@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
@@ -20,7 +18,7 @@ class IngestSpec extends SparkSpec {
       .select($"id", $"ver", $"sign", $"d".cast("date").as("d"))
 
   test("restart resumes from checkpoint: no loss, no dups, late cancels apply") {
-    val base = Files.createTempDirectory("graft_ingest_spec").toString
+    val base = tempDir("ingest_spec")
     val srcDir = s"$base/src"
     val cp = s"$base/cp"
     val sink = Ingest.Sink(s"$base/wh", "visits", "t1",
@@ -62,7 +60,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("continuous mode (ST1): a live query drains files as they arrive") {
-    val base = Files.createTempDirectory("graft_ingest_spec_cont").toString
+    val base = tempDir("ingest_spec_cont")
     val srcDir = s"$base/src"
     val sink = Ingest.Sink(s"$base/wh", "visits", "t_cont",
       dateCol = "d", orderKey = Seq("id", "ver"), cleanupPolicy = "DISABLED")
@@ -82,7 +80,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("cleanup policy DROP clears table and checkpoint; TRUNCATE keeps checkpoint") {
-    val base = Files.createTempDirectory("graft_ingest_spec2").toString
+    val base = tempDir("ingest_spec2")
     val srcDir = s"$base/src"
     val sink = Ingest.Sink(s"$base/wh", "visits", "t2",
       dateCol = "d", orderKey = Seq("id", "ver"), cleanupPolicy = "DROP")
@@ -96,7 +94,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("weekly compaction keeps only the latest live version per entity") {
-    val base = Files.createTempDirectory("graft_compact_spec").toString
+    val base = tempDir("compact_spec")
     // two weeks of versioned rows: id 1 upgraded to v2, id 2 untouched,
     // id 3 (next week) fully canceled
     Warehouse.write(visitRows(Seq(
@@ -117,7 +115,7 @@ class IngestSpec extends SparkSpec {
 
   test("tierByTtl moves aged week partitions via the Hadoop FileSystem " +
       "(explicit file: scheme)") {
-    val base = Files.createTempDirectory("graft_ttl_spec").toString
+    val base = tempDir("ttl_spec")
     Warehouse.write(visitRows(Seq(
         (1L, 1L, 1, "2023-11-01"), (2L, 1L, 1, "2023-11-08"),
         (3L, 1L, 1, "2023-11-15"))),
@@ -137,7 +135,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("multi-batch drain (maxFilesPerTrigger) lands every file once") {
-    val base = Files.createTempDirectory("graft_ingest_spec3").toString
+    val base = tempDir("ingest_spec3")
     val srcDir = s"$base/src"
     val sink = Ingest.Sink(s"$base/wh", "visits", "t3",
       dateCol = "d", orderKey = Seq("id", "ver"), cleanupPolicy = "DROP")
@@ -190,8 +188,7 @@ class IngestSpec extends SparkSpec {
 
   test("materialized views fold per micro-batch over the replication stream") {
     import org.apache.spark.sql.functions._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ingest_mv"
-    FsUtil.rmTree(base)
+    val base = tempDir("ingest_mv")
     spark.conf.set("spark.graft.warehouse", s"$base/wh")
     try {
       val rows = (0 until 60).map(i =>
@@ -239,8 +236,7 @@ class IngestSpec extends SparkSpec {
 
   test("the sink follows its table through RENAME across a restart") {
     import org.apache.spark.sql.functions._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ingest_rename"
-    FsUtil.rmTree(base)
+    val base = tempDir("ingest_rename")
     spark.conf.set("spark.graft.warehouse", s"$base/wh")
     try {
       val df = (0 until 20).map(i => (i.toLong, f"2024-02-${1 + i % 5}%02d"))

@@ -10,11 +10,7 @@ import graft.streaming.MatView
 class MatViewSpec extends SparkSpec {
   import spark.implicits._
 
-  private def base(name: String): String = {
-    val b = s"${sys.props("java.io.tmpdir")}/graft_mv_$name"
-    FsUtil.rmTree(b)
-    b
-  }
+  private def base(name: String): String = tempDir(s"mv_$name")
 
   test("multi-batch rollup converges to the exact distinct counts") {
     val b = base("conv")

@@ -146,8 +146,7 @@ class MetricaSpec extends SparkSpec {
           "GoalsReached", "ParsedParams.Key1", "ParsedParams.Quantity",
           "ClientIP6"),
       Metrica.hits)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_widecsv").toString
+    val dir = tempDir("widecsv")
     CsvGzip.exportCsv(CsvGzip.encodeComplex(df), dir, mode = "overwrite")
     val back = CsvGzip.decodeComplex(
       CsvGzip.read(spark, dir, CsvGzip.encodedSchema(Metrica.hits)),

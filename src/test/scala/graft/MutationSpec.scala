@@ -14,8 +14,7 @@ class MutationSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(name: String): String = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_mutspec_$name"
-    FsUtil.rmTree(base)
+    val base = tempDir(s"mutspec_$name")
     // three Mondays: 2024-01-01, 2024-01-08, 2024-01-15
     val rows = for {
       day <- 1 to 21
@@ -53,8 +52,7 @@ class MutationSpec extends SparkSpec {
   }
 
   test("deleteWhere keeps NULL-condition rows (3VL, CH semantics)") {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_mutspec_delnull"
-    FsUtil.rmTree(base)
+    val base = tempDir("mutspec_delnull")
     // grp is nullable: NULL rows make `grp = 2` evaluate NULL, and CH's
     // ALTER DELETE removes only predicate-TRUE rows — NULLs survive
     val df = Seq(
@@ -191,9 +189,7 @@ class MutationSpec extends SparkSpec {
 
   test("csv INSERT with shuffled column names writes the declared order") {
     import org.apache.spark.sql.types._
-    val b = s"${sys.props("java.io.tmpdir")}/graft_mutspec_shuf"
-    FsUtil.rmTree(b)
-    new java.io.File(b).mkdirs()
+    val b = tempDir("mutspec_shuf")
     graft.sources.Catalog.register(spark, graft.sources.Binding(
       "ins_shuf_t", b, format = "csv",
       schema = Some(StructType(Seq(StructField("k", LongType),
@@ -209,8 +205,7 @@ class MutationSpec extends SparkSpec {
 
   test("OPTIMIZE TABLE FINAL compacts the versioned warehouse in place") {
     import org.apache.spark.sql.types.MetadataBuilder
-    val b = s"${sys.props("java.io.tmpdir")}/graft_mutspec_opt"
-    FsUtil.rmTree(b)
+    val b = tempDir("mutspec_opt")
     val keyMd = new MetadataBuilder().putBoolean("graft.finalKey", true).build()
     val verMd = new MetadataBuilder().putBoolean("graft.finalVersion", true).build()
     val signMd = new MetadataBuilder().putBoolean("graft.finalSign", true).build()
@@ -248,9 +243,7 @@ class MutationSpec extends SparkSpec {
 
   test("INSERT INTO a csv binding appends fresh gzip objects") {
     import org.apache.spark.sql.types._
-    val b = s"${sys.props("java.io.tmpdir")}/graft_mutspec_ins"
-    FsUtil.rmTree(b)
-    new java.io.File(b).mkdirs()
+    val b = tempDir("mutspec_ins")
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "t")
       .createOrReplaceTempView("ins_src")
     graft.sources.Catalog.register(spark, graft.sources.Binding(
@@ -275,8 +268,7 @@ class MutationSpec extends SparkSpec {
   }
 
   test("RENAME / EXCHANGE TABLES: the CTAS blue-green swap") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_mutspec_bg"
-    FsUtil.rmTree(root)
+    val root = tempDir("mutspec_bg")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       Seq((1L, "2024-01-02"), (2L, "2024-01-02")).toDF("k", "ds")

@@ -47,7 +47,7 @@ class NativeHashesSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_minhash64 / graft_simhash64 registered") {
-    NativeHashes.register(spark)
+    // no registration call: the session's GraftExtensions provide them
     val n = spark.sql(
       """SELECT size(graft_minhash64(array('a b c', 'b c d'), 32)) AS k,
                 graft_simhash64(array('a', 'b')) AS sh""")

@@ -88,8 +88,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("lexical index: bm25FromIndex returns exactly bm25TopK's rows") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_lexidx_spec"
-    graft.FsUtil.rmTree(dir)
+    val dir = tempDir("lexidx_spec")
     Retrieval.writeLexicalIndex(corpus, "doc_id", "text", dir,
       nBuckets = 8)
     val qs = Seq(10L -> "apple", 20L -> "cherry banana", 30L -> "date")
@@ -102,8 +101,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("lexical index plan: the vocabulary's buckets prune partitions " +
       "and the term filter reaches the parquet scan") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_lexidx_spec_plan"
-    graft.FsUtil.rmTree(dir)
+    val dir = tempDir("lexidx_spec_plan")
     Retrieval.writeLexicalIndex(corpus, "doc_id", "text", dir,
       nBuckets = 8)
     val plan = Retrieval.bm25FromIndex(spark, dir,
@@ -123,8 +121,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("lexical index append: incremental maintenance serves the " +
       "union corpus exactly (stats rows merge, df spans generations)") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_lexidx_spec_inc"
-    graft.FsUtil.rmTree(dir)
+    val dir = tempDir("lexidx_spec_inc")
     val gen1 = Seq((1L, "apple banana"), (2L, "apple apple"))
       .toDF("doc_id", "text")
     val gen2 = Seq((3L, "banana cherry cherry"), (4L, "date"))

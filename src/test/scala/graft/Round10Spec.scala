@@ -346,8 +346,7 @@ class Round10Spec extends SparkSpec {
 
   test("bucketed tables join with ZERO Exchange (co-location: the " +
       "shuffle was paid at write time)") {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_r10_bucket_spec"
-    graft.FsUtil.rmTree(base)
+    val base = tempDir("r10_bucket_spec")
     val df = spark.range(1000).selectExpr("id AS k", "id % 9 AS v")
     graft.sources.Warehouse.writeBucketed(df, "r10_b_a", s"$base/a",
       "k", 4)

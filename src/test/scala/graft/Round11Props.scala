@@ -42,8 +42,7 @@ object Round11Props extends Properties("round11") {
     val rows = regimes.flatMap { case (g, n) =>
       (0 until n).flatMap(i => Seq((g, s"${g}_v$i"), (g, s"${g}_v$i")))
     }
-    val base = s"${sys.props("java.io.tmpdir")}/graft_r11_sketch_src"
-    FsUtil.rmTree(base)
+    val base = SparkSpec.tempDir("r11_sketch_src")
     val src = rows.toDF("g", "v")
     src.repartition(5).write.mode("overwrite").parquet(base)
 

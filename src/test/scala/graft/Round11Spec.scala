@@ -306,7 +306,7 @@ class Round11Spec extends SparkSpec {
     val grid = spark.range(65536).select(
       (org.apache.spark.sql.functions.col("id") % 256).as("a"),
       (org.apache.spark.sql.functions.col("id") / 256).cast("long").as("b"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val tmp = tempDir("zorder")
     Warehouse.writeZOrdered(grid, s"$tmp/z", "a", "b",
       bits = 8, outFiles = 64)
     // the single-key comparison layout: range-sorted by a only

@@ -324,10 +324,7 @@ class Round11bSpec extends SparkSpec {
     import graft.sources.Warehouse
     import graft.functions.ch
     val dir = "/root/testdata/sf0.001"
-    val out = sys.props("java.io.tmpdir") + "/graft_r11b_backfill"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
+    val out = tempDir("r11b_backfill")
     val ev = Graft.table(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     Warehouse.write(ev, out, "ts", Seq("event_id"))

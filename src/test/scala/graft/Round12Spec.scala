@@ -221,8 +221,7 @@ class Round12Spec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val localRows = rows(Graft.stage(base))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_spec").toString
+    val dir = tempDir("ckpt_spec")
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {

@@ -497,8 +497,7 @@ class Round13Spec extends SparkSpec {
   test("incrementalNearDedup: re-fetches and near-dups of HISTORY drop, " +
       "novel and sub-shingle docs pass, survivors join the store") {
     import graft.operators.Dedup
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_r13_nd").toString + "/store"
+    val store = tempDir("r13_nd") + "/store"
     val seed = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "completely different content about spark engines here"))
@@ -687,8 +686,7 @@ class Round13Spec extends SparkSpec {
 
   test("Graft.stage honors a spark.graft.checkpointDir change between " +
       "calls (reliable path)") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_r13_ckpt").toString
+    val tmp = tempDir("r13_ckpt")
     val dirA = s"$tmp/a"
     val dirB = s"$tmp/b"
     try {

@@ -63,8 +63,7 @@ class Round8cSpec extends SparkSpec {
   test("OPTIMIZE TABLE DEDUPLICATE BY keeps one row per key within " +
       "a week partition; full-row dedup removes exact copies") {
     import graft.sources.{Binding, Catalog, Warehouse}
-    val tmp = sys.props("java.io.tmpdir") + "/graft_r8c_opt_dedup"
-    graft.FsUtil.rmTree(tmp)
+    val tmp = tempDir("r8c_opt_dedup")
     val rows = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), "a"),
       (1L, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), "a"),

@@ -183,9 +183,7 @@ class Round8dSpec extends SparkSpec {
 
   test("SummingMergeTree FINAL: sums listed columns, pins others to " +
       "the group min, keeps declared types, and drops all-zero rows") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_smt_spec_" +
-      System.nanoTime()
-    FsUtil.rmTree(root)
+    val root = tempDir("smt_spec")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""
@@ -220,9 +218,7 @@ class Round8dSpec extends SparkSpec {
 
   test("SummingMergeTree with no ENGINE column list sums every " +
       "numeric non-key column (CH's default sum set)") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_smt_spec2_" +
-      System.nanoTime()
-    FsUtil.rmTree(root)
+    val root = tempDir("smt_spec2")
     spark.conf.set("spark.graft.warehouse", root)
     try {
       spark.sql("""

@@ -34,8 +34,7 @@ class Round8hSpec extends SparkSpec {
   }
 
   private def withWarehouse[T](tag: String)(f: => T): T = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_projspec_$tag"
-    FsUtil.rmTree(root)
+    val root = tempDir(s"projspec_$tag")
     spark.conf.set("spark.graft.warehouse", root)
     try f finally {
       spark.conf.unset("spark.graft.warehouse")
@@ -96,8 +95,7 @@ class Round8hSpec extends SparkSpec {
       "weeks to cold storage without a rewrite, and the hot table " +
       "keeps only the fresh weeks") {
     withWarehouse("ttl") {
-      val cold = s"${sys.props("java.io.tmpdir")}/graft_projspec_ttl_cold"
-      FsUtil.rmTree(cold)
+      val cold = tempDir("projspec_ttl_cold")
       spark.sql(s"""
         CREATE TABLE metrica.ttl_t
         (`uid` UInt64, `d` Date, `v` Int64)

@@ -35,8 +35,7 @@ class Round9Spec extends SparkSpec {
   }
 
   private def withWarehouse[T](tag: String)(f: => T): T = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_r9projspec_$tag"
-    FsUtil.rmTree(root)
+    val root = tempDir(s"r9projspec_$tag")
     spark.conf.set("spark.graft.warehouse", root)
     try f finally {
       spark.conf.unset("spark.graft.warehouse")

@@ -193,7 +193,7 @@ class SimilaritySpec extends SparkSpec {
       "embedding", k = 5, nBits = 4)
       .select($"probe_id", $"rank", $"id").as[(Long, Long, Long)]
       .collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
+    val dir = tempDir("ann_idx")
     Similarity.writeAnnIndex(clustered, "vec_id", "embedding", dir, nBits = 4)
     val fromIndex = Similarity.annTopKFromIndex(spark, dir, probes,
       "vec_id", "embedding", k = 5, nBits = 4)
@@ -342,8 +342,7 @@ class SimilaritySpec extends SparkSpec {
       Array((0L, Seq(1.0, 0.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0, 0.0)))
     val books = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       m = 2, k = 2, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_edge")
-      .toString
+    val dir = tempDir("ann_edge")
     Similarity.writeAnnIndex(corpus, "vec_id", "embedding", dir, nBits = 1)
     Seq(
       ("bruteForceTopK", (p, k) => Similarity.bruteForceTopK(corpus, p,

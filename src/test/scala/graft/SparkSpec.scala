@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +12,51 @@ import graft.queries.MetricaQueries
   * `spark` val.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = Graft.local("graft-test")
+
+  /** Once the session exists, [[runDir]] is also the JVM's
+    * `java.io.tmpdir`: the scratch dirs of the registered queries a
+    * spec runs ([[Graft.scratchPath]]) land there and go with it.
+    * Spark's own local dirs were placed before the switch and stay
+    * Spark's to remove.
+    */
+  lazy val spark: SparkSession = {
+    val s = Graft.local("graft-test")
+    System.setProperty("java.io.tmpdir", runDir.toString)
+    s
+  }
+
+  /** This test run's temp root, named by the JVM's pid, so two
+    * checkouts running the suite at once share no directory. It is
+    * removed when the JVM exits, after Spark's shutdown hooks (a lower
+    * Hadoop hook priority): those delete Spark's own temp dirs, some of
+    * them under this root. Names stay short on purpose: a plan string
+    * cuts a scan's path at `spark.sql.maxMetadataStringLength` (100),
+    * and the projection specs look for a table dir's `__proj_` suffix
+    * in it.
+    */
+  private lazy val runDir: Path = {
+    val d = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_specs_${ProcessHandle.current.pid}")
+    FsUtil.rmTree(d.toString) // a dead run's, under a reused pid
+    Files.createDirectories(d)
+    org.apache.hadoop.util.ShutdownHookManager.get()
+      .addShutdownHook(() => FsUtil.rmTree(d.toString), 0)
+    d
+  }
+
+  private val dirs = new java.util.concurrent.atomic.AtomicInteger
+
+  /** A new empty directory under [[runDir]]; `tag` names it. */
+  def tempDir(tag: String): String =
+    Files.createDirectory(
+      runDir.resolve(s"${tag}_${dirs.incrementAndGet()}")).toString
 }
 
 trait SparkSpec extends AnyFunSuite {
   val spark: SparkSession = SparkSpec.spark
+
+  /** [[SparkSpec.tempDir]]: a new empty directory, removed with the run. */
+  protected def tempDir(tag: String): String = SparkSpec.tempDir(tag)
 
   /** `p`, a file of the reference checkout; cancels the calling test,
     * naming `p`, where the checkout does not hold it.

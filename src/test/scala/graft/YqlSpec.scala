@@ -11,12 +11,7 @@ import graft.sources.{Binding, Catalog, CsvGzip}
 class YqlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def bucket(name: String): String = {
-    val b = s"${sys.props("java.io.tmpdir")}/graft_yql_$name"
-    FsUtil.rmTree(b)
-    new java.io.File(b).mkdirs()
-    b
-  }
+  private def bucket(name: String): String = tempDir(s"yql_$name")
 
   test("inline-schema scan: format/compression/Schema WITH clause") {
     val root = bucket("scan")
