@@ -1,8 +1,9 @@
 package graft
 
-/** Local-filesystem helpers for the harness/test surface (warehouse
-  * cleanup policies, fixture resets). Production object-store cleanup
-  * goes through the storage layer, not this.
+/** Local-filesystem helpers for the harness/test surface (scratch and
+  * fixture resets). Table and state dirs are deleted through the
+  * session's Hadoop FileSystem ([[graft.sources.Warehouse.deleteDir]]),
+  * never through this.
   */
 object FsUtil {
 

@@ -188,7 +188,6 @@ case class ChTruncateTableCommand(table: String)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq.empty
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.hadoop.fs.Path
     val b = graft.sources.Catalog.binding(table).getOrElse(
       throw new IllegalArgumentException(
         s"TRUNCATE TABLE: '$table' is not a registered Catalog binding"))
@@ -196,10 +195,9 @@ case class ChTruncateTableCommand(table: String)
     // capture the current view's shape BEFORE the files go
     val fallbackSchema =
       if (b.schema.isDefined) None else Some(spark.table(table).schema)
-    val p = new Path(b.path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    fs.mkdirs(p)
+    graft.sources.Warehouse.deleteDir(spark, b.path)
+    val p = new org.apache.hadoop.fs.Path(b.path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
     spark.catalog.refreshByPath(b.path)
     fallbackSchema match {
       case Some(schema) =>
@@ -221,8 +219,9 @@ case class ChTruncateTableCommand(table: String)
   * from the warehouse's week stamp — the binding's schema IS the
   * engine clause. Without a sign stamp the merge is ReplacingMergeTree
   * semantics (latest version wins). One job for all weeks (the week
-  * partition column joins the grouping key), then an atomic
-  * directory swap. Returns the surviving week partitions.
+  * partition column joins the grouping key), then every week swaps in
+  * through [[graft.sources.Warehouse.replaceWeeks]]. Returns the
+  * surviving week partitions.
   */
 /** `... DEDUPLICATE [BY cols]`: drop duplicate rows during the merge
   * — CH's exact-dedup-at-merge-time. Full-row dedup is deterministic
@@ -243,10 +242,11 @@ case class ChOptimizeTableCommand(table: String,
     Seq(AttributeReference("week_compacted", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.hadoop.fs.Path
     val b = graft.sources.Catalog.binding(table).getOrElse(
       throw new IllegalArgumentException(
         s"OPTIMIZE TABLE: '$table' is not a registered Catalog binding"))
+    val wh = graft.sources.Warehouse
+    wh.recover(spark, b.path)
     val schema = b.schema.getOrElse(
       spark.read.parquet(b.path).schema)
     def stamped(flag: String): Seq[String] =
@@ -261,14 +261,9 @@ case class ChOptimizeTableCommand(table: String,
     require(deduplicate || (keys.nonEmpty && ver.nonEmpty),
       s"OPTIMIZE TABLE: binding '$table' must stamp graft.finalKey " +
         "and graft.finalVersion in its schema (or use DEDUPLICATE)")
-    val wh = graft.sources.Warehouse
     // ver is only stamped on FINAL-engine bindings; the dedup branch
     // never touches it
     lazy val orderKey = keys :+ ver.get
-    val tablePath = new Path(b.path)
-    val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = new Path(tablePath.getParent,
-      s".${tablePath.getName}_optimize_${System.nanoTime()}")
     // PARTITION 'monday': only that week's rows compact and only that
     // week's directory swaps — the IO is one partition, not the table
     val filter: org.apache.spark.sql.DataFrame =>
@@ -276,64 +271,34 @@ case class ChOptimizeTableCommand(table: String,
       identity[org.apache.spark.sql.DataFrame] _)(w => df =>
       df.filter(org.apache.spark.sql.functions.col(wh.weekCol) ===
         org.apache.spark.sql.functions.lit(w).cast("date")))
-    if (deduplicate) {
-      val src = filter(wh.read(spark, b.path))
-      val dd =
-        if (dedupBy.isEmpty) src.dropDuplicates()
-        else src.dropDuplicates((wh.weekCol +: dedupBy).distinct)
-      val cluster =
-        if (keys.nonEmpty) keys ++ ver.toSeq
-        else if (dedupBy.nonEmpty) dedupBy
-        else schema.fieldNames.headOption.toSeq
-      wh.write(dd.drop(wh.weekCol), out.toString, dateCol.get, cluster)
-    } else sign match {
-      case Some(sc) =>
-        wh.compact(spark, b.path, out.toString, dateCol.get, orderKey,
-          keys, ver.get, sc, sourceFilter = filter)
-      case None => // Replacing semantics: latest version wins, no cancels
-        wh.write(graft.operators.Relational.latestByKey(
-            filter(wh.read(spark, b.path)), wh.weekCol +: keys,
-            Seq(ver.get))
-            .drop(wh.weekCol),
-          out.toString, dateCol.get, orderKey)
-    }
-    // retire-then-rename everywhere: at no instant is the only copy
-    // of live data in a hidden dir a restart would ignore. The
-    // partition retire carries the WEEK TAG Warehouse.recoverRetired
-    // reads, so a crash between the two renames self-heals on the
-    // next mutation of the table (after the grace period).
-    partition match {
-      case Some(w) =>
-        val live = new Path(tablePath, s"${wh.weekCol}=$w")
-        val fresh = new Path(out, s"${wh.weekCol}=$w")
-        val retired = new Path(tablePath.getParent,
-          s".${tablePath.getName}_retired_${wh.weekCol}=${w}_${System.nanoTime()}")
-        if (fs.exists(live))
-          require(fs.rename(live, retired),
-            s"optimize partition retire failed: $w")
-        if (fs.exists(fresh))
-          require(fs.rename(fresh, live),
-            s"optimize partition swap failed: $w")
-        fs.delete(retired, true)
-        fs.delete(out, true)
-      case None =>
-        val old = new Path(tablePath.getParent,
-          s".${tablePath.getName}_retired_${System.nanoTime()}")
-        require(fs.rename(tablePath, old),
-          s"optimize swap-out failed: $table")
-        require(fs.rename(out, tablePath),
-          s"optimize swap-in failed: $table")
-        fs.delete(old, true)
+    val weeks = partition.fold(wh.weeksOf(spark, b.path))(Seq(_))
+    wh.replaceWeeks(spark, b.path, weeks, "optimize") { out =>
+      if (deduplicate) {
+        val src = filter(wh.read(spark, b.path))
+        val dd =
+          if (dedupBy.isEmpty) src.dropDuplicates()
+          else src.dropDuplicates((wh.weekCol +: dedupBy).distinct)
+        val cluster =
+          if (keys.nonEmpty) keys ++ ver.toSeq
+          else if (dedupBy.nonEmpty) dedupBy
+          else schema.fieldNames.headOption.toSeq
+        wh.write(dd.drop(wh.weekCol), out, dateCol.get, cluster)
+      } else sign match {
+        case Some(sc) =>
+          wh.compact(spark, b.path, out, dateCol.get, orderKey,
+            keys, ver.get, sc, sourceFilter = filter)
+        case None => // Replacing semantics: latest version wins, no cancels
+          wh.write(graft.operators.Relational.latestByKey(
+              filter(wh.read(spark, b.path)), wh.weekCol +: keys,
+              Seq(ver.get))
+              .drop(wh.weekCol),
+            out, dateCol.get, orderKey)
+      }
     }
     spark.catalog.refreshByPath(b.path)
     graft.sources.Catalog.register(spark, b)
-    fs.listStatus(tablePath).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"${wh.weekCol}="))
-      .filter(st => partition.forall(w =>
-        st.getPath.getName == s"${wh.weekCol}=$w"))
-      .map(st => st.getPath.getName.substring(wh.weekCol.length + 1))
-      .sorted.map(Row(_))
+    wh.weeksOf(spark, b.path).filter(w => partition.forall(_ == w))
+      .map(Row(_))
   }
 }
 
@@ -342,7 +307,8 @@ case class ChOptimizeTableCommand(table: String,
   * (never a data rewrite — at 100 TB a partition op that rewrites is
   * a full-partition job for what CH does with one directory move):
   *
-  *  - `ALTER TABLE t DROP PARTITION 'p'` — retire-then-delete the dir;
+  *  - `ALTER TABLE t DROP PARTITION 'p'` — drop the week through
+  *    [[graft.sources.Warehouse.dropWeeks]];
   *  - `ALTER TABLE t DETACH PARTITION 'p'` — move it to the sibling
   *    `<path>_detached/` area (OUTSIDE the table dir, so partition
   *    discovery never sees a half-attached dir — CH's `detached/`);
@@ -369,19 +335,13 @@ case class ChPartitionCommand(table: String, op: String,
         s"ALTER TABLE $op PARTITION: '$table' is not a registered binding"))
     val tablePath = new Path(b.path)
     val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = new Path(tablePath, s"${wh.weekCol}=$partition")
+    val live = wh.weekDir(tablePath, partition)
     val detachedRoot = new Path(b.path.stripSuffix("/") + "_detached")
-    val detached = new Path(detachedRoot, s"${wh.weekCol}=$partition")
+    val detached = wh.weekDir(detachedRoot, partition)
     op match {
       case "DROP" =>
-        if (fs.exists(live)) {
-          val retired = new Path(tablePath.getParent,
-            s".${tablePath.getName}_retired_${wh.weekCol}=${partition}_" +
-              System.nanoTime())
-          require(fs.rename(live, retired),
-            s"DROP PARTITION retire failed: $partition")
-          fs.delete(retired, true)
-        }
+        wh.recover(spark, b.path)
+        wh.dropWeeks(spark, b.path, Seq(partition))
       case "DETACH" =>
         require(fs.exists(live),
           s"DETACH PARTITION: $partition not present in $table")
@@ -391,10 +351,8 @@ case class ChPartitionCommand(table: String, op: String,
         // suffix the prior copy aside (_1, _2, …) the same way
         if (fs.exists(detached)) {
           val n = Iterator.from(1).find(i =>
-            !fs.exists(new Path(detachedRoot,
-              s"${wh.weekCol}=${partition}_$i"))).get
-          require(fs.rename(detached, new Path(detachedRoot,
-            s"${wh.weekCol}=${partition}_$n")),
+            !fs.exists(detached.suffix(s"_$i"))).get
+          require(fs.rename(detached, detached.suffix(s"_$n")),
             s"DETACH PARTITION: could not shelve prior detached copy " +
               s"of $partition")
         }
@@ -413,8 +371,7 @@ case class ChPartitionCommand(table: String, op: String,
         val b2 = graft.sources.Catalog.binding(t2).getOrElse(
           throw new IllegalArgumentException(
             s"MOVE PARTITION: '$t2' is not a registered binding"))
-        val dest = new Path(new Path(b2.path),
-          s"${wh.weekCol}=$partition")
+        val dest = wh.weekDir(new Path(b2.path), partition)
         require(fs.exists(live),
           s"MOVE PARTITION: $partition not present in $table")
         require(!fs.exists(dest),
@@ -435,8 +392,8 @@ case class ChPartitionCommand(table: String, op: String,
 /** CH `ALTER TABLE t MATERIALIZE TTL [AS OF 'yyyy-MM-dd']` — apply the
   * DDL's `TTL <col> + INTERVAL n DAY [DELETE | TO DISK 'path']` stamp
   * at WEEK-PARTITION granularity: a partition whose Monday is before
-  * `toMonday(asOf − n days)` is fully expired — DELETE drops its
-  * directory (rename-retire, the OPTIMIZE convention), TO DISK moves
+  * `toMonday(asOf − n days)` is fully expired — DELETE drops it
+  * ([[graft.sources.Warehouse.dropWeeks]]), TO DISK moves
   * it to the cold tier via [[graft.sources.Warehouse.tierByTtl]]
   * (a rename, never a rewrite). CH evaluates TTL against now() during
   * merges; the `AS OF` pin is this engine's deterministic-clock
@@ -452,11 +409,11 @@ case class ChMaterializeTtlCommand(table: String,
     Seq(AttributeReference("week_expired", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.hadoop.fs.Path
     val wh = graft.sources.Warehouse
     val b = graft.sources.Catalog.binding(table).getOrElse(
       throw new IllegalArgumentException(
         s"MATERIALIZE TTL: '$table' is not a registered binding"))
+    wh.recover(spark, b.path)
     val schema = b.schema.getOrElse(spark.read.parquet(b.path).schema)
     val ttlField = schema.fields.find(_.metadata.contains("graft.ttlDays"))
       .getOrElse(throw new IllegalArgumentException(
@@ -467,33 +424,13 @@ case class ChMaterializeTtlCommand(table: String,
       .getOrElse(java.time.LocalDate.now())
     val cutoff = ref.minusDays(days)
       .`with`(java.time.DayOfWeek.MONDAY)
-    val expired: Seq[String] =
-      if (action.startsWith("disk:"))
-        wh.tierByTtl(spark, b.path, action.stripPrefix("disk:"), cutoff)
-          .map(_.stripPrefix(s"${wh.weekCol}=")) // dir names → week tags
-      else {
-        val tablePath = new Path(b.path)
-        val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(tablePath)) Nil
-        else fs.listStatus(tablePath).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith(s"${wh.weekCol}="))
-          .filter { st =>
-            val day = st.getPath.getName.substring(wh.weekCol.length + 1)
-            java.time.LocalDate.parse(day).isBefore(cutoff)
-          }
-          .map { st =>
-            val retired = new Path(tablePath.getParent,
-              s".${tablePath.getName}_retired_${st.getPath.getName}_" +
-                System.nanoTime())
-            require(fs.rename(st.getPath, retired),
-              s"MATERIALIZE TTL retire failed: ${st.getPath.getName}")
-            fs.delete(retired, true)
-            st.getPath.getName.substring(wh.weekCol.length + 1)
-          }
-      }
+    val expired = wh.weeksOf(spark, b.path)
+      .filter(w => java.time.LocalDate.parse(w).isBefore(cutoff))
+    if (action.startsWith("disk:"))
+      wh.tierByTtl(spark, b.path, action.stripPrefix("disk:"), cutoff)
+    else wh.dropWeeks(spark, b.path, expired)
     spark.catalog.refreshByPath(b.path)
     graft.sources.Catalog.register(spark, b)
-    expired.sorted.map(Row(_))
+    expired.map(Row(_))
   }
 }

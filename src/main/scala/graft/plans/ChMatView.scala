@@ -71,10 +71,8 @@ object ChMatView {
     // CH DROP TABLE on an MV drops its inner state table too — a
     // later CREATE MATERIALIZED VIEW under the same name must start
     // EMPTY, never resurrect the dropped rollup
-    Option(registry.remove(name)).foreach { mv =>
-      val p = new org.apache.hadoop.fs.Path(mv.stateDir)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
+    Option(registry.remove(name)).foreach(mv =>
+      graft.sources.Warehouse.deleteDir(spark, mv.stateDir))
     spark.catalog.dropTempView(name)
   }
 
@@ -125,6 +123,7 @@ object ChMatView {
   def mergeInsert(spark: SparkSession, mv: MvDef,
       inserted: DataFrame, batchId: Option[Long] = None): Unit = {
     val stamp = batchId.map(id => s"graft_folded_$id")
+    graft.sources.Warehouse.recover(spark, mv.stateDir)
     val sp0 = new org.apache.hadoop.fs.Path(mv.stateDir)
     val fs0 = sp0.getFileSystem(spark.sessionState.newHadoopConf())
     if (stamp.exists(m =>
@@ -283,8 +282,7 @@ case class ChCreateMvCommand(name: String, populate: Boolean,
     val stateDir = s"${ChDdl.warehouseRoot(spark)}/mv.$name"
     // a NEW view starts empty even if an earlier same-named MV left
     // state behind
-    val sp = new org.apache.hadoop.fs.Path(stateDir)
-    sp.getFileSystem(spark.sessionState.newHadoopConf()).delete(sp, true)
+    graft.sources.Warehouse.deleteDir(spark, stateDir)
     // analysis-only: the declared shape of the readable view, with
     // columns renamed to the state's names (group aliases + sketch
     // alias) so the empty view and the persisted state agree

@@ -121,7 +121,7 @@ object ChProjections {
   private[plans] def drop(spark: SparkSession, table: String,
       name: String): Unit = {
     Option(defs.remove((table, name))).foreach(d =>
-      graft.FsUtil.rmTree(d.path))
+      graft.sources.Warehouse.deleteDir(spark, d.path))
   }
 
   /** For tests and `system`-style introspection. */

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,36 @@ import graft.functions.ch.toMonday
   * (one sorted file per week per task generation) instead of every task
   * writing a sliver of every week — at 1000 executors that is the
   * difference between W files and W×1000 files per batch.
+  *
+  * '''Directory swaps.''' Every rewrite, drop or recovery of a table's
+  * `week=<monday>` dirs (ALTER DELETE/UPDATE, OPTIMIZE, DROP
+  * PARTITION, MATERIALIZE TTL DELETE) and of a whole dir (a
+  * materialized view's state) goes through this object, under one
+  * protocol. For a live dir `<parent>/<name>`:
+  *
+  *  - new content is written to the staging sibling
+  *    `.<name>_<op>_<nanos>` (`op` one of [[stagingOps]]);
+  *  - each replaced week (or the whole dir) is RETIRED first: renamed
+  *    to `.<name>_retired_week=<monday>_<nanos>` (whole dir:
+  *    `.<name>_retired_<nanos>`), its modification time set to now.
+  *    Then the staged copy renames in, and only then does the retired
+  *    copy delete. A week with no staged copy is dropped: retired and
+  *    deleted. So no copy is deleted before its replacement is in
+  *    place, and the dot prefix keeps every sibling out of partition
+  *    discovery. A reader may see a week absent for the instant
+  *    between the renames, and old and new weeks side by side while a
+  *    swap runs, as during CH mutations.
+  *  - [[recover]] is the sweep every swapping operation runs first,
+  *    before it reads. A leftover older than [[recoveryGraceMs]] heals:
+  *    a retired copy whose live dir is missing renames back (the crash
+  *    hit between the two renames, so that week's operation rolls
+  *    back), one whose live dir exists deletes, and a staging dir
+  *    deletes (its content never swapped in). A younger leftover may
+  *    belong to a swap in progress and stays, except that a dir which
+  *    is missing while a retired copy of the whole of it exists makes
+  *    [[recover]] throw: nothing proceeds over a state it cannot see.
+  *  - [[deleteDir]] removes a dir together with its leftovers, so no
+  *    later sweep restores old data into a truncated or dropped dir.
   */
 object Warehouse {
 
@@ -36,21 +67,28 @@ object Warehouse {
     * MergeTree "many sorted parts per partition" shape.
     */
   def write(df: DataFrame, tableDir: String, dateCol: String,
-      orderKey: Seq[String], mode: String = "append"): Unit = {
-    val cluster = (weekCol +: orderKey).map(c => col(s"`$c`"))
-    // stamp the physical invariant `week = toMonday(dateCol)` into the
-    // date column's field metadata (it survives the parquet schema
-    // roundtrip) — WeekBoundsRule reads it back to partition-prune
-    // week directories from date predicates
-    val stamped = df.withColumn(dateCol, col(s"`$dateCol`").as(dateCol,
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putBoolean(graft.plans.WeekBoundsRule.flag, true).build()))
-    stamped.withColumn(weekCol, toMonday(col(s"`$dateCol`")))
-      .repartitionByRange(cluster: _*)
-      .sortWithinPartitions(cluster: _*)
+      orderKey: Seq[String], mode: String = "append"): Unit =
+    clustered(withWeek(df, dateCol), orderKey)
       .write.mode(mode)
       .partitionBy(weekCol)
       .parquet(tableDir)
+
+  /** `df` with the `week` column, and the physical invariant
+    * `week = toMonday(dateCol)` stamped into the date column's field
+    * metadata (it survives the parquet schema roundtrip):
+    * WeekBoundsRule reads it back to partition-prune week directories
+    * from date predicates.
+    */
+  private def withWeek(df: DataFrame, dateCol: String): DataFrame =
+    df.withColumn(dateCol, col(s"`$dateCol`").as(dateCol,
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putBoolean(graft.plans.WeekBoundsRule.flag, true).build()))
+      .withColumn(weekCol, toMonday(col(s"`$dateCol`")))
+
+  /** Range-partition and sort `df` by (week, orderKey...). */
+  private def clustered(df: DataFrame, orderKey: Seq[String]): DataFrame = {
+    val cluster = (weekCol +: orderKey).map(c => col(s"`$c`"))
+    df.repartitionByRange(cluster: _*).sortWithinPartitions(cluster: _*)
   }
 
   /** Read the warehouse table back (partition column `week` included;
@@ -129,7 +167,6 @@ object Warehouse {
     */
   def tierByTtl(spark: SparkSession, tableDir: String, coldDir: String,
       cutoffMonday: java.time.LocalDate): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
     val hotPath = new Path(tableDir)
     val fs = hotPath.getFileSystem(conf)
@@ -137,20 +174,15 @@ object Warehouse {
     require(coldPath.getFileSystem(conf).getUri == fs.getUri,
       s"hot ($tableDir) and cold ($coldDir) tiers must share a FileSystem")
     if (!fs.exists(hotPath)) return Nil
-    val aged = fs.listStatus(hotPath)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$weekCol="))
-      .filter { st =>
-        val day = st.getPath.getName.substring(weekCol.length + 1)
-        java.time.LocalDate.parse(day).isBefore(cutoffMonday)
-      }
     fs.mkdirs(coldPath)
-    aged.map { st =>
-      val dest = new Path(coldPath, st.getPath.getName)
-      require(fs.rename(st.getPath, dest),
-        s"tier move failed: ${st.getPath} -> $dest")
-      st.getPath.getName
-    }.toSeq.sorted
+    weeksOf(spark, tableDir)
+      .filter(w => java.time.LocalDate.parse(w).isBefore(cutoffMonday))
+      .map { w =>
+        val dest = weekDir(coldPath, w)
+        require(fs.rename(weekDir(hotPath, w), dest),
+          s"tier move failed: ${weekDir(hotPath, w)} -> $dest")
+        dest.getName
+      }
   }
 
   /** CH `ALTER TABLE t DELETE WHERE cond` — the mutation path (GDPR
@@ -159,8 +191,8 @@ object Warehouse {
     * PARTITIONS that do. Two passes: (1) a pushed-down scan finds the
     * affected week values (a handful of strings on the driver — never
     * the rows); (2) ONE job reads just those weeks (partition-pruned),
-    * drops matching rows, and the rewritten weeks swap in via
-    * per-partition Hadoop renames. A 100 TB table with matches in 3
+    * drops matching rows, and the rewritten weeks swap in per week
+    * (the protocol in this object's doc). A 100 TB table with matches in 3
     * weeks costs 3 weeks of IO, not a full-table rewrite; untouched
     * partitions keep their files byte-identical. Readers see old or
     * new data per partition while the swap runs — the same
@@ -198,101 +230,176 @@ object Warehouse {
       })
   }
 
-  /** How old a crashed mutation's leftover dirs must be before the
-    * recovery sweep touches them. The grace period is what keeps two
-    * CONCURRENT mutations of one table from interfering: without it,
-    * mutation B's sweep would "restore" a week that mutation A has
-    * retired mid-swap, making A's fresh-rename fail and stranding its
-    * rewrite. A genuinely crashed swap heals on the first mutation
-    * that runs after the grace elapses.
+  /** How old a swap leftover must be before [[recover]] touches it.
+    * The grace period keeps two CONCURRENT swaps of one dir from
+    * interfering: without it, swap B's sweep would "restore" a week
+    * that swap A has retired mid-swap, making A's rename-in fail and
+    * stranding its rewrite. A genuinely crashed swap heals on the
+    * first swapping operation that runs after the grace elapses.
     */
   val recoveryGraceMs: Long = 10 * 60 * 1000L
 
-  /** Self-heal a crashed mutation, touching only leftovers older than
-    * `graceMs`: a retired week dir whose live week is MISSING renames
-    * back (the crash hit between the two swap renames); one whose
-    * live week exists is stale and deletes; an orphaned `_mutation_`
-    * tmp dir deletes too (its content never swapped in — live +
-    * retired copies cover every week, so it is a pure leak).
+  /** The op tags of staging dirs (`.<name>_<op>_<nanos>`): ALTER
+    * DELETE/UPDATE, OPTIMIZE, and a materialized view's next state.
     */
-  private def recoverRetired(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: org.apache.hadoop.fs.Path,
-      graceMs: Long = recoveryGraceMs): Unit = {
-    import org.apache.hadoop.fs.Path
-    val prefix = s".${tablePath.getName}_retired_$weekCol="
-    val tmpPrefix = s".${tablePath.getName}_mutation_"
-    val parent = tablePath.getParent
-    if (!fs.exists(parent)) return
-    val cutoff = System.currentTimeMillis() - graceMs
-    fs.listStatus(parent)
-      .filter(st => st.isDirectory && st.getModificationTime < cutoff)
-      .foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith(prefix)) {
-          val week = name.substring(prefix.length).takeWhile(_ != '_')
-          val live = new Path(tablePath, s"$weekCol=$week")
-          if (!fs.exists(live))
-            require(fs.rename(st.getPath, live),
-              s"mutation recovery failed for week $week")
-          else fs.delete(st.getPath, true)
-        } else if (name.startsWith(tmpPrefix)) {
-          fs.delete(st.getPath, true)
-        }
-      }
+  private val stagingOps = Seq("mutation", "optimize", "next")
+
+  /** `<tableDir>/week=<monday>`, the directory of one week. */
+  def weekDir(tableDir: Path, week: String): Path =
+    new Path(tableDir, s"$weekCol=$week")
+
+  /** The Mondays of the table's week directories, sorted (Nil when the
+    * table dir is absent).
+    */
+  def weeksOf(spark: SparkSession, tableDir: String): Seq[String] = {
+    val table = new Path(tableDir)
+    val fs = fsOf(spark, table)
+    if (!fs.exists(table)) Nil
+    else fs.listStatus(table).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$weekCol="))
+      .map(_.getPath.getName.substring(weekCol.length + 1)).sorted
+  }
+
+  /** The recovery sweep over `dir`'s swap leftovers (the protocol in
+    * this object's doc); every swapping operation runs it first.
+    */
+  def recover(spark: SparkSession, dir: String): Unit = {
+    val live = new Path(dir)
+    val fs = fsOf(spark, live)
+    val found = leftovers(fs, live)
+    val cutoff = System.currentTimeMillis() - recoveryGraceMs
+    found.filter(_._1.getModificationTime < cutoff).foreach {
+      case (st, Some(target)) if !fs.exists(target) =>
+        require(fs.rename(st.getPath, target),
+          s"swap recovery failed: ${st.getPath} -> $target")
+      case (st, _) => fs.delete(st.getPath, true)
+    }
+    if (!fs.exists(live))
+      found.collectFirst {
+        case (st, Some(`live`)) if fs.exists(st.getPath) => st.getPath
+      }.foreach(copy => throw new IllegalStateException(
+        s"$live is missing while its retired copy $copy exists: a swap " +
+          s"of it is in progress or crashed less than " +
+          s"${recoveryGraceMs / 60000} min ago, after which the next " +
+          "swapping operation restores the copy"))
+  }
+
+  /** Replace `weeks` of the table, and every week `stage` writes, by
+    * the weeks `stage` writes into the staging dir it is handed: a
+    * listed week `stage` does not write is dropped. Runs no sweep; the
+    * caller runs [[recover]] before it reads the table.
+    */
+  def replaceWeeks(spark: SparkSession, tableDir: String,
+      weeks: Seq[String], op: String)(stage: String => Unit): Unit = {
+    require(stagingOps.contains(op), s"unknown staging op: $op")
+    val table = new Path(tableDir)
+    val fs = fsOf(spark, table)
+    val staged = sibling(table, op)
+    stage(staged.toString)
+    (weeks ++ weeksOf(spark, staged.toString)).distinct.foreach(w =>
+      swapWeek(fs, table, w, Some(weekDir(staged, w))))
+    fs.delete(staged, true)
+  }
+
+  /** Drop `weeks` of the table (retire, then delete); an absent week
+    * is a no-op.
+    */
+  def dropWeeks(spark: SparkSession, tableDir: String,
+      weeks: Seq[String]): Unit = {
+    val table = new Path(tableDir)
+    val fs = fsOf(spark, table)
+    weeks.foreach(w => swapWeek(fs, table, w, None))
+  }
+
+  /** Replace the whole of `dir` by what `stage` writes into the
+    * staging dir it is handed.
+    */
+  def replaceDir(spark: SparkSession, dir: String)(
+      stage: String => Unit): Unit = {
+    val live = new Path(dir)
+    val fs = fsOf(spark, live)
+    val staged = sibling(live, "next")
+    stage(staged.toString)
+    swap(fs, live, Some(staged), sibling(live, "retired"))
+  }
+
+  /** Delete `dir` and its swap leftovers through the session's
+    * FileSystem, so a later sweep restores nothing into it.
+    */
+  def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val live = new Path(dir)
+    val fs = fsOf(spark, live)
+    fs.delete(live, true)
+    leftovers(fs, live).foreach(l => fs.delete(l._1.getPath, true))
+  }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def sibling(live: Path, tag: String): Path =
+    new Path(live.getParent, s".${live.getName}_${tag}_${System.nanoTime()}")
+
+  private def swapWeek(fs: FileSystem, table: Path, week: String,
+      fresh: Option[Path]): Unit = {
+    val live = weekDir(table, week)
+    swap(fs, live, fresh, sibling(table, s"retired_${live.getName}"))
+  }
+
+  /** Retire `live` (when present), rename `fresh` (when present) in,
+    * delete the retired copy. The retire time is stamped BEFORE the
+    * rename, because a rename keeps a dir's modification time, and
+    * the sweep's grace period is measured from it.
+    */
+  private def swap(fs: FileSystem, live: Path, fresh: Option[Path],
+      retired: Path): Unit = {
+    if (fs.exists(live)) {
+      fs.setTimes(live, System.currentTimeMillis(), -1)
+      require(fs.rename(live, retired), s"swap: retiring $live failed")
+    }
+    fresh.filter(fs.exists).foreach(f =>
+      require(fs.rename(f, live), s"swap: renaming $f to $live failed"))
+    fs.delete(retired, true)
+  }
+
+  /** `dir`'s swap leftovers among its siblings, each with the dir a
+    * retired copy restores to (None: a staging dir).
+    */
+  private def leftovers(fs: FileSystem,
+      dir: Path): Seq[(FileStatus, Option[Path])] = {
+    val pre = java.util.regex.Pattern.quote(s".${dir.getName}_")
+    val retiredWeek = s"${pre}retired_$weekCol=([^_]+)(?:_.*)?".r
+    val retiredDir = s"${pre}retired(?:_-?\\d+)?".r
+    val staging = s"$pre(?:${stagingOps.mkString("|")})(?:_-?\\d+)?".r
+    if (!fs.exists(dir.getParent)) Nil
+    else fs.listStatus(dir.getParent).toSeq.filter(_.isDirectory)
+      .flatMap(st => st.getPath.getName match {
+        case retiredWeek(w) => Some(st -> Some(weekDir(dir, w)))
+        case retiredDir() => Some(st -> Some(dir))
+        case staging() => Some(st -> None)
+        case _ => None
+      })
   }
 
   private def mutate(spark: SparkSession, tableDir: String,
       cond: org.apache.spark.sql.Column, orderKey: Seq[String],
       transform: DataFrame => DataFrame): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val tp0 = new Path(tableDir)
-    recoverRetired(tp0.getFileSystem(spark.sessionState.newHadoopConf()),
-      tp0)
+    recover(spark, tableDir)
     // pass 1: affected weeks only — the predicate pushes to the scan
     // and only the partition column comes back
     val affected = read(spark, tableDir).filter(cond)
       .select(col(weekCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     if (affected.isEmpty) return Nil
-    val tablePath = new Path(tableDir)
-    val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(tablePath.getParent,
-      s".${tablePath.getName}_mutation_${System.nanoTime()}")
-    // pass 2: one job over just the affected weeks (directory-pruned)
-    val subset = read(spark, tableDir)
-      .filter(col(weekCol).isin(affected.map(w => w: Any): _*))
-    val rewritten = transform(subset)
-    val clustered =
-      if (orderKey.nonEmpty) {
-        val cluster = (weekCol +: orderKey).map(c => col(s"`$c`"))
-        rewritten.repartitionByRange(cluster: _*)
-          .sortWithinPartitions(cluster: _*)
-      } else rewritten
-    clustered.write.partitionBy(weekCol).parquet(tmp.toString)
-    // swap each affected week retire-then-rename (the ChAlterTable /
-    // MatView.swapState discipline): live renames to a WEEK-TAGGED
-    // retired sibling, fresh renames in, then the retired copy
-    // deletes. No copy of a week is ever deleted before its
-    // replacement is in place, and a crash between the two renames is
-    // healed by [[recoverRetired]] on the next mutation (the tag
-    // says which week to restore). A concurrent reader can observe
-    // the week absent for the instant between the renames — the
-    // price of swapping without a catalog; CH mutations hide it
-    // behind part-level MVCC, this engine behind the recovery sweep.
-    // (A week whose rows ALL matched a delete simply disappears:
-    // retire without replacement.)
-    affected.foreach { w =>
-      val live = new Path(tablePath, s"$weekCol=$w")
-      val fresh = new Path(tmp, s"$weekCol=$w")
-      val retired = new Path(tablePath.getParent,
-        s".${tablePath.getName}_retired_$weekCol=${w}_${System.nanoTime()}")
-      if (fs.exists(live))
-        require(fs.rename(live, retired), s"mutation retire failed for $w")
-      if (fs.exists(fresh))
-        require(fs.rename(fresh, live), s"mutation swap failed for $w")
-      fs.delete(retired, true)
+    // pass 2: one job over just the affected weeks (directory-pruned),
+    // swapped in per week; a week whose rows ALL matched a delete is
+    // not written, so it disappears
+    replaceWeeks(spark, tableDir, affected, "mutation") { staged =>
+      val rewritten = transform(read(spark, tableDir)
+        .filter(col(weekCol).isin(affected.map(w => w: Any): _*)))
+      (if (orderKey.nonEmpty) clustered(rewritten, orderKey) else rewritten)
+        .write.partitionBy(weekCol).parquet(staged)
     }
-    fs.delete(tmp, true)
     affected
   }
 
@@ -302,7 +409,6 @@ object Warehouse {
     */
   def readTiered(spark: SparkSession, hotDir: String,
       coldDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val hot = read(spark, hotDir)
     val coldPath = new Path(coldDir)
     val fs = coldPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -351,11 +457,7 @@ object Warehouse {
     */
   def writeBucketedWeekly(df: DataFrame, table: String, tableDir: String,
       dateCol: String, bucketCol: String, buckets: Int): Unit = {
-    val stamped = df.withColumn(dateCol, col(s"`$dateCol`").as(dateCol,
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putBoolean(graft.plans.WeekBoundsRule.flag, true).build()))
-      .withColumn(weekCol, toMonday(col(s"`$dateCol`")))
-    writeBucketed(stamped, table, tableDir, bucketCol, buckets,
+    writeBucketed(withWeek(df, dateCol), table, tableDir, bucketCol, buckets,
       partitionCol = Some(weekCol))
   }
 

@@ -80,14 +80,17 @@ object Ingest {
 
   /** Apply the cleanup policy before (re)activation: DROP/TRUNCATE
     * clear the table (and DROP also the checkpoint — a from-scratch
-    * transfer); DISABLED keeps everything (re-activation appends).
+    * transfer) through the session's FileSystem
+    * ([[Warehouse.deleteDir]]); DISABLED keeps everything
+    * (re-activation appends).
     */
-  def applyCleanupPolicy(sink: Sink, checkpointDir: String): Unit =
+  def applyCleanupPolicy(spark: SparkSession, sink: Sink,
+      checkpointDir: String): Unit =
     sink.cleanupPolicy match {
       case "DROP" =>
-        graft.FsUtil.rmTree(tableDir(sink))
-        graft.FsUtil.rmTree(checkpointDir)
-      case "TRUNCATE" => graft.FsUtil.rmTree(tableDir(sink))
+        Warehouse.deleteDir(spark, tableDir(sink))
+        Warehouse.deleteDir(spark, checkpointDir)
+      case "TRUNCATE" => Warehouse.deleteDir(spark, tableDir(sink))
       case _ => ()
     }
 
@@ -107,7 +110,7 @@ object Ingest {
       prepare: DataFrame => DataFrame = identity,
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    applyCleanupPolicy(sink, checkpointDir)
+    applyCleanupPolicy(spark, sink, checkpointDir)
     // the replicated table registers as a Catalog binding, so it is
     // immediately queryable by name AND materialized views can hang
     // off it — the reference stack's production shape (Data Transfer

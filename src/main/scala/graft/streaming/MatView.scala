@@ -74,6 +74,7 @@ object MatView {
   def foldPartial(spark: SparkSession, partial: DataFrame,
       stateDir: String, groupCols: Seq[String], sketchCol: String): Unit = {
     val gcols = groupCols.map(c => col(s"`$c`"))
+    graft.sources.Warehouse.recover(spark, stateDir)
     val statePath = new org.apache.hadoop.fs.Path(stateDir)
     val fs = statePath.getFileSystem(spark.sessionState.newHadoopConf())
     val merged =
@@ -85,14 +86,13 @@ object MatView {
     swapState(spark, merged, stateDir)
   }
 
-  /** Materialize `merged` and swap it in as the new state table. The
-    * frame may READ the current state (the usual fold) — it
+  /** Materialize `merged` and swap it in as the new state table
+    * ([[graft.sources.Warehouse.replaceDir]]; the fold runs
+    * [[graft.sources.Warehouse.recover]] before it reads the state).
+    * The frame may READ the current state (the usual fold) — it
     * localCheckpoints BEFORE any file moves, so the plan never reads
-    * files the swap is replacing. Swap is retire-then-rename: at no
-    * instant is the only full state copy in a dot-dir a restart would
-    * ignore (delete-then-rename has a crash window that loses the
-    * whole rollup). State tables are |groups|-sized, so the
-    * checkpoint stays tiny.
+    * files the swap is replacing. State tables are |groups|-sized, so
+    * the checkpoint stays tiny.
     *
     * `publishMarker`, when set, names an underscore file written into
     * the NEW state dir before the rename — data and marker publish in
@@ -103,25 +103,15 @@ object MatView {
     */
   def swapState(spark: SparkSession, merged: DataFrame,
       stateDir: String, publishMarker: Option[String] = None): Unit = {
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sessionState.newHadoopConf())
     val rows = merged.localCheckpoint(eager = true)
-    val tmp = new org.apache.hadoop.fs.Path(
-      statePath.getParent, s".${statePath.getName}_next")
-    fs.delete(tmp, true)
-    rows.write.parquet(tmp.toString)
-    publishMarker.foreach { m =>
-      fs.create(new org.apache.hadoop.fs.Path(tmp, s"_$m"), true).close()
+    graft.sources.Warehouse.replaceDir(spark, stateDir) { staged =>
+      rows.write.parquet(staged)
+      publishMarker.foreach { m =>
+        val marker = new org.apache.hadoop.fs.Path(staged, s"_$m")
+        marker.getFileSystem(spark.sessionState.newHadoopConf())
+          .create(marker, true).close()
+      }
     }
-    val retired = new org.apache.hadoop.fs.Path(
-      statePath.getParent, s".${statePath.getName}_retired")
-    fs.delete(retired, true)
-    if (fs.exists(statePath))
-      require(fs.rename(statePath, retired),
-        s"state retire failed: $statePath")
-    require(fs.rename(tmp, statePath),
-      s"state swap failed: $tmp -> $statePath")
-    fs.delete(retired, true)
   }
 
   /** The persisted rollup state (one sketch row per group). */

@@ -212,6 +212,35 @@ class ChDdlSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.warehouse")
   }
 
+  test("an INSERT after a crashed MV state swap, past the grace " +
+      "period, folds into the restored state") {
+    val root = tempDir("ddlspec_mvcrash")
+    spark.conf.set("spark.graft.warehouse", root)
+    try {
+      spark.sql("""
+        CREATE TABLE mvc_src (`uid` UInt64, `d` Date)
+        ENGINE = MergeTree PARTITION BY toMonday(d) ORDER BY (uid)""")
+      spark.sql("""
+        CREATE MATERIALIZED VIEW mvc_mv ENGINE = AggregatingMergeTree
+        AS SELECT toMonday(d) AS wk, countState() AS n
+        FROM mvc_src GROUP BY wk""")
+      Seq((1L, "2024-01-02"), (2L, "2024-01-03"))
+        .toDF("uid", "ds").createOrReplaceTempView("mvc_b")
+      spark.sql("INSERT INTO mvc_src SELECT uid, CAST(ds AS DATE) FROM mvc_b")
+      // the next fold's swap crashed long ago between its renames: the
+      // state retired, never replaced
+      val state = new java.io.File(root, "mv.mvc_mv")
+      val retired = new java.io.File(root, ".mv.mvc_mv_retired_1")
+      assert(state.renameTo(retired))
+      retired.setLastModified(System.currentTimeMillis() -
+        graft.sources.Warehouse.recoveryGraceMs - 60000)
+      spark.sql("INSERT INTO mvc_src SELECT uid, CAST(ds AS DATE) FROM mvc_b")
+      assert(!retired.exists())
+      assert(spark.sql("SELECT countMerge(n) FROM mvc_mv")
+        .collect().head.getLong(0) == 4L)
+    } finally spark.conf.unset("spark.graft.warehouse")
+  }
+
   test("MATERIALIZED VIEW with the full -State family: exact merges") {
     val root = tempDir("ddlspec_mvfam")
     spark.conf.set("spark.graft.warehouse", root)

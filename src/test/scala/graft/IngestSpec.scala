@@ -80,17 +80,26 @@ class IngestSpec extends SparkSpec {
   }
 
   test("cleanup policy DROP clears table and checkpoint; TRUNCATE keeps checkpoint") {
-    val base = tempDir("ingest_spec2")
-    val srcDir = s"$base/src"
-    val sink = Ingest.Sink(s"$base/wh", "visits", "t2",
-      dateCol = "d", orderKey = Seq("id", "ver"), cleanupPolicy = "DROP")
-    val schema = visitRows(Nil).schema
-    visitRows(Seq((1L, 1L, 1, "2023-11-01"))).write.mode("append").parquet(srcDir)
-    Ingest.runToCompletion(spark, srcDir, schema, sink, s"$base/cp")
-    assert(Warehouse.read(spark, Ingest.tableDir(sink)).count() == 1)
-    // re-activation with DROP reprocesses from scratch → still exactly 1
-    Ingest.runToCompletion(spark, srcDir, schema, sink, s"$base/cp")
-    assert(Warehouse.read(spark, Ingest.tableDir(sink)).count() == 1)
+    // a plain path, then a file: URI (the object-store shape)
+    for (base <- Seq(tempDir("ingest_spec2"), "file:" + tempDir("ingest_spec2f"))) {
+      val srcDir = s"$base/src"
+      val sink = Ingest.Sink(s"$base/wh", "visits", "t2",
+        dateCol = "d", orderKey = Seq("id", "ver"), cleanupPolicy = "DROP")
+      val schema = visitRows(Nil).schema
+      visitRows(Seq((1L, 1L, 1, "2023-11-01"))).write.mode("append").parquet(srcDir)
+      Ingest.runToCompletion(spark, srcDir, schema, sink, s"$base/cp")
+      assert(Warehouse.read(spark, Ingest.tableDir(sink)).count() == 1)
+      // re-activation with DROP reprocesses from scratch → still exactly 1
+      Ingest.runToCompletion(spark, srcDir, schema, sink, s"$base/cp")
+      assert(Warehouse.read(spark, Ingest.tableDir(sink)).count() == 1)
+      // TRUNCATE empties the table but keeps the checkpoint: only the
+      // file that arrived since lands
+      visitRows(Seq((2L, 1L, 1, "2023-11-02"))).write.mode("append").parquet(srcDir)
+      Ingest.runToCompletion(spark, srcDir, schema,
+        sink.copy(cleanupPolicy = "TRUNCATE"), s"$base/cp")
+      assert(Warehouse.read(spark, Ingest.tableDir(sink)).select($"id")
+        .as[Long].collect().toSeq == Seq(2L), base)
+    }
   }
 
   test("weekly compaction keeps only the latest live version per entity") {

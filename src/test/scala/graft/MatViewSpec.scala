@@ -1,7 +1,10 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.functions._
 
+import graft.sources.Warehouse
 import graft.streaming.MatView
 
 /** Ingest-time materialized HLL rollup (the AggregatingMergeTree MV):
@@ -66,5 +69,56 @@ class MatViewSpec extends SparkSpec {
       MatView.readState(spark, s"$b/state"), Seq(col("g")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est == Map("a" -> 3L, "b" -> 1L)) // {1,2} u {2,3} = 3
+  }
+
+  private val batch1 = Seq(("a", 1L), ("b", 2L))
+  private val batch2 = Seq(("a", 3L), ("c", 4L))
+
+  private def fold(batch: Seq[(String, Long)], stateDir: String): Unit =
+    MatView.mergeBatch(spark, batch.toDF("g", "k"), stateDir, Seq("g"), "k")
+
+  private def estimates(stateDir: String): Map[String, Long] =
+    MatView.estimateAt(MatView.readState(spark, stateDir), Seq(col("g")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Fold batch1 into `<b>/state`, then leave batch2's swap crashed
+    * between its renames: the state retired, its successor staged.
+    * Returns (state, retired copy, staged copy).
+    */
+  private def crashedSwap(b: String): (File, File, File) = {
+    fold(batch1, s"$b/state")
+    val state = new File(s"$b/state")
+    val retired = new File(b, ".state_retired_1")
+    val staged = new File(b, ".state_next_1")
+    assert(state.renameTo(retired))
+    fold(batch1 ++ batch2, s"$b/other")
+    assert(new File(s"$b/other").renameTo(staged))
+    (state, retired, staged)
+  }
+
+  test("a fold after a crashed state swap, past the grace period, " +
+      "restores the retired state first") {
+    val b = base("swapold")
+    fold(batch1, s"$b/clean")
+    fold(batch2, s"$b/clean")
+    val (_, retired, staged) = crashedSwap(b)
+    val old = System.currentTimeMillis() - Warehouse.recoveryGraceMs - 60000
+    retired.setLastModified(old)
+    staged.setLastModified(old)
+    fold(batch2, s"$b/state")
+    assert(estimates(s"$b/state") == estimates(s"$b/clean"))
+    assert(!retired.exists() && !staged.exists())
+  }
+
+  test("a fold inside the grace period of a crashed state swap fails " +
+      "and leaves both copies intact") {
+    val b = base("swapfresh")
+    val (state, retired, staged) = crashedSwap(b)
+    def contents(f: File) = f.list().sorted.toSeq
+    val (r0, s0) = (contents(retired), contents(staged))
+    val e = intercept[IllegalStateException](fold(batch2, s"$b/state"))
+    assert(e.getMessage.contains(retired.getName), e.getMessage)
+    assert(!state.exists())
+    assert(contents(retired) == r0 && contents(staged) == s0)
   }
 }

@@ -121,6 +121,86 @@ class MutationSpec extends SparkSpec {
     assert(retired.renameTo(new File(dir, "week=2024-01-08")))
   }
 
+  /** `dir`'s sibling `.<dir name>_<suffix>`, made by renaming `from`
+    * (a new empty dir when None) and dated before the recovery grace
+    * period: what a swap that crashed long ago left behind.
+    */
+  private def oldLeftover(dir: File, suffix: String,
+      from: Option[File]): File = {
+    val f = new File(dir.getParentFile, s".${dir.getName}_$suffix")
+    assert(from.fold(f.mkdirs())(_.renameTo(f)))
+    f.setLastModified(
+      System.currentTimeMillis() - Warehouse.recoveryGraceMs - 60000)
+    f
+  }
+
+  private def registered(name: String): (String, File) = {
+    val t = freshTable(name)
+    graft.sources.Catalog.register(spark,
+      graft.sources.Binding(s"crash_$name", t))
+    (s"crash_$name", new File(t))
+  }
+
+  test("OPTIMIZE heals a crashed whole-table swap and sweeps its " +
+      "staging dir") {
+    val (t, dir) = registered("opt")
+    val before = spark.table(t).count()
+    // the table dir retired, its compacted copy never renamed in
+    val retired = oldLeftover(dir, "retired_12345", Some(dir))
+    val staged = oldLeftover(dir, "optimize_99999", None)
+    spark.sql(s"OPTIMIZE TABLE $t DEDUPLICATE").collect()
+    assert(!retired.exists() && !staged.exists())
+    assert(spark.table(t).count() == before)
+  }
+
+  test("OPTIMIZE PARTITION restores a crashed swap's retired week first") {
+    val (t, dir) = registered("optpart")
+    val before = spark.table(t).count()
+    val retired = oldLeftover(dir, "retired_week=2024-01-08_1",
+      Some(new File(dir, "week=2024-01-08")))
+    val weeks = spark.sql(
+      s"OPTIMIZE TABLE $t PARTITION '2024-01-08' DEDUPLICATE")
+      .collect().map(_.getString(0)).toSeq
+    assert(weeks == Seq("2024-01-08"))
+    assert(!retired.exists())
+    assert(spark.table(t).count() == before)
+  }
+
+  test("DROP PARTITION restores a crashed swap's retired week first") {
+    val (t, dir) = registered("droppart")
+    val retired = oldLeftover(dir, "retired_week=2024-01-08_1",
+      Some(new File(dir, "week=2024-01-08")))
+    spark.sql(s"ALTER TABLE $t DROP PARTITION '2024-01-15'").collect()
+    assert(!retired.exists())
+    assert(dir.list().filter(_.startsWith("week=")).sorted.toSeq ==
+      Seq("week=2024-01-01", "week=2024-01-08"))
+  }
+
+  test("MATERIALIZE TTL restores a crashed swap's retired week first") {
+    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
+    val t = freshTable("ttl")
+    val dir = new File(t)
+    // a 7-day DELETE TTL on d, as the DDL's TTL clause stamps it
+    val schema = StructType(spark.read.parquet(t).schema
+      .filter(_.name != Warehouse.weekCol)
+      .map(f => if (f.name != "d") f else f.copy(metadata =
+        new MetadataBuilder().withMetadata(f.metadata)
+          .putLong("graft.ttlDays", 7L)
+          .putString("graft.ttlAction", "delete").build())))
+    graft.sources.Catalog.register(spark, graft.sources.Binding(
+      "crash_ttl", t, schema = Some(schema), dateCol = Some("d"),
+      orderKey = Seq("id")))
+    val retired = oldLeftover(dir, "retired_week=2024-01-08_1",
+      Some(new File(dir, "week=2024-01-08")))
+    // cutoff toMonday(2024-01-16 - 7 days) = 2024-01-08
+    val expired = spark.sql(
+      "ALTER TABLE crash_ttl MATERIALIZE TTL AS OF '2024-01-16'")
+      .collect().map(_.getString(0)).toSeq
+    assert(expired == Seq("2024-01-01"))
+    assert(!retired.exists())
+    assert(spark.table("crash_ttl").count() == 14 * 5)
+  }
+
   test("no matches: nothing touched, Nil returned") {
     val t = freshTable("nomatch")
     val before = (1 to 15 by 7)

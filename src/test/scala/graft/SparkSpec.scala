@@ -29,10 +29,7 @@ object SparkSpec {
     * checkouts running the suite at once share no directory. It is
     * removed when the JVM exits, after Spark's shutdown hooks (a lower
     * Hadoop hook priority): those delete Spark's own temp dirs, some of
-    * them under this root. Names stay short on purpose: a plan string
-    * cuts a scan's path at `spark.sql.maxMetadataStringLength` (100),
-    * and the projection specs look for a table dir's `__proj_` suffix
-    * in it.
+    * them under this root.
     */
   private lazy val runDir: Path = {
     val d = Paths.get(sys.props("java.io.tmpdir"),
@@ -57,6 +54,13 @@ trait SparkSpec extends AnyFunSuite {
 
   /** [[SparkSpec.tempDir]]: a new empty directory, removed with the run. */
   protected def tempDir(tag: String): String = SparkSpec.tempDir(tag)
+
+  /** Whether `q` reads a projection's rollup: one of its input files
+    * lies in a `__proj_` dir. Its plan string cannot tell: it cuts a
+    * scan's path at `spark.sql.maxMetadataStringLength` (100 chars).
+    */
+  protected def readsProjection(q: org.apache.spark.sql.DataFrame): Boolean =
+    q.inputFiles.exists(_.contains("__proj_"))
 
   /** `p`, a file of the reference checkout; cancels the calling test,
     * naming `p`, where the checkout does not hold it.
