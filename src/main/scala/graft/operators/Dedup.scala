@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.text
+
 /** Deduplication operators for training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH and SimHash near-dedup, and exact n-gram
   * Jaccard verification.
@@ -15,6 +17,20 @@ import org.apache.spark.sql.functions._
   * size + quadratic only within a bucket (bucket width is controlled by
   * the band/row parameters; pathological buckets can additionally be
   * capped or salted).
+  *
+  * Exact verify. Candidate pairs over per-document sets come from
+  * MinHash bands, SimHash bands, prefix-filtered shingle postings or a
+  * deterministic partner rule, and all of them go through ONE verify
+  * stage (`verifySets`): the documents are semi-joined to the
+  * candidate ids, the set is computed for those documents only and
+  * joined to both pair sides, and the stage emits `n_a`, `n_b` and
+  * `n_inter` (|A|, |B|, |A∩B|). Jaccard is `n_inter / (n_a + n_b −
+  * n_inter)` and containment `n_inter / least(n_a, n_b)`, each 0 when
+  * its denominator is 0. Every set on these paths is distinct
+  * ([[graft.functions.text.ngrams]] emits distinct shingles; the hashed
+  * form applies `array_distinct`), so `n_a + n_b − n_inter` is |A∪B|.
+  * The candidate strategy decides recall and cost; the answer over the
+  * candidates is always exact.
   */
 object Dedup {
 
@@ -208,15 +224,46 @@ object Dedup {
       .select(keep :+ posexplode(keys).as(Seq("band", "bkey")): _*)
   }
 
-  /** Exact Jaccard |A∩B| / |A∪B| from the intersection and union
-    * sizes; 0 when the union is empty.
+  /** Distinct `n`-token shingles of the text column `textCol`. The
+    * name is backtick-quoted, so a dotted name is one column.
     */
-  private def jaccard(nInter: Column, nUnion: Column): Column =
-    when(nUnion > 0, nInter.cast("double") / nUnion).otherwise(lit(0.0))
+  private def shingles(textCol: String, n: Int): Column =
+    text.ngrams(text.tokenize(col(s"`$textCol`")), n)
 
-  /** [[jaccard]] of two shingle-set columns. */
+  /** [[shingles]] as a sorted distinct set of xxhash64 values: 8-byte
+    * elements instead of ~30-byte strings on the verify shuffle (the
+    * dominant sf1 cost of containment). Set-exact up to a 64-bit
+    * collision inside one pair's sets (~n²/2^64 ≈ 1e-16 for realistic
+    * doc sizes); `array_distinct` keeps the per-doc sizes exact even
+    * then.
+    */
+  private def hashedShingles(textCol: String, n: Int): Column =
+    array_sort(array_distinct(
+      transform(shingles(textCol, n), g => xxhash64(g))))
+
+  /** |A∩B| of two distinct-element set columns. */
+  private def nInter(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("long")
+
+  /** Jaccard of two distinct sets from their sizes and overlap:
+    * `nInter / (nA + nB − nInter)`, 0 when the union is empty.
+    */
+  private def jaccard(nA: Column, nB: Column, nInter: Column): Column = {
+    val nUnion = nA + nB - nInter
+    when(nUnion > 0, nInter.cast("double") / nUnion).otherwise(lit(0.0))
+  }
+
+  /** Containment `nInter / least(nA, nB)`; 0 when a set is empty. */
+  private def containment(nA: Column, nB: Column, nInter: Column): Column = {
+    val nMin = least(nA, nB)
+    when(nMin > 0, nInter.cast("double") / nMin).otherwise(lit(0.0))
+  }
+
+  /** [[jaccard]] of two set columns, for the index joins that meet
+    * their sets without the verify stage.
+    */
   private def jaccardOf(a: Column, b: Column): Column =
-    jaccard(size(array_intersect(a, b)), size(array_union(a, b)))
+    jaccard(size(a), size(b), nInter(a, b))
 
   /** All (id_a < id_b) pairs within each bucket of a (band, key)
     * bucketing: ONE shuffle on the bucket key, collect ids per bucket,
@@ -299,43 +346,64 @@ object Dedup {
     pairsWithinBuckets(bandRows(df, shinglesCol, numHashes, bands, col(idCol)),
       idCol, maxBucket, obs)
 
-  /** Exact Jaccard verification of candidate pairs: join the shingle
-    * sets back (two hash joins on the id), compute |A∩B| / |A∪B|.
-    * Candidates are a tiny fraction of the corpus, so the exact pass is
-    * cheap; correctness of the final answer never depends on the
-    * probabilistic candidate step.
+  /** The exact set-overlap verify stage (see the object doc): candidate
+    * `pairs` `(id_a, id_b, extra…)` joined to the per-document `set` of
+    * `docs`, returned as the pair columns (`id_b` first: the using-join
+    * order) plus `n_a`, `n_b` and `n_inter`.
+    *
+    * The documents are first semi-joined to the distinct ids the pairs
+    * mention, so `set` is computed only for candidate documents: the
+    * verify cost follows the candidates, not the corpus. No broadcast
+    * hint: the id set is usually tiny (AQE broadcasts it), but a
+    * boilerplate-heavy corpus can push it past the broadcast ceiling.
+    *
+    * `stage = true` stages the pairs ([[graft.Graft.stage]]) first, so
+    * the call runs Spark jobs before it returns. The pairs feed both
+    * the id set and the pair join, and unstaged the whole candidate
+    * subtree executes once per consumer (measured on containment at
+    * sf1: ~23 s → ~13 s staged). The frame is candidate-sized, so the
+    * stage is cheap, and a bucket-cap Observation on it fires exactly
+    * once; `false` keeps the whole plan inspectable for plan audits.
     */
-  def jaccardVerify(docs: DataFrame, pairs: DataFrame, idCol: String,
-      shinglesCol: String): DataFrame = {
-    val a = docs.select(col(idCol).as("id_a"), col(shinglesCol).as("__sh_a"))
-    val b = docs.select(col(idCol).as("id_b"), col(shinglesCol).as("__sh_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("long"))
-      .withColumn("n_union",
-        size(array_union(col("__sh_a"), col("__sh_b"))).cast("long"))
-      .withColumn("jaccard", jaccard(col("n_inter"), col("n_union")))
-      .drop("__sh_a", "__sh_b")
+  private[graft] def verifySets(docs: DataFrame, pairs: DataFrame,
+      idCol: String, set: Column, stage: Boolean = false): DataFrame = {
+    val cands = if (stage) graft.Graft.stage(pairs) else pairs
+    val candidateIds = cands
+      .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
+    val sets = docs.join(candidateIds, Seq(idCol), "left_semi")
+      .select(col(idCol), set.as("__set"))
+    def side(s: String) =
+      sets.select(col(idCol).as(s"id_$s"), col("__set").as(s"__set_$s"))
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn("n_a", size(col("__set_a")).cast("long"))
+      .withColumn("n_b", size(col("__set_b")).cast("long"))
+      .withColumn("n_inter", nInter(col("__set_a"), col("__set_b")))
+      .drop("__set_a", "__set_b")
   }
 
-  /** The distinct document ids mentioned by a candidate-pair set —
-    * the verification stage's working set. Joining THIS back first
-    * (semi-join) makes verify cost proportional to candidates, not
-    * corpus: without it each verify side recomputes shingles for every
-    * document. The candidate subtree ends in an exchange (`distinct`),
-    * so Spark's exchange reuse evaluates it once even though both the
-    * id set and the pair join consume it.
+  /** A [[verifySets]] frame scored as `(…, n_inter, n_union, jaccard)`. */
+  private[graft] def jaccardScored(verified: DataFrame): DataFrame =
+    verified
+      .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
+      .withColumn("jaccard", jaccard(col("n_a"), col("n_b"), col("n_inter")))
+      .drop("n_a", "n_b")
+
+  /** Exact Jaccard verification of candidate pairs over the distinct
+    * set column `shinglesCol` of `docs`: the verify stage, as
+    * `(id_b, id_a, extra…, n_inter, n_union, jaccard)`. Correctness of
+    * the answer never depends on how the candidates were generated. A
+    * set column computed by a projection of `docs` is computed for
+    * every document: the optimizer does not move the semi-join below
+    * that projection (pass the set as a Column to `verifySets`).
     */
-  private[graft] def candidateIds(pairs: DataFrame, idCol: String): DataFrame =
-    pairs.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .distinct()
+  def jaccardVerify(docs: DataFrame, pairs: DataFrame, idCol: String,
+      shinglesCol: String): DataFrame =
+    jaccardScored(verifySets(docs, pairs, idCol, col(shinglesCol)))
 
   /** End-to-end MinHash-LSH near-dedup: shingle → signature → band
     * buckets → candidate pairs → exact Jaccard ≥ threshold. Output is
-    * exact (verified), the LSH only bounds the candidate set. Shingles
-    * are recomputed ONLY for candidate documents (semi-join on the
-    * candidate id set) — the property that keeps the verify stage
-    * candidate-bounded at 100 TB.
+    * exact (verified), the LSH only bounds the candidate set; shingles
+    * are recomputed only for candidate documents (the verify stage).
     *
     * EAGER by default: with `materialize = true` the candidate-pair
     * frame is staged ([[graft.Graft.stage]]) inside this call, so the
@@ -347,27 +415,10 @@ object Dedup {
       threshold: Double = 0.5, maxBucket: Int = 10000,
       obs: Option[Observation] = None,
       materialize: Boolean = true): DataFrame = {
-    import graft.functions.text
-    def shingled(base: DataFrame) = base.select(col(idCol),
-      text.ngrams(text.tokenize(col(textCol)), shingleN).as("__sh"))
-    val cands0 = lshCandidatePairs(shingled(df), idCol, "__sh",
-      numHashes, bands, maxBucket, obs)
-    // the candidate frame feeds BOTH the verify join's pair side and
-    // (through candidateIds) the candDocs semi-join — without an eager
-    // stage the whole shingle+signature+bucket subtree executes TWICE
-    // (the q192/containmentPairs finding, round 13: one shared
-    // consumer-facing frame per expensive subtree). The frame is
-    // true-pair-sized (LSH-bounded), so the materialization is tiny;
-    // staging also makes the optional bucket-cap Observation fire
-    // exactly once. `materialize = false` keeps the full plan
-    // inspectable for plan-audit specs.
-    val cands = if (materialize) graft.Graft.stage(cands0) else cands0
-    // no broadcast hint: the candidate id set is usually tiny (AQE will
-    // broadcast it), but a boilerplate-heavy corpus can push it past
-    // the broadcast ceiling — let the planner decide
-    val candDocs = shingled(
-      df.join(candidateIds(cands, idCol), Seq(idCol), "left_semi"))
-    jaccardVerify(candDocs, cands, idCol, "__sh")
+    val sh = shingles(textCol, shingleN)
+    val cands = lshCandidatePairs(df.select(col(idCol), sh.as("__sh")),
+      idCol, "__sh", numHashes, bands, maxBucket, obs)
+    jaccardScored(verifySets(df, cands, idCol, sh, materialize))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -397,12 +448,10 @@ object Dedup {
       textCol: String, storeDir: String, shingleN: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 10000): DataFrame = {
-    import graft.functions.text
     val spark = batch.sparkSession
     val shingled = batch
       .withColumn("__id", col(s"`$idCol`").cast("long"))
-      .withColumn("__sh",
-        text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN))
+      .withColumn("__sh", shingles(textCol, shingleN))
     def bandKeys(frame: DataFrame): DataFrame =
       bandRows(frame, "__sh", numHashes, bands, col("__id"))
     val batchBands = bandKeys(shingled)
@@ -448,57 +497,33 @@ object Dedup {
     * can replay, unlike an RNG or hash-order pick.
     *
     * Scale shape: one [[nearDupPairs]] pass (banded LSH, exact
-    * verify), one max(id) scalar, and a triplet-bounded verify join
-    * over 64-bit hashed shingle sets — negatives never scan the
-    * corpus. Output: (anchor_id, pos_id, pos_jaccard, neg_id,
+    * verify), one max(id) scalar, and the verify stage over the
+    * triplet-bounded (anchor, negative) pairs on 64-bit hashed shingle
+    * sets. Output: (anchor_id, pos_id, pos_jaccard, neg_id,
     * neg_jaccard).
     */
   def contrastiveTriplets(df: DataFrame, idCol: String, textCol: String,
       loJ: Double, hiJ: Double, shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16, materialize: Boolean = true): DataFrame = {
-    import graft.functions.text
     require(loJ > 0.0 && loJ < hiJ && hiJ <= 1.0,
       "contrastiveTriplets: need 0 < loJ < hiJ <= 1")
-    def stage(d: DataFrame) = if (materialize) graft.Graft.stage(d) else d
     val pos = nearDupPairs(df, idCol, textCol, shingleN, numHashes,
         bands, threshold = loJ, materialize = materialize)
       .filter(col("jaccard") < hiJ)
-      .select(col("id_a").as("anchor_id"), col("id_b").as("pos_id"),
-        col("jaccard").as("pos_jaccard"))
     val idSpace = df.agg(max(col(idCol).cast("long"))).head().getLong(0) + 1L
     val half = idSpace / 2L
-    // triplet-bounded, consumed twice (the negative-id set below AND
-    // the final verify join) — stage it or the whole nearDupPairs
-    // verify lineage executes twice (round 13; the q192 discipline)
-    val withNeg = stage(pos
-      .withColumn("neg_id", pmod(col("anchor_id") + half, lit(idSpace)))
-      .filter(col("neg_id") =!= col("anchor_id") &&
-        col("neg_id") =!= col("pos_id")))
-    val ids = withNeg
-      .select(explode(array(col("anchor_id"), col("neg_id"))).as(idCol))
-      .distinct()
-    // candidate-bounded hashed shingle sets, consumed twice (anchor
-    // side and negative side of the verify join) — stage so the
-    // corpus semi-join + re-shingle runs once, not per side
-    val sets = stage(df.join(ids, Seq(idCol), "left_semi")
-      .select(col(idCol).cast("long").as(idCol),
-        array_sort(array_distinct(transform(
-          text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN),
-          g => xxhash64(g)))).as("__hs")))
-    val a = sets.select(col(idCol).as("anchor_id"),
-      col("__hs").as("__ha"))
-    val b = sets.select(col(idCol).as("neg_id"), col("__hs").as("__hb"))
-    withNeg.join(a, "anchor_id").join(b, "neg_id")
-      .withColumn("__ni",
-        size(array_intersect(col("__ha"), col("__hb"))).cast("long"))
-      .withColumn("__nu", (size(col("__ha")) + size(col("__hb"))).cast("long")
-        - col("__ni"))
+    // (anchor, negative) pairs for the verify stage, positives riding along
+    val withNeg = pos.select(col("id_a"), col("id_b").as("pos_id"),
+        col("jaccard").as("pos_jaccard"),
+        pmod(col("id_a") + half, lit(idSpace)).as("id_b"))
+      .filter(col("id_b") =!= col("id_a") && col("id_b") =!= col("pos_id"))
+    verifySets(df, withNeg, idCol, hashedShingles(textCol, shingleN),
+        materialize)
       .withColumn("neg_jaccard",
-        when(col("__nu") > 0, col("__ni").cast("double") / col("__nu"))
-          .otherwise(lit(0.0)))
+        jaccard(col("n_a"), col("n_b"), col("n_inter")))
       .filter(col("neg_jaccard") < loJ)
-      .select(col("anchor_id"), col("pos_id"), col("pos_jaccard"),
-        col("neg_id"), col("neg_jaccard"))
+      .select(col("id_a").as("anchor_id"), col("pos_id"), col("pos_jaccard"),
+        col("id_b").as("neg_id"), col("neg_jaccard"))
   }
 
   /** Near-superset detection via CONTAINMENT — the asymmetric overlap
@@ -534,8 +559,8 @@ object Dedup {
     * exactly where the naive join explodes. `maxDf` still drops
     * boilerplate shingles from index AND probes (a pair supported
     * only by corpus-common shingles is noise). Exact verify then runs
-    * candidate-bounded exactly like [[nearDupPairs]]: full shingle
-    * arrays are recomputed ONLY for candidate docs; the emitted
+    * through the verify stage over hashed FULL shingle sets, computed
+    * only for candidate docs; the emitted
     * n_inter/containment/jaccard use the FULL sets, with
     * `minSharedShingles` applied as a final exact filter. The whole
     * candidate rule is deterministic and engine-replayable — the
@@ -544,11 +569,8 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, minSharedShingles: Int = 5, maxDf: Int = 1000,
       minContainment: Double = 0.9, materialize: Boolean = true): DataFrame = {
-    import graft.functions.text
     require(minContainment > 0.0 && minContainment <= 1.0,
       "containmentPairs: minContainment in (0, 1]")
-    def shingled(base: DataFrame) = base.select(col(idCol),
-      text.ngrams(text.tokenize(col(textCol)), shingleN).as("__sh"))
     // candidate generation runs on 64-BIT HASHED shingles (round 9,
     // the q182 diet applied here): the exploded (id, shingle) frame
     // feeds the df-count shuffle and two joins, and 8-byte keys cut
@@ -557,10 +579,10 @@ object Dedup {
     // choice (at most (1−c)·n of the min side's shingles are absent
     // from a qualifying partner — whichever pLen we probe), a rare
     // hash collision can only ADD a candidate, and the exact verify
-    // below was already hash-based
-    val e = shingled(df)
-      .select(col(idCol),
-        explode(transform(col("__sh"), g => xxhash64(g))).as("__g"))
+    // below is hash-based too
+    val e = df.select(col(idCol),
+      explode(transform(shingles(textCol, shingleN), g => xxhash64(g)))
+        .as("__g"))
     val dfreq = e.groupBy(col("__g"))
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf)
@@ -607,48 +629,18 @@ object Dedup {
         col("__pnc") <= col("__inc"))
       .groupBy(col("__pid"), col("__iid"), col("__pnc"), col("__thr"))
       .agg(count(lit(1)).as("__h"))
-    val cands0 = hits
+    val cands = hits
       .filter(col("__h") >= col("__thr"))
       .select(least(col("__pid"), col("__iid")).as("id_a"),
         greatest(col("__pid"), col("__iid")).as("id_b"))
       .distinct()
-    // the candidate frame feeds BOTH the verify join's pair side and
-    // (through candidateIds) the candDocs semi-join — without an
-    // eager stage the whole index+probe+hits subtree executes TWICE
-    // (measured at sf1: ~23 s → ~13 s). The frame is true-pair-sized
-    // (bounded by the recall contract), so the materialization is
-    // tiny; `materialize = false` keeps the full plan inspectable
-    // for the plan-audit specs.
-    val cands = if (materialize) graft.Graft.stage(cands0) else cands0
-    // verify ships 64-BIT HASHED shingle sets, not strings: candidate
-    // volume × ~30-byte shingles × set size is the dominant shuffle
-    // (measured: it, not CPU, owned the sf1 wall-time), and an 8-byte
-    // xxhash64 per shingle cuts it ~4x. The hash map is
-    // set-semantics-exact up to a 64-bit collision INSIDE one
-    // candidate pair's sets (~n²/2^64 ≈ 1e-16 for realistic doc
-    // sizes) — array_distinct guards the per-doc sizes even then.
-    val candDocs = shingled(
-      df.join(candidateIds(cands, idCol), Seq(idCol), "left_semi"))
-      .select(col(idCol), array_sort(array_distinct(
-        transform(col("__sh"), g => xxhash64(g)))).as("__hs"))
-    val a = candDocs.select(col(idCol).as("id_a"), col("__hs").as("__sh_a"))
-    val b = candDocs.select(col(idCol).as("id_b"), col("__hs").as("__sh_b"))
-    cands.join(a, "id_a").join(b, "id_b")
-      .withColumn("n_a", size(col("__sh_a")).cast("long"))
-      .withColumn("n_b", size(col("__sh_b")).cast("long"))
-      .withColumn("n_inter",
-        size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("long"))
+    verifySets(df, cands, idCol, hashedShingles(textCol, shingleN),
+        materialize)
       .withColumn("containment",
-        when(least(col("n_a"), col("n_b")) > 0,
-          col("n_inter").cast("double") / least(col("n_a"), col("n_b")))
-          .otherwise(lit(0.0)))
-      .withColumn("jaccard",
-        when(col("n_a") + col("n_b") - col("n_inter") > 0,
-          col("n_inter").cast("double") /
-            (col("n_a") + col("n_b") - col("n_inter"))).otherwise(lit(0.0)))
+        containment(col("n_a"), col("n_b"), col("n_inter")))
+      .withColumn("jaccard", jaccard(col("n_a"), col("n_b"), col("n_inter")))
       .filter(col("containment") >= minContainment &&
         col("n_inter") >= minSharedShingles)
-      .drop("__sh_a", "__sh_b")
   }
 
   /** Corpus snapshot diff — the data-ops report between two crawl /
@@ -693,18 +685,28 @@ object Dedup {
     * Output: (contaminated_id, bench_id, n_shared).
     */
   def contaminationScan(docs: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, minHits: Long): DataFrame = {
-    import graft.functions.text
-    def shingled(df: DataFrame, idOut: String) = df.select(
-      col(idCol).as(idOut),
-      explode(array_distinct(
-        text.ngrams(text.tokenize(col(textCol)), shingleN))).as("__g"))
-    shingled(docs, "contaminated_id")
-      .join(broadcast(shingled(bench, "bench_id")), "__g")
+      textCol: String, shingleN: Int, minHits: Long): DataFrame =
+    benchHits(docs, shingleRows(bench, idCol, textCol, shingleN, "bench_id"),
+        idCol, textCol, shingleN)
+      .filter(col("n_shared") >= minHits)
+
+  /** One `(idOut, __g)` row per distinct `n`-gram shingle of each doc. */
+  private def shingleRows(df: DataFrame, idCol: String, textCol: String,
+      n: Int, idOut: String): DataFrame =
+    df.select(col(s"`$idCol`").as(idOut),
+      explode(shingles(textCol, n)).as("__g"))
+
+  /** `(contaminated_id, bench_id, n_shared)`: the distinct shingles each
+    * doc shares with each bench example, for every pair sharing one.
+    * `benchGrams` ([[shingleRows]] of the bench) is broadcast, so the
+    * corpus scans once map-side and only the hit counts shuffle.
+    */
+  private def benchHits(docs: DataFrame, benchGrams: DataFrame,
+      idCol: String, textCol: String, n: Int): DataFrame =
+    shingleRows(docs, idCol, textCol, n, "contaminated_id")
+      .join(broadcast(benchGrams), "__g")
       .groupBy(col("contaminated_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minHits)
-  }
 
   // -------------------------------------------------------------------
   // SimHash
@@ -1032,14 +1034,10 @@ object Dedup {
   def semanticDedupCandidates(vecs: DataFrame, idCol: String,
       vecCol: String, threshold: Double,
       candidates: DataFrame): DataFrame = {
-    import Similarity.{Candidates, corpusSide, exactPairsAbove, probeSide}
+    import Similarity.{Candidates, canonicalPairs, corpusSide,
+      exactPairsAbove, probeSide}
     val id = col(s"`$idCol`").cast("long")
-    val und = candidates
-      .select(col("i").cast("long").as("__i"), col("j").cast("long").as("__j"))
-      .where(col("__i") =!= col("__j"))
-      .select(least(col("__i"), col("__j")).as("id"),
-        greatest(col("__i"), col("__j")).as("probe_id"))
-      .distinct()
+    val und = canonicalPairs(candidates, "id", "probe_id")
     // per-ROW widening hoist, same rationale as semanticDedup; `und` is
     // canonical (id < probe_id) already
     val victims = exactPairsAbove(
@@ -1144,6 +1142,17 @@ object Dedup {
       .drop("__bl_set")
   }
 
+  /** Prime modulus of the span-hash fold ([[dupSpanStats]]). */
+  private val spanP = 1000000007L
+
+  /** Per-token rolling hashes mod [[spanP]] of the text column
+    * `textCol` (backtick-quoted): the element hashes every span hash
+    * folds.
+    */
+  private def tokenHashes(textCol: String): Column =
+    transform(text.tokenize(col(s"`$textCol`")),
+      t => graft.plans.NativeHashes.rollingHash(t, spanP))
+
   /** Duplicate n-token span detection — the exact-substring-dedup
     * primitive of Lee et al., "Deduplicating Training Data Makes
     * Language Models Better" (ACL'22), in the scalable windowed-hash
@@ -1180,11 +1189,8 @@ object Dedup {
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
       window: Int = 20): DataFrame = {
     require(window >= 2, s"dupSpanStats: window must be >= 2, got $window")
-    val p = 1000000007L
-    val tokH = transform(graft.functions.text.tokenize(col(textCol)),
-      t => graft.plans.NativeHashes.rollingHash(t, p))
     val spans = df
-      .select(col(idCol), tokH.as("__th"))
+      .select(col(idCol), tokenHashes(textCol).as("__th"))
       .withColumn("__n", size(col("__th")))
       .filter(col("__n") >= window)
       // the native kernel is total (empty below the window) — which
@@ -1193,7 +1199,7 @@ object Dedup {
       // evaluates on short docs too (the combinator spec needs its
       // when-guard for exactly that reason)
       .withColumn("__sh",
-        graft.plans.NativeHashes.spanHashes(col("__th"), window, p))
+        graft.plans.NativeHashes.spanHashes(col("__th"), window, spanP))
       .select(col(idCol), explode(col("__sh")).as("__h"))
     val dupHashes = spans.groupBy(col("__h"))
       .agg(countDistinct(col(idCol)).as("__nd"))
@@ -1234,13 +1240,10 @@ object Dedup {
       s"winnowFingerprints: window must be >= 2, got $window")
     require(guarantee >= 1,
       s"winnowFingerprints: guarantee must be >= 1, got $guarantee")
-    val p = 1000000007L
-    val tokH = transform(graft.functions.text.tokenize(col(textCol)),
-      t => graft.plans.NativeHashes.rollingHash(t, p))
-    df.select(col(idCol), tokH.as("__th"))
+    df.select(col(idCol), tokenHashes(textCol).as("__th"))
       .filter(size(col("__th")) >= window)
       .select(col(idCol),
-        graft.plans.NativeHashes.spanHashes(col("__th"), window, p)
+        graft.plans.NativeHashes.spanHashes(col("__th"), window, spanP)
           .as("__sh"))
       .select(col(idCol),
         array_distinct(
@@ -1328,13 +1331,10 @@ object Dedup {
       window: Int = 20, mergeIntervals: Boolean = false): DataFrame = {
     require(window >= 2,
       s"stripDuplicateSpans: window must be >= 2, got $window")
-    val p = 1000000007L
     val id = col(s"`$idCol`")
-    val tokH = transform(graft.functions.text.tokenize(col(s"`$textCol`")),
-      t => graft.plans.NativeHashes.rollingHash(t, p))
     val spans = df
-      .select(id, graft.plans.NativeHashes.spanHashes(tokH, window, p)
-        .as("__sh"))
+      .select(id, graft.plans.NativeHashes.spanHashes(
+        tokenHashes(textCol), window, spanP).as("__sh"))
       .select(id, posexplode(col("__sh")).as(Seq("__pos", "__h")))
     val dupHashes = spans.groupBy(col("__h"))
       .agg(countDistinct(id).as("__nd"))
@@ -1343,7 +1343,7 @@ object Dedup {
     val dupPos = spans.join(dupHashes, "__h")
       .groupBy(id)
       .agg(sort_array(collect_list(col("__pos"))).as("__dp"))
-    val toks = graft.functions.text.tokenize(col(s"`$textCol`"))
+    val toks = text.tokenize(col(s"`$textCol`"))
     // the coverage set the probe runs against: raw span-start
     // positions, or (flagged) the same positions folded into merged
     // disjoint [s, e) intervals — __dp is sorted ascending, so one
@@ -1398,15 +1398,12 @@ object Dedup {
       textCol: String, window: Int = 8): DataFrame = {
     require(window >= 2,
       s"stripWithinDocRepeats: window must be >= 2, got $window")
-    val p = 1000000007L
-    val toks = graft.functions.text.tokenize(col(s"`$textCol`"))
-    val tokH = transform(toks,
-      t => graft.plans.NativeHashes.rollingHash(t, p))
+    val toks = text.tokenize(col(s"`$textCol`"))
     val withDrops = df
-      .withColumn("__th", tokH)
+      .withColumn("__th", tokenHashes(textCol))
       .withColumn("__dp", when(size(col("__th")) >= window,
         graft.plans.NativeHashes.repeatSpanDrops(
-          graft.plans.NativeHashes.spanHashes(col("__th"), window, p),
+          graft.plans.NativeHashes.spanHashes(col("__th"), window, spanP),
           window)).otherwise(array().cast("array<int>")))
     val kept = filter(toks, (t, i) =>
       !exists(col("__dp"), d => d === i))
@@ -1448,19 +1445,14 @@ object Dedup {
       evalTextCol: String, window: Int = 13): DataFrame = {
     require(window >= 2,
       s"spanContamination: window must be >= 2, got $window")
-    val p = 1000000007L
     def spans(df: DataFrame, idCol: String, textCol: String,
-        outId: String): DataFrame = {
-      val tokH = transform(
-        graft.functions.text.tokenize(col(s"`$textCol`")),
-        t => graft.plans.NativeHashes.rollingHash(t, p))
+        outId: String): DataFrame =
       df.select(col(s"`$idCol`").as(outId),
           array_distinct(graft.plans.NativeHashes.spanHashes(
-            tokH, window, p)).as("__sh"))
+            tokenHashes(textCol), window, spanP)).as("__sh"))
         .withColumn("__n_spans", size(col("__sh")))
         .select(col(outId), col("__n_spans"),
           explode(col("__sh")).as("__h"))
-    }
     val ts = spans(train, trainIdCol, trainTextCol, "train_id")
       .drop("__n_spans")
     val es = spans(eval, evalIdCol, evalTextCol, "eval_id")
@@ -1561,19 +1553,10 @@ object Dedup {
   def contaminationFraction(docs: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, shingleN: Int,
       minFraction: Double = 0.0): DataFrame = {
-    import graft.functions.text
-    def shingled(df: DataFrame, idOut: String) = df.select(
-      col(s"`$idCol`").as(idOut),
-      explode(array_distinct(
-        text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)))
-        .as("__g"))
-    val benchG = shingled(bench, "bench_id")
+    val benchG = shingleRows(bench, idCol, textCol, shingleN, "bench_id")
     val benchSz = benchG.groupBy(col("bench_id"))
       .agg(count(lit(1)).as("n_bench"))
-    shingled(docs, "contaminated_id")
-      .join(broadcast(benchG), "__g")
-      .groupBy(col("contaminated_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
+    benchHits(docs, benchG, idCol, textCol, shingleN)
       .join(broadcast(benchSz), "bench_id")
       .withColumn("overlap_frac",
         round(col("n_shared").cast("double") / col("n_bench"), 6))
@@ -1601,11 +1584,9 @@ object Dedup {
     */
   def sourceOverlap(docs: DataFrame, srcCol: String, textCol: String,
       shingleN: Int = 3, maxSources: Int = 4096): DataFrame = {
-    import graft.functions.text
     val ss = docs
       .select(col(s"`$srcCol`").as("__so_src"),
-        explode(text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN))
-          .as("__so_g0"))
+        explode(shingles(textCol, shingleN)).as("__so_g0"))
       // shingle STRINGS never reach the shuffle: hashing to 64 bits
       // map-side means the one corpus-sized distinct ships 8-byte keys
       // (~4-8x fewer shuffle bytes; a collision altering a count needs
@@ -1634,8 +1615,8 @@ object Dedup {
         col("__so_n").as("__nb"))), "src_b")
       .select(col("src_a"), col("src_b"), col("n_inter"),
         (col("__na") + col("__nb") - col("n_inter")).as("n_union"),
-        round(col("n_inter").cast("double") /
-          (col("__na") + col("__nb") - col("n_inter")), 6).as("jaccard"))
+        round(jaccard(col("__na"), col("__nb"), col("n_inter")), 6)
+          .as("jaccard"))
   }
 
   /** SKETCH estimate of [[sourceOverlap]] — the shape that holds when
@@ -1664,18 +1645,17 @@ object Dedup {
   def sourceOverlapSketch(docs: DataFrame, srcCol: String,
       textCol: String, shingleN: Int = 3,
       numHashes: Int = 128): DataFrame = {
-    import graft.functions.text
     // drop docs with NO shingles (fewer than shingleN tokens) BEFORE
     // signing: the kernel returns an all-Long.MaxValue signature for
     // them, and two sources consisting only of such docs would share
     // that degenerate signature and read as overlap 1.0 — the
     // pre-rewrite posexplode form naturally emitted no slots for an
     // empty shingle array, and this where() restores that behavior
-    val shingles = text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)
+    val sh = shingles(textCol, shingleN)
     val docSig = docs
-      .where(size(shingles) > 0)
+      .where(size(sh) > 0)
       .select(col(s"`$srcCol`").as("__sk_src"),
-        graft.plans.NativeHashes.minHashSignature64(shingles, numHashes)
+        graft.plans.NativeHashes.minHashSignature64(sh, numHashes)
           .as("__sk_ds"))
     val slots = docSig.select(col("__sk_src"),
         posexplode(col("__sk_ds")).as(Seq("__sk_i", "__sk_h")))
@@ -1710,10 +1690,8 @@ object Dedup {
   def buildNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
-    import graft.functions.text
-    val sh = text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)
-    bandRows(
-      docs.select(col(s"`$idCol`").cast("long").as("idx_id"), sh.as("idx_sh")),
+    bandRows(docs.select(col(s"`$idCol`").cast("long").as("idx_id"),
+        shingles(textCol, shingleN).as("idx_sh")),
       "idx_sh", numHashes, bands, col("idx_id"), col("idx_sh"))
   }
 
@@ -1737,10 +1715,9 @@ object Dedup {
   def nearDupGateBatch(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    import graft.functions.text
-    val sh = text.ngrams(text.tokenize(col(s"`$textCol`")), shingleN)
     val probes = bandRows(
-      batch.select(col(s"`$idCol`").cast("long").as("__g_id"), sh.as("__g_sh")),
+      batch.select(col(s"`$idCol`").cast("long").as("__g_id"),
+        shingles(textCol, shingleN).as("__g_sh")),
       "__g_sh", numHashes, bands, col("__g_id"), col("__g_sh"))
     val kills = probes.join(index, Seq("band", "bkey"))
       .filter(col("idx_id") =!= col("__g_id"))
@@ -1839,7 +1816,6 @@ object Dedup {
     */
   def templateSentences(docs: DataFrame, idCol: String,
       textCol: String, minDocs: Long, minChars: Int = 8): DataFrame = {
-    import graft.functions.text
     val sents = docs.select(col(s"`$idCol`").as("__ts_id"),
         explode(text.sentences(col(s"`$textCol`"))).as("__ts_s"))
       .select(col("__ts_id"),
@@ -1880,16 +1856,30 @@ object Dedup {
   def decontaminate(docs: DataFrame, evalDocs: DataFrame,
       idCol: String, textCol: String, n: Int = 13,
       minHits: Int = 1): DataFrame = {
-    import graft.functions.text
     require(n >= 1 && minHits >= 1,
       "decontaminate: need n >= 1 and minHits >= 1")
-    def grams(d: DataFrame, cols: Seq[Column]): DataFrame =
-      d.select(cols :+ explode(text.ngrams(
-        text.tokenize(col(s"`$textCol`")), n)).as("__dc_g"): _*)
-    val evalGrams = grams(evalDocs, Seq.empty)
+    evalHits(docs, evalGramHashes(evalDocs, textCol, n), idCol, textCol, n,
+      minHits, probe = None)
+  }
+
+  /** The distinct xxhash64 values of the eval side's `n`-grams. */
+  private def evalGramHashes(evalDocs: DataFrame, textCol: String,
+      n: Int): DataFrame =
+    evalDocs.select(explode(shingles(textCol, n)).as("__dc_g"))
       .select(xxhash64(col("__dc_g")).as("__dc_gh")).distinct()
-    val hits = grams(docs, Seq(col(s"`$idCol`").as("__dc_id")))
+
+  /** The decontamination body: `docs` plus `eval_hits` (the doc's
+    * distinct grams among `evalGrams`, counted through the broadcast
+    * hash join) and `contaminated`. `probe`, when given, filters the
+    * corpus gram stream map-side before the join.
+    */
+  private def evalHits(docs: DataFrame, evalGrams: DataFrame, idCol: String,
+      textCol: String, n: Int, minHits: Int,
+      probe: Option[Column]): DataFrame = {
+    val grams = docs.select(col(s"`$idCol`").as("__dc_id"),
+        explode(shingles(textCol, n)).as("__dc_g"))
       .select(col("__dc_id"), xxhash64(col("__dc_g")).as("__dc_gh"))
+    val hits = probe.fold(grams)(grams.filter)
       .join(broadcast(evalGrams), Seq("__dc_gh"))
       .groupBy(col("__dc_id"))
       .agg(count(lit(1)).as("__dc_hits"))
@@ -1915,36 +1905,22 @@ object Dedup {
   def decontaminateBloom(docs: DataFrame, evalDocs: DataFrame,
       idCol: String, textCol: String, n: Int = 13, minHits: Int = 1,
       fpp: Double = 0.01): DataFrame = {
-    import graft.functions.text
     require(n >= 1 && minHits >= 1,
       "decontaminateBloom: need n >= 1 and minHits >= 1")
-    def grams(d: DataFrame, cols: Seq[Column]): DataFrame =
-      d.select(cols :+ explode(text.ngrams(
-        text.tokenize(col(s"`$textCol`")), n)).as("__dc_g"): _*)
-    val evalGrams = grams(evalDocs, Seq.empty)
-      .select(xxhash64(col("__dc_g")).as("__dc_gh")).distinct()
+    val evalGrams = evalGramHashes(evalDocs, textCol, n)
       .persist() // feeds the bloom build's count + sketch + the join
     try {
       val nGrams = math.max(evalGrams.count(), 1L)
       val bf = evalGrams.stat.bloomFilter("__dc_gh", nGrams, fpp)
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
+      // map-side: most grams never reach the join
       val probe = graft.plans.NativeHashes.bloomMightContain(
         col("__dc_gh"), bos.toByteArray)
-      val hits = grams(docs, Seq(col(s"`$idCol`").as("__dc_id")))
-        .select(col("__dc_id"), xxhash64(col("__dc_g")).as("__dc_gh"))
-        .filter(probe) // map-side: most grams never reach the join
-        .join(broadcast(evalGrams), Seq("__dc_gh"))
-        .groupBy(col("__dc_id"))
-        .agg(count(lit(1)).as("__dc_hits"))
-      val out = docs
-        .join(hits, col(s"`$idCol`") === col("__dc_id"), "left")
-        .withColumn("eval_hits", coalesce(col("__dc_hits"), lit(0L)))
-        .withColumn("contaminated", col("eval_hits") >= minHits)
-        .drop("__dc_id", "__dc_hits")
       // materialize before unpersist: the returned frame must not
       // re-plan against an evicted cache
-      out.localCheckpoint(true)
+      evalHits(docs, evalGrams, idCol, textCol, n, minHits, Some(probe))
+        .localCheckpoint(true)
     } finally evalGrams.unpersist()
   }
 }

@@ -977,6 +977,19 @@ object Similarity {
     perDim.reduce(_ unionAll _).orderBy(col("dim"))
   }
 
+  /** A candidate pair frame `(i, j)` as its distinct canonical long
+    * pairs `(lo, hi)`, lo < hi: self-pairs drop and (j, i) folds onto
+    * (i, j), so a symmetric generator costs nothing extra downstream.
+    */
+  private[graft] def canonicalPairs(candidates: DataFrame, lo: String,
+      hi: String): DataFrame =
+    candidates
+      .select(col("i").cast("long").as("__i"), col("j").cast("long").as("__j"))
+      .where(col("__i") =!= col("__j"))
+      .select(least(col("__i"), col("__j")).as(lo),
+        greatest(col("__i"), col("__j")).as(hi))
+      .distinct()
+
   /** Mutual-kNN graph (X163, round 10) — the edge set semantic-dedup
     * clustering and diversity analysis build on: vector i and j are
     * connected iff each is in the other's top-k by dot product
@@ -1019,11 +1032,7 @@ object Similarity {
         // halves the dedup volume for the identical symmetric
         // closure); then two id-keyed equi-joins pull the quantized
         // vectors — no non-equi product anywhere in this branch
-        val p0 = c.select(col("i").cast("long").as("i"),
-          col("j").cast("long").as("j"))
-          .where(col("i") =!= col("j"))
-        val und = p0.select(least(col("i"), col("j")).as("u"),
-          greatest(col("i"), col("j")).as("v")).distinct()
+        val und = canonicalPairs(c, "u", "v")
         val sym = und.select(col("u").as("i"), col("v").as("j"))
           .union(und.select(col("v").as("i"), col("u").as("j")))
         sym.join(a, "i").join(b, "j")

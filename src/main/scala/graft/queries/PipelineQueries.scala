@@ -249,18 +249,13 @@ object PipelineQueries {
   val q23SimhashNeardup = QueryDef(
     "q23_simhash_neardup",
     (s, dir) => {
-      val base = Graft.table(s, dir, "documents")
-        .filter(size(text.tokenize(col("text"))) >= 20)
-      val toksDocs = base.select(col("doc_id"),
-        text.tokenize(col("text")).as("__toks"))
-      val cands = Dedup.simHashCandidatePairs(toksDocs, "doc_id", "__toks",
+      val toks = text.tokenize(col("text"))
+      val base = Graft.table(s, dir, "documents").filter(size(toks) >= 20)
+      val cands = Dedup.simHashCandidatePairs(
+        base.select(col("doc_id"), toks.as("__toks")), "doc_id", "__toks",
         bands = 8)
-      // shingles only for candidate docs (see Dedup.candidateIds)
-      val candDocs = base
-        .join(Dedup.candidateIds(cands, "doc_id"), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          text.ngrams(text.tokenize(col("text")), 3).as("__sh"))
-      Dedup.jaccardVerify(candDocs, cands, "doc_id", "__sh")
+      Dedup.jaccardScored(Dedup.verifySets(base, cands, "doc_id",
+          text.ngrams(toks, 3)))
         .filter(col("jaccard") >= 0.8)
         .select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"),
           round(col("jaccard"), 6).as("jaccard"))

@@ -57,6 +57,25 @@ class DedupSpec extends SparkSpec {
     assert(got((0L, 3L))._5 == 0.0)
   }
 
+  test("nearDupPairs, containmentPairs and contaminationScan read a " +
+      "dotted text column name as one column") {
+    val tail = (1 to 12).map(i => s"tail$i x$i y$i").mkString(" ")
+    val plain = docs.filter($"doc_id" < 2L)
+      .union(Seq((2L, s"alpha beta gamma delta epsilon zeta eta theta " +
+        s"iota kappa $tail")).toDF())
+    val dotted = plain.withColumnRenamed("text", "doc.text")
+    def sameRows(op: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.DataFrame): Unit = {
+      val want = op(plain, "text").collect().map(_.toString).toSet
+      assert(want.nonEmpty)
+      assert(op(dotted, "doc.text").collect().map(_.toString).toSet == want)
+    }
+    sameRows((d, t) => Dedup.nearDupPairs(d, "doc_id", t))
+    sameRows((d, t) => Dedup.containmentPairs(d, "doc_id", t))
+    sameRows((d, t) => Dedup.contaminationScan(d.filter($"doc_id" =!= 0L),
+      d.filter($"doc_id" === 0L), "doc_id", t, shingleN = 3, minHits = 5))
+  }
+
   test("SimHash: small Hamming distance for near-identical token sets") {
     val sh = docs.select($"doc_id",
       Dedup.simHash(text.tokenize($"text")).as("simhash"))

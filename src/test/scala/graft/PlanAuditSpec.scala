@@ -471,4 +471,34 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  private val nearDupSchema =
+    "struct<id_a:bigint,id_b:bigint,n_inter:bigint,n_union:bigint," +
+      "jaccard:double>"
+
+  // the entries that verify candidate pairs over per-document sets
+  // (Dedup's exact set-overlap verify): output schema and the Spark
+  // jobs one build + collect runs, eager stages included
+  for ((q, schema, jobs) <- Seq(
+      ("q22_minhash_neardup", nearDupSchema, 12),
+      ("q23_simhash_neardup", nearDupSchema, 10),
+      ("q75_dedup_clusters",
+        "struct<cluster_id:bigint,n_members:bigint,members:string>", 18),
+      ("q192_containment_pairs",
+        "struct<id_a:bigint,id_b:bigint,n_a:bigint,n_b:bigint," +
+          "n_inter:bigint,cont:double,jac:double>", 17),
+      ("q233_contrastive_triplets",
+        "struct<anchor_id:bigint,pos_id:bigint,pos_jaccard:double," +
+          "neg_id:bigint,neg_jaccard:double>", 21),
+      ("q288_incremental_neardedup",
+        "struct<lang:string,n_kept:bigint,id_sum:bigint>", 22)))
+    test(s"${q.takeWhile(_ != '_')}: the set-verify entry keeps its " +
+        "output schema and its Spark job count") {
+      var out: org.apache.spark.sql.DataFrame = null
+      val n = countJobs {
+        out = SparkEntry.queries(q)(spark, dir)
+        out.collect()
+      }
+      assert((out.schema.simpleString, n) == ((schema, jobs)))
+    }
+
 }

@@ -14,7 +14,7 @@ import graft.operators.{Dedup, Similarity}
   *  - `nearDupPairs(materialize = true)` (staged LSH candidate frame,
   *    the default) returns exactly the rows of the unstaged form.
   *  - `contrastiveTriplets(materialize = true)` likewise (it also
-  *    stages its triplet and hashed-set frames).
+  *    stages its (anchor, negative) pair frame).
   *  - `pqCodebooks(totalRows = Some(n))` (caller-supplied cardinality,
   *    one count job fewer) trains bit-identical codebooks to the
   *    self-counting form, on the full set and on the id-hash sample a

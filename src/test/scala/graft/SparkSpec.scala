@@ -73,4 +73,29 @@ trait SparkSpec extends AnyFunSuite {
   /** [[referenceFile]] of `rel` under [[MetricaQueries.referenceRoot]]. */
   protected def referenceFile(rel: String): Path =
     referenceFile(MetricaQueries.referenceRoot.resolve(rel))
+
+  /** Spark jobs triggered while `body` runs (listener-counted; the
+    * shared session is quiet between tests).
+    */
+  protected def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener bus is async — wait until the count is stable
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(150)
+        val cur = n.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }
