@@ -27,6 +27,19 @@ object Graft {
     * `CodeGenerator` reads it once per JVM when it first loads, so it
     * must be set on the builder — `spark.conf.set` afterwards does
     * nothing.
+    *
+    * `spark.sql.artifact.isolation.enabled=false` keeps streaming
+    * activations on the cache. Spark keys a compiled class by the
+    * task's context classloader as well, and with isolation on, each
+    * streaming activation runs in a cloned session with its own session
+    * UUID and so its own artifact classloader: every activation of
+    * [[graft.streaming.Ingest]] recompiled its batch plans' classes (8
+    * per run of the Metrica write path) and ran them cold in the JIT.
+    * Off, every session's tasks run under the executor's one
+    * classloader. Isolation only separates the jars, files and archives
+    * a session adds, and the engine adds none (it calls no
+    * `addArtifact` or `addJar`). Also read when a session is created,
+    * so it too is set on the builder.
     */
   def tune(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
     // native function surface (graft_minhash64 / graft_simhash64)
@@ -42,6 +55,7 @@ object Graft {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "1000")
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

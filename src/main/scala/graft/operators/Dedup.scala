@@ -374,10 +374,15 @@ object Dedup {
       .select(col(idCol), set.as("__set"))
     def side(s: String) =
       sets.select(col(idCol).as(s"id_$s"), col("__set").as(s"__set_$s"))
+    // the counts come out of a generator (`inline` of one struct), so
+    // a caller's filter on them stays above it: pushed through a
+    // projection into the pair join, it would run `array_intersect`
+    // once per use instead of once per pair
     cands.join(side("a"), "id_a").join(side("b"), "id_b")
-      .withColumn("n_a", size(col("__set_a")).cast("long"))
-      .withColumn("n_b", size(col("__set_b")).cast("long"))
-      .withColumn("n_inter", nInter(col("__set_a"), col("__set_b")))
+      .select(col("*"), inline(array(struct(
+        size(col("__set_a")).cast("long").as("n_a"),
+        size(col("__set_b")).cast("long").as("n_b"),
+        nInter(col("__set_a"), col("__set_b")).as("n_inter")))))
       .drop("__set_a", "__set_b")
   }
 

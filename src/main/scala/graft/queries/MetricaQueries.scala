@@ -30,6 +30,16 @@ import graft.sources.Warehouse
   * Both query entries rebuild and overwrite it, so they are
   * order-independent; the oracle reads the same parquet files DuckDB-
   * side via read_parquet.
+  *
+  * The date interval of Q1 and Q2 is a pair of literal `DATE` bounds,
+  * and each new interval compiles 2 generated classes per query (a
+  * repeated one, 0). Spark inlines a date literal into generated code
+  * as its epoch day (`value >= 19665`), so the filter stage's class
+  * text changes with the bounds. That is the price of literal bounds:
+  * only a literal operand reaches the parquet scan as a pushed filter
+  * (`GreaterThanOrEqual(StartDate,…)`, row-group pruning) and lets
+  * `WeekBoundsRule` prune week directories, and every literal of a
+  * date or timestamp type is inlined.
   */
 object MetricaQueries {
 

@@ -16,10 +16,14 @@ import graft.functions.ch.toMonday
   *  - `ReplicatedMergeTree` appends → `SaveMode.Append` (replication is
   *    the storage layer's job).
   *
-  * `repartition(week)` before the write makes each task own whole weeks
-  * (one sorted file per week per task generation) instead of every task
-  * writing a sliver of every week — at 1000 executors that is the
-  * difference between W files and W×1000 files per batch.
+  * A write is a MergeTree INSERT: each task sorts the rows it already
+  * holds on (week, key) and writes one sorted file, a "part", per week
+  * among them. No shuffle moves rows between tasks first, so a week
+  * holds at most as many new files as the write had input partitions,
+  * and files of one week may overlap in key range, as parts do before
+  * a merge. A hot week is never serialised through one task: it is
+  * written by every task that holds its rows. [[compact]] and
+  * OPTIMIZE are the merges.
   *
   * '''Directory swaps.''' Every rewrite, drop or recovery of a table's
   * `week=<monday>` dirs (ALTER DELETE/UPDATE, OPTIMIZE, DROP
@@ -58,13 +62,13 @@ object Warehouse {
   /** Append `df` into `tableDir` partitioned by the Monday of
     * `dateCol`, clustered by `orderKey` within each partition.
     *
-    * `repartitionByRange(week, orderKey...)` rather than
-    * `repartition(week)`: a plain hash-on-week gives ONE task per week
-    * — at 100 TB a single hot week would serialize through one core
-    * and one output file. Range partitioning on (week, clustering key)
-    * splits big weeks across many contiguous-key tasks (AQE coalesces
-    * small ones) while each task still writes whole sorted runs — the
-    * MergeTree "many sorted parts per partition" shape.
+    * Each task sorts its own rows on (week, orderKey...) and writes one
+    * file per week it holds: the MergeTree insert, one sorted part per
+    * partition from the rows the INSERT already has. So a week gets at
+    * most as many files as `df` has partitions. Neither a range nor a
+    * hash shuffle runs first: a range shuffle costs a sampling job and
+    * a full-width exchange of every row, more than the write itself,
+    * and `repartition(week)` would send a hot week through ONE task.
     */
   def write(df: DataFrame, tableDir: String, dateCol: String,
       orderKey: Seq[String], mode: String = "append"): Unit =
@@ -85,11 +89,9 @@ object Warehouse {
         .putBoolean(graft.plans.WeekBoundsRule.flag, true).build()))
       .withColumn(weekCol, toMonday(col(s"`$dateCol`")))
 
-  /** Range-partition and sort `df` by (week, orderKey...). */
-  private def clustered(df: DataFrame, orderKey: Seq[String]): DataFrame = {
-    val cluster = (weekCol +: orderKey).map(c => col(s"`$c`"))
-    df.repartitionByRange(cluster: _*).sortWithinPartitions(cluster: _*)
-  }
+  /** Sort each partition of `df` by (week, orderKey...), in place. */
+  private def clustered(df: DataFrame, orderKey: Seq[String]): DataFrame =
+    df.sortWithinPartitions((weekCol +: orderKey).map(c => col(s"`$c`")): _*)
 
   /** Read the warehouse table back (partition column `week` included;
     * filters on it prune directories).
@@ -108,9 +110,9 @@ object Warehouse {
     * transaction log to coordinate. Static overwrite (the default
     * mode) would instead TRUNCATE THE WHOLE TABLE to write one week —
     * the classic backfill footgun this wrapper exists to make
-    * impossible. Same physical layout as [[write]]: range-partitioned
-    * sorted runs inside week directories, the WeekBounds pruning
-    * stamp on the date column.
+    * impossible. Same physical layout as [[write]]: sorted files inside
+    * week directories, the WeekBounds pruning stamp on the date
+    * column.
     */
   def backfill(df: DataFrame, tableDir: String, dateCol: String,
       orderKey: Seq[String]): Unit = {

@@ -31,16 +31,15 @@ import graft.sources.Warehouse
   *    is the initial replication snapshot.
   *
   * At scale: each micro-batch is one bounded append job; partitioning
-  * work is [[Warehouse.write]]'s (repartition by week → whole sorted
-  * files per week). Throughput tuning = `maxFilesPerTrigger` ×
-  * executor count; no stateful operator, so no state store to size.
-  * Known per-activation cost: Spark keys its codegen cache by the task
-  * thread's context classloader too, and each streaming activation's
-  * tasks run under a new `ExecutorClassLoader`, while the session's
-  * batch tasks keep one loader. So every activation recompiles its
-  * batch plans' classes (8 per run of the Metrica write path, however
-  * large the cache in [[graft.Graft.tune]]); a long-running stream
-  * pays this once, a run-to-completion loop once per run.
+  * work is [[Warehouse.write]]'s (each task writes one sorted file per
+  * week it holds, no shuffle). Throughput tuning = `maxFilesPerTrigger`
+  * × executor count; no stateful operator, so no state store to size.
+  * Per-activation cost: 0 recompiles. Spark keys its codegen cache by
+  * the task thread's context classloader too, and
+  * [[graft.Graft.tune]] turns off artifact isolation, so a streaming
+  * activation's tasks run under the session's own loader and a warm
+  * activation reuses the compiled classes of the last one
+  * (`CodegenCacheSpec` pins it).
   */
 object Ingest {
 

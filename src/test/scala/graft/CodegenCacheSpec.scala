@@ -7,6 +7,7 @@ import graft.operators.{Dedup, Similarity}
 import graft.queries.MetricaQueries
 import graft.schemas.Metrica
 import graft.sources.{CsvGzip, Warehouse}
+import graft.streaming.Ingest
 
 /** The codegen cache holds the engine's working set: re-running the
   * same plans in one session compiles no generated class again.
@@ -104,5 +105,30 @@ class CodegenCacheSpec extends SparkSpec {
       prev.fold(spark.conf.unset(idInName))(spark.conf.set(idInName, _))
       FsUtil.rmTree(root)
     }
+  }
+
+  test("a warm streaming activation into a fresh table compiles no " +
+      "generated class") {
+    val root = tempDir("codegen_ingest")
+    val visits = MetricaQueries.rawVisitPairs(spark)
+    // two source files, one per micro-batch
+    visits.repartition(2).write.parquet(s"$root/src")
+    def activate(run: String): Unit = {
+      val sink = Ingest.Sink(s"$root/$run", "visits", s"cg_$run",
+        Metrica.visitsPartitionDate, Metrica.visitsOrderKey)
+      Ingest.runToCompletion(spark, s"$root/src", visits.schema, sink,
+        s"$root/${run}_checkpoint", maxFilesPerTrigger = Some(1))
+      assert(Seq(0, 1).forall(b => new java.io.File(
+        Ingest.tableDir(sink), s"_graft_batch_$b").exists),
+        "the activation ran fewer than two micro-batches")
+    }
+    try {
+      activate("run1")
+      val before = compiles
+      activate("run2")
+      val n = compiles - before
+      assert(n == 0L,
+        s"a second activation recompiled $n of its batch plans' classes")
+    } finally FsUtil.rmTree(root)
   }
 }

@@ -501,4 +501,15 @@ class PlanAuditSpec extends SparkSpec {
       assert((out.schema.simpleString, n) == ((schema, jobs)))
     }
 
+  // a filter on a verified pair's counts is not pushed into the pair
+  // join: the verify stage computes the intersection once per pair
+  // (q233's positives are staged, so its plan holds its negatives' only)
+  for (q <- Seq("q22_minhash_neardup", "q23_simhash_neardup",
+      "q192_containment_pairs", "q233_contrastive_triplets"))
+    test(s"${q.takeWhile(_ != '_')}: the set-verify stage runs one " +
+        "array_intersect") {
+      val p = plan(q)
+      assert("array_intersect\\(".r.findAllIn(p).size == 1, p)
+    }
+
 }
