@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -266,10 +267,13 @@ object Dedup {
     jaccard(size(a), size(b), nInter(a, b))
 
   /** All (id_a < id_b) pairs within each bucket of a (band, key)
-    * bucketing: ONE shuffle on the bucket key, collect ids per bucket,
-    * expand combinations in-expression. Deliberately not a self-join —
-    * a self-join would execute the (expensive) bucketing subtree once
-    * per side; this shape computes it once and pairs up map-free.
+    * bucketing, with `n_shared`, the number of buckets the pair shares:
+    * ONE shuffle on the bucket key, collect ids per bucket, expand
+    * combinations in-expression. A caller that selects only the pair
+    * columns gets a plain distinct (column pruning drops the count).
+    * Deliberately not a self-join — a self-join would execute the
+    * (expensive) bucketing subtree once per side; this shape computes
+    * it once and pairs up map-free.
     * Pathological buckets (a band value shared by a large fraction of
     * the corpus) would expand quadratically — cap them: a bucket wider
     * than maxBucket is dropped, because a "near-duplicate class" that
@@ -332,8 +336,8 @@ object Dedup {
           flatten(transform(col("ids_a"), a =>
             transform(col("ids_b"),
               b => struct(a.as("id_a"), b.as("id_b"))))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
+      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .agg(count(lit(1)).as("n_shared"))
   }
 
   /** Candidate pairs via band buckets: explode (band, bucket-key) rows,
@@ -344,7 +348,7 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16,
       maxBucket: Int = 10000, obs: Option[Observation] = None): DataFrame =
     pairsWithinBuckets(bandRows(df, shinglesCol, numHashes, bands, col(idCol)),
-      idCol, maxBucket, obs)
+      idCol, maxBucket, obs).select(col("id_a"), col("id_b"))
 
   /** The exact set-overlap verify stage (see the object doc): candidate
     * `pairs` `(id_a, id_b, extra…)` joined to the per-document `set` of
@@ -497,12 +501,12 @@ object Dedup {
     * band [loJ, hiJ) (similar but not byte-identical — the sweet spot
     * for contrastive pairs; band from [[nearDupPairs]], so candidates
     * are LSH-bounded and every emitted pair is exact), negatives are
-    * the deterministic "far partner" (anchor + ⌈idSpace/2⌉ mod
-    * idSpace) VERIFIED dissimilar (jaccard < loJ) — a rule any engine
+    * the deterministic far partner ([[Similarity.withFarPartner]])
+    * VERIFIED dissimilar (jaccard < loJ) — a rule any engine
     * can replay, unlike an RNG or hash-order pick.
     *
     * Scale shape: one [[nearDupPairs]] pass (banded LSH, exact
-    * verify), one max(id) scalar, and the verify stage over the
+    * verify), one in-plan max(id), and the verify stage over the
     * triplet-bounded (anchor, negative) pairs on 64-bit hashed shingle
     * sets. Output: (anchor_id, pos_id, pos_jaccard, neg_id,
     * neg_jaccard).
@@ -515,12 +519,11 @@ object Dedup {
     val pos = nearDupPairs(df, idCol, textCol, shingleN, numHashes,
         bands, threshold = loJ, materialize = materialize)
       .filter(col("jaccard") < hiJ)
-    val idSpace = df.agg(max(col(idCol).cast("long"))).head().getLong(0) + 1L
-    val half = idSpace / 2L
     // (anchor, negative) pairs for the verify stage, positives riding along
-    val withNeg = pos.select(col("id_a"), col("id_b").as("pos_id"),
-        col("jaccard").as("pos_jaccard"),
-        pmod(col("id_a") + half, lit(idSpace)).as("id_b"))
+    val withNeg = Similarity.withFarPartner(
+        pos.select(col("id_a"), col("id_b").as("pos_id"),
+          col("jaccard").as("pos_jaccard")),
+        col("id_a"), df, col(idCol), "id_b")
       .filter(col("id_b") =!= col("id_a") && col("id_b") =!= col("pos_id"))
     verifySets(df, withNeg, idCol, hashedShingles(textCol, shingleN),
         materialize)
@@ -771,6 +774,7 @@ object Dedup {
       .select(col(idCol), posexplode(keys))
       .toDF(idCol, "band", "bkey")
     pairsWithinBuckets(buckets, idCol, maxBucket, obs)
+      .select(col("id_a"), col("id_b"))
   }
 
   /** Diagnostics from a `connectedComponents` call: bidirectional edge
@@ -1271,11 +1275,12 @@ object Dedup {
 
   /** MOSS-style similarity pairs over [[winnowFingerprints]]:
     * `(id_a, id_b, n_shared)` for document pairs sharing at least
-    * `minShared` distinct fingerprints. Pairs form ONLY through the
-    * fingerprint equi-join; a fingerprint carried by more than
-    * `maxDocsPerPrint` documents is boilerplate by definition and is
-    * dropped from pair formation (the X2 bucket-cap discipline —
-    * without it one ubiquitous print forms a quadratic pair set).
+    * `minShared` distinct fingerprints. Each fingerprint is a bucket of
+    * [[pairsWithinBuckets]]: pairs form only within it, and a
+    * fingerprint carried by more than `maxDocsPerPrint` documents is
+    * boilerplate by definition and is dropped from pair formation (the
+    * bucket cap — without it one ubiquitous print forms a quadratic
+    * pair set).
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       window: Int = 8, guarantee: Int = 4, minShared: Int = 2,
@@ -1284,25 +1289,15 @@ object Dedup {
       s"winnowPairs: minShared must be >= 1, got $minShared")
     require(maxDocsPerPrint >= 2,
       s"winnowPairs: maxDocsPerPrint must be >= 2, got $maxDocsPerPrint")
-    // materialized: the fingerprint table feeds three plan legs (the
-    // frequency count and both join sides) — without it the whole
-    // tokenize→span→winnow pass re-runs per leg. This IS the "build
-    // the fingerprint index once" step of MOSS.
     val prints = winnowFingerprints(df, idCol, textCol, window, guarantee)
-      .select(col(idCol).as("__id"), explode(col("fingerprints")).as("__f"))
-      .localCheckpoint()
-    val usable = prints.groupBy(col("__f"))
-      .agg(countDistinct(col("__id")).as("__nd"))
-      .filter(col("__nd") >= 2 && col("__nd") <= maxDocsPerPrint)
-      .select(col("__f"))
-    val kept = prints.join(usable, Seq("__f"))
-    val a = kept.select(col("__f"), col("__id").as("id_a"))
-    val b = kept.select(col("__f"), col("__id").as("id_b"))
-    a.join(b, Seq("__f"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+      .select(col(idCol).as("__id"), lit(0).as("band"),
+        explode(col("fingerprints")).as("bkey"))
+    // the ids stay nullable in the schema, as the doc ids they come from
+    def nullable(c: String): Column = GraftSqlBridge.column(
+      KnownNullable(GraftSqlBridge.expression(col(c)))).as(c)
+    pairsWithinBuckets(prints, "__id", maxDocsPerPrint, None)
       .filter(col("n_shared") >= minShared)
+      .select(nullable("id_a"), nullable("id_b"), col("n_shared"))
   }
 
   /** Duplicate-span REMOVAL — the second half of Lee et al.'s
@@ -1586,6 +1581,9 @@ object Dedup {
     * the SOURCE count (guarded by `maxSources`), pair expansion
     * happens in-expression inside that bound, and the rollup output is
     * sources² rows. Nothing corpus-sized survives past the distinct.
+    * The lists skip [[pairsWithinBuckets]]' chunked expansion: they are
+    * already bounded by the source count, and the chunking would add a
+    * repartition shuffle.
     */
   def sourceOverlap(docs: DataFrame, srcCol: String, textCol: String,
       shingleN: Int = 3, maxSources: Int = 4096): DataFrame = {

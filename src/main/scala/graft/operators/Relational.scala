@@ -371,10 +371,9 @@ object Relational {
 
   /** ClickHouse `LIMIT n BY key`: the first `n` rows of each key group
     * under an explicit per-group order (CH takes them in stream order;
-    * a distributed engine needs the order stated). Two-stage like
-    * topKPerKey is unnecessary here — Spark 4 plans rank-limit windows
-    * with map-side WindowGroupLimit, so the shuffle already carries at
-    * most n rows per (key, input partition).
+    * a distributed engine needs the order stated). Spark 4 plans the
+    * rank-limit window with a map-side WindowGroupLimit, so the shuffle
+    * carries at most n rows per (key, input partition).
     */
   def limitBy(df: DataFrame, keyCols: Seq[String], n: Int,
       orderCols: Seq[Column]): DataFrame = {

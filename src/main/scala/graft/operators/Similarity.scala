@@ -58,28 +58,22 @@ object Similarity {
     when(vn > 0 && pn > 0, dot(v, p) / (vn * pn)).otherwise(lit(0.0))
 
   /** Exact top-k rows per key by (sim desc, id asc); any column besides
-    * (key, id, sim) rides along. Two-stage by default: stage 1 ranks
-    * within (key, input-partition) — the shuffle key has cardinality
-    * keys × partitions, so every core participates and each sort is a
-    * partition-sized slice; stage 2 ranks the ≤ k×partitions survivors
-    * per key, which is tiny. `twoStage = false` ranks with the stage-2
-    * window alone, for input already bounded per key.
+    * (key, id, sim) rides along. One `row_number` window per key: Spark
+    * plans the rank filter as a WindowGroupLimit Partial in each map
+    * task, below the key exchange, then a Final one after it. So the
+    * shuffle carries at most k rows per (key, input partition), and no
+    * single task ranks all candidates of a key. That trim is planned
+    * only for k ≤ `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (default 1000); above it the rank has no map-side trim. No
+    * registered entry ranks more than 400 (q209's shortlist at sf1).
     */
   private[graft] def topKPerKey(scored: DataFrame, keyCol: String,
-      k: Int, twoStage: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val survivors =
-      if (!twoStage) scored
-      else scored
-        .withColumn("__lr", row_number().over(Window
-          .partitionBy(col(keyCol), spark_partition_id())
-          .orderBy(col("sim").desc, col("id").asc)))
-        .filter(col("__lr") <= k)
-        .drop("__lr")
-    val global = Window.partitionBy(col(keyCol))
+    val w = Window.partitionBy(col(keyCol))
       .orderBy(col("sim").desc, col("id").asc)
     val extra = scored.columns.toSeq.diff(Seq(keyCol, "id", "sim")).map(col)
-    survivors.withColumn("rank", row_number().over(global))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(Seq(col(keyCol), col("rank").cast("long").as("rank"),
         col("id"), col("sim")) ++ extra: _*)
@@ -177,13 +171,14 @@ object Similarity {
     guardedSim(col("__v"), col("__p"), col("__vn"), col("__pn"))
 
   /** Exact top-k corpus rows per probe among `cands`, the probe itself
-    * excluded: (probe_id, rank, id, sim), plus the extra columns of a
-    * `Listed` shortlist. Generated candidates rank two-stage
-    * ([[topKPerKey]]); a `Listed` shortlist is already bounded per
-    * probe, so one window ranks it.
+    * excluded, ranked by [[topKPerKey]]: (probe_id, rank, id, sim),
+    * plus the extra columns of a `Listed` shortlist. `score` is the
+    * pair's `sim` over both sides' columns, higher first: the guarded
+    * cosine by default, or any other score a ranker needs (a negated
+    * Hamming distance, a PQ-ADC lookup sum, an exact integer dot).
     */
   private[graft] def exactTopK(corpus: DataFrame, probes: DataFrame,
-      cands: Candidates, k: Int): DataFrame = {
+      cands: Candidates, k: Int, score: Column = verifiedSim): DataFrame = {
     val extra = cands match {
       case Candidates.Listed(pairs) =>
         pairs.columns.toSeq.diff(Seq("probe_id", "id")).map(col)
@@ -191,10 +186,9 @@ object Similarity {
     }
     val scored = candidatePairs(corpus, probes, cands)
       .filter(col("id") =!= col("probe_id"))
-      .select(Seq(col("probe_id"), col("id"), verifiedSim.as("sim")) ++
+      .select(Seq(col("probe_id"), col("id"), score.as("sim")) ++
         extra: _*)
-    topKPerKey(scored, "probe_id", k,
-      twoStage = !cands.isInstanceOf[Candidates.Listed])
+    topKPerKey(scored, "probe_id", k)
   }
 
   /** Exact candidate pairs at or above `threshold`: (id_a, id_b, sim),
@@ -213,15 +207,8 @@ object Similarity {
 
   /** Exact top-k neighbors per probe: broadcast the (small) probe set
     * against the corpus, compute cosine once per (vector, probe) with
-    * pre-computed norms, rank per probe. One corpus scan total.
-    *
-    * Two-stage top-k: a single `Window.partitionBy(probe_id)` would
-    * funnel ALL candidates of a probe through one task (parallelism =
-    * #probes, a scale-killer when probes ≪ cores); instead stage 1
-    * takes a LOCAL top-k per (probe, input partition) — fully parallel,
-    * and it shrinks the data to k×partitions rows per probe before any
-    * shuffle — and stage 2 ranks that small residue globally. Identical
-    * result, deterministic tie-break on id.
+    * pre-computed norms, rank per probe ([[topKPerKey]]). One corpus
+    * scan total; deterministic tie-break on id.
     *
     * Output: (probe_id, rank, id, sim).
     */
@@ -278,29 +265,23 @@ object Similarity {
     * XOR-popcount Hamming distance (one codegen'd kernel per pair),
     * and the per-probe `shortlist` re-ranks with the EXACT cosine —
     * the two-stage shape binary vector stores deploy. Deterministic
-    * throughout: shortlist by (hamming asc, id asc) via the two-stage
-    * [[topKPerKey]] (map-side pre-rank, never one task per probe),
-    * final rank by (sim desc, id asc). Fully structural — the oracle
-    * replays sign bits, Hamming counts, the shortlist cut, and the
-    * exact re-rank.
+    * throughout: shortlist by (hamming asc, id asc) through
+    * [[exactTopK]] with the negated distance as its score, final rank
+    * by (sim desc, id asc). Fully structural — the oracle replays sign
+    * bits, Hamming counts, the shortlist cut, and the exact re-rank.
     */
   def binaryHammingTopK(vecs: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, k: Int,
       shortlist: Int): DataFrame = {
     require(shortlist >= k, "binaryHammingTopK: shortlist must be >= k")
-    import graft.plans.NativeMath
-    val bits = NativeMath.packSignBits(col(s"`$vecCol`"))
-    val v = vecs.select(col(s"`$idCol`").as("id"), bits.as("__bits"))
-    val p = probes.select(col(s"`$idCol`").as("probe_id"),
-      bits.as("__pbits"))
-    val hammed = v.crossJoin(broadcast(p))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"),
-        (lit(0L) - NativeMath.hammingI64(col("__bits"), col("__pbits")))
-          .cast("double").as("sim"))
-    val short = topKPerKey(hammed, "probe_id", shortlist)
-      .select(col("probe_id"), col("id"),
-        (-col("sim")).cast("long").as("hamming"))
+    val bits = graft.plans.NativeMath.packSignBits(col(s"`$vecCol`"))
+    val short = exactTopK(
+      vecs.select(col(s"`$idCol`").as("id"), bits.as("__v")),
+      broadcast(probes.select(col(s"`$idCol`").as("probe_id"),
+        bits.as("__p"))),
+      Candidates.All, shortlist,
+      score = -graft.plans.NativeMath.hammingI64(col("__v"), col("__p")))
+      .select(col("probe_id"), col("id"), (-col("sim")).as("hamming"))
     // exact re-rank over the shortlist only: vectors join back by id
     // (shortlist-bounded), probes broadcast
     exactTopK(
@@ -375,7 +356,7 @@ object Similarity {
   /** Two-phase quantized ANN: phase 1 scans ONLY int8 codes (a quarter
     * of the float32 bytes — at 100 TB of embeddings that factor applies
     * to the scan, the shuffle and the broadcast alike) and keeps a
-    * margin×k candidate pool per probe via the two-stage rank; phase 2
+    * margin×k candidate pool per probe via [[topKPerKey]]; phase 2
     * re-ranks just the pool with exact float cosine, joining the float
     * vectors back by id — candidate-bounded, like every verify stage in
     * this engine. Output schema equals [[bruteForceTopK]]; results are
@@ -588,7 +569,7 @@ object Similarity {
     * nearest-centroid cell (inline argmax projection); each probe ranks
     * the centroids and searches only its `nprobe` best cells via a cell
     * equi-join — the fraction of the corpus scanned per probe is
-    * nprobe/#cells instead of 1. Exact cosine + two-stage top-k within
+    * nprobe/#cells instead of 1. Exact cosine + [[topKPerKey]] within
     * the candidate set. Recall is probabilistic (a true neighbor binned
     * into an unprobed cell is missed) — q37's oracle replicates the
     * structure exactly, and SimilaritySpec asserts recall vs
@@ -913,14 +894,10 @@ object Similarity {
           (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
     }: _*)
     val p2 = probes.select(col(idCol).as("probe_id"), lut.as("__lut"))
-    val scored = codes.crossJoin(broadcast(p2))
-      .filter(col("id") =!= col("probe_id"))
-      // ADC fold as the codegen'd kernel (index-ordered, bit-identical
-      // to the zip_with combinator) — the scan is codes × probes
-      .withColumn("sim",
-        graft.plans.NativeMath.pqAdc(col("__code"), col("__lut")))
-      .select(col("probe_id"), col("id"), col("sim"))
-    val short = topKPerKey(scored, "probe_id", shortlist)
+    // ADC fold as the codegen'd kernel (index-ordered, bit-identical
+    // to the zip_with combinator) — the scan is codes × probes
+    val short = exactTopK(codes, broadcast(p2), Candidates.All, shortlist,
+        score = graft.plans.NativeMath.pqAdc(col("__code"), col("__lut")))
       .select(col("probe_id"), col("id"))
     exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
       broadcast(probeSide(probes, col(idCol), col(vecCol))),
@@ -930,7 +907,7 @@ object Similarity {
   /** Matryoshka prefix-dimension fidelity — for each candidate
     * truncation dim d, how well prefix-d cosine approximates the
     * full-dimension cosine over a deterministic far-pair sample
-    * (id, id + idSpace/2): the evaluation that decides how small a
+    * ([[withFarPartner]]): the evaluation that decides how small a
     * truncated (MRL-style) embedding an ANN tier can serve. Exactness:
     * vectors quantize ×`q`, dots/norms fold in long arithmetic, and
     * the only IEEE ops (two sqrts, a divide, a subtraction) are
@@ -947,10 +924,9 @@ object Similarity {
       e => round(e.cast("double") * q).cast("long"))
     val base = vecs.select(col(s"`$idCol`").cast("long").as("__id"),
       qv.as("__v"))
-    val idSpace = base.agg(max(col("__id"))).head().getLong(0) + 1L
-    val half = idSpace / 2L
-    val a = base.select(col("__id").as("__ida"), col("__v").as("__va"))
-      .withColumn("__idb", pmod(col("__ida") + half, lit(idSpace)))
+    val a = withFarPartner(
+        base.select(col("__id").as("__ida"), col("__v").as("__va")),
+        col("__ida"), base, col("__id"), "__idb")
       .filter(col("__ida") < col("__idb"))
     val pairs = a.join(
       base.select(col("__id").as("__idb"), col("__v").as("__vb")),
@@ -976,6 +952,18 @@ object Similarity {
     }
     perDim.reduce(_ unionAll _).orderBy(col("dim"))
   }
+
+  /** `rows` plus `partner`, the deterministic far partner of each row's
+    * `id`: (id + idSpace div 2) mod idSpace, with idSpace = max of
+    * `spaceId` over `space`, plus 1. The max is a one-row aggregate
+    * cross-joined into the plan, not a driver round-trip, so an empty
+    * or all-null-id `space` leaves every partner null.
+    */
+  private[graft] def withFarPartner(rows: DataFrame, id: Column,
+      space: DataFrame, spaceId: Column, partner: String): DataFrame =
+    rows.crossJoin(space.agg((max(spaceId.cast("long")) + 1L).as("__fp_n")))
+      .withColumn(partner, pmod(id + expr("__fp_n div 2"), col("__fp_n")))
+      .drop("__fp_n")
 
   /** A candidate pair frame `(i, j)` as its distinct canonical long
     * pairs `(lo, hi)`, lo < hi: self-pairs drop and (j, i) folds onto
@@ -1007,47 +995,41 @@ object Similarity {
     * candidate join ([[knnCandidatesIvf]], or any (i, j) pair
     * DataFrame — LSH buckets, a previous round's edges) and ONLY
     * those pairs score: the downstream ranking (exact integer dots,
-    * row_number per i, mutuality) is identical in both forms.
+    * [[exactTopK]] per i, mutuality) is identical in both forms.
     * Candidates are symmetrized internally (ranking side i needs the
-    * pair in both directions). The top-k trim runs INSIDE the per-i
-    * partition via row_number (WindowGroupLimit pushes the rank
-    * filter map-side). Emits each mutual edge once (i < j) with both
-    * ranks.
+    * pair in both directions). Emits each mutual edge once (i < j)
+    * with both ranks.
     */
   def mutualKnnGraph(vecs: DataFrame, idCol: String, embCol: String,
       k: Int, candidates: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, "mutualKnnGraph: k >= 1")
-    val q = vecs.select(col(s"`$idCol`").cast("long").as("__mk_id"),
+    val corpus = vecs.select(col(s"`$idCol`").cast("long").as("id"),
       transform(col(s"`$embCol`"),
-        e => round(e.cast("double") * 1000).cast("long")).as("__mk_q"))
-    val a = q.select(col("__mk_id").as("i"), col("__mk_q").as("__qa"))
-    val b = q.select(col("__mk_id").as("j"), col("__mk_q").as("__qb"))
-    val pairs = candidates match {
-      case None => a.join(b, col("i") =!= col("j"))
+        e => round(e.cast("double") * 1000).cast("long")).as("__v"))
+    val cands = candidates match {
+      case None => Candidates.All
       case Some(c) =>
         // dedup on the CANONICAL (min, max) pair FIRST, then emit both
         // directions (round 11: distinct-after-union shuffled twice
         // the rows — IVF candidates arrive in both directions whenever
         // two vectors probe each other's cells, so the canonical form
         // halves the dedup volume for the identical symmetric
-        // closure); then two id-keyed equi-joins pull the quantized
-        // vectors — no non-equi product anywhere in this branch
-        val und = canonicalPairs(c, "u", "v")
-        val sym = und.select(col("u").as("i"), col("v").as("j"))
-          .union(und.select(col("v").as("i"), col("u").as("j")))
-        sym.join(a, "i").join(b, "j")
+        // closure; the union is positional, so its second leg is the
+        // reverse direction); the verify stage pulls the quantized
+        // vectors through two id-keyed equi-joins
+        val und = canonicalPairs(c, "probe_id", "id")
+        Candidates.Listed(und.union(und.select(col("id"), col("probe_id"))))
     }
     // exact int64 fold as the codegen'd kernel (round 11): identical
     // accumulation order/overflow to the zip_with combinator, but it
     // stays inside whole-stage codegen — the candidate-pair volume is
     // where all the time goes at scale
-    val dots = pairs
-      .select(col("i"), col("j"),
-        graft.plans.NativeMath.dotI64(col("__qa"), col("__qb")).as("d"))
-    val ranked = dots.withColumn("rk",
-      row_number().over(Window.partitionBy(col("i"))
-        .orderBy(col("d").desc, col("j"))))
-      .where(col("rk") <= k)
+    val ranked = exactTopK(corpus,
+        corpus.select(col("id").as("probe_id"), col("__v").as("__p")),
+        cands, k,
+        score = graft.plans.NativeMath.dotI64(col("__v"), col("__p")))
+      .select(col("probe_id").as("i"), col("id").as("j"),
+        col("sim").as("d"), col("rank").cast("int").as("rk"))
     // Mutuality via ONE grouped pass over the undirected key instead of
     // a ranked ⋈ ranked self-join: Spark does not common-subexpression
     // the self-join's two identical subtrees, so the whole candidate +

@@ -204,7 +204,8 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.pairsWithinBuckets(buckets, "doc_id",
       maxBucket = 10000, obs = None)
     assert(pairs.count() == n.toLong * (n - 1) / 2)
-    val sample = pairs.filter($"id_a" === 0L).as[(Long, Long)]
+    val sample = pairs.filter($"id_a" === 0L)
+      .select($"id_a", $"id_b").as[(Long, Long)]
       .collect().toSet
     assert(sample == (1 until n).map(b => (0L, b.toLong)).toSet)
     assert(pairs.filter($"id_a" >= $"id_b").isEmpty)
@@ -609,5 +610,26 @@ class DedupSpec extends SparkSpec {
     // map-side — the spans are never shuffled for the join
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("SortMergeJoin"))
+  }
+
+  test("contrastiveTriplets returns 0 rows for an empty corpus") {
+    assert(Dedup.contrastiveTriplets(docs.filter(lit(false)), "doc_id",
+      "text", loJ = 0.3, hiJ = 0.9).count() == 0)
+  }
+
+  test("winnowPairs counts each shared fingerprint once, even when an " +
+      "id repeats") {
+    val text = (0 until 40).map(i => s"w$i").mkString(" ")
+    val once = Seq((0L, text), (1L, text)).toDF("doc_id", "text")
+    val twice = once.union(Seq((1L, text)).toDF("doc_id", "text"))
+    def shared(df: org.apache.spark.sql.DataFrame) =
+      Dedup.winnowPairs(df, "doc_id", "text")
+        .select($"id_a", $"id_b", $"n_shared").as[(Long, Long, Long)]
+        .collect().toSeq
+    val n = Dedup.winnowFingerprints(once.limit(1), "doc_id", "text")
+      .select(size($"fingerprints")).as[Int].head().toLong
+    assert(n >= 2)
+    assert(shared(once) == Seq((0L, 1L, n)))
+    assert(shared(twice) == Seq((0L, 1L, n)))
   }
 }

@@ -35,11 +35,37 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan("q45_ann_index_topk").contains("dynamicpruning"))
   }
 
+  /** The number of `Exchange hashpartitioning(probe_id` in `p`, after
+    * asserting that each has a `WindowGroupLimit … Partial` directly
+    * below it: candidates are trimmed to k per map task before the
+    * per-probe shuffle, never ranked whole by one task per probe.
+    */
+  private def trimmedProbeExchanges(p: String): Int = {
+    val lines = p.linesIterator.toIndexedSeq
+    val ex = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(probe_id"))
+    for (i <- ex) assert(lines.lift(i + 1).exists(l =>
+      l.contains("WindowGroupLimit") && l.contains("Partial")), p)
+    ex.size
+  }
+
   test("q27: ANN ranking is two-stage, not a single per-probe window") {
-    // the local stage of topKPerKey partitions by (key, spark_partition_id);
-    // a plan without that marker has collapsed to the one-task-per-probe
-    // window rank this operator must avoid
-    assert(plan("q27_ann_lsh_topk").contains("SPARK_PARTITION_ID"))
+    // WindowGroupLimit Partial (per map task) below the one probe
+    // exchange, then Final: a plan without the Partial has collapsed to
+    // the one-task-per-probe window rank this operator must avoid
+    assert(trimmedProbeExchanges(plan("q27_ann_lsh_topk")) == 1)
+  }
+
+  test("q25/q37/q290: each ANN ranking has one probe exchange, trimmed " +
+      "map-side by WindowGroupLimit Partial") {
+    // q290's exact re-rank joins its shortlist back through two
+    // broadcasts, so it ranks on the shortlist's probe partitioning
+    // and plans no exchange of its own
+    for (q <- Seq("q25_ann_topk", "q37_ann_ivf_topk",
+        "q290_binary_hamming_ann")) {
+      val p = plan(q)
+      assert(trimmedProbeExchanges(p) == 1, s"$q: $p")
+    }
   }
 
   test("q61/q63: asof and range joins never take a nested-loop plan") {
@@ -444,9 +470,9 @@ class PlanAuditSpec extends SparkSpec {
       k = 3, books, shortlist = 10)
       .queryExecution.executedPlan.toString
     assert(p.contains("Broadcast"), p)
-    // two-stage top-k survives (the q27 marker): shortlist ranking
-    // partitions by (probe, partition id), never one task per probe
-    assert(p.contains("SPARK_PARTITION_ID"), p)
+    // the ADC shortlist trims map-side (the q27 property), never one
+    // task per probe; the exact re-rank reuses its probe partitioning
+    assert(trimmedProbeExchanges(p) == 1, p)
   }
 
   test("q228: the OOV vocabulary is a TakeOrdered cut broadcast back " +
@@ -488,7 +514,7 @@ class PlanAuditSpec extends SparkSpec {
           "n_inter:bigint,cont:double,jac:double>", 17),
       ("q233_contrastive_triplets",
         "struct<anchor_id:bigint,pos_id:bigint,pos_jaccard:double," +
-          "neg_id:bigint,neg_jaccard:double>", 21),
+          "neg_id:bigint,neg_jaccard:double>", 19),
       ("q288_incremental_neardedup",
         "struct<lang:string,n_kept:bigint,id_sum:bigint>", 22)))
     test(s"${q.takeWhile(_ != '_')}: the set-verify entry keeps its " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -442,5 +443,98 @@ class SimilaritySpec extends SparkSpec {
         zeroPlanted, outsideProbe, "vec_id", "embedding", 0.9, cents, 1,
         maxPerCell))
     }
+  }
+
+  // ---- the one top-k stage: exactTopK against a driver sort-and-take ----
+
+  /** Checks `exactTopK(corpus, probes, All, k, score)` against a
+    * sort-and-take on the driver: every corpus row but the probe
+    * itself, by (score desc, id asc), the first k. Over 1 and 4 input
+    * partitions, k from 1 to more than the candidate count, and an
+    * empty corpus or probe side.
+    */
+  private def assertTopKMatches[C, P](name: String,
+      corpus: Seq[(Long, C)], corpusDf: org.apache.spark.sql.DataFrame,
+      probes: Seq[(Long, P)], probeDf: org.apache.spark.sql.DataFrame,
+      score: Column, ref: (C, P) => Double): Unit = {
+    import Similarity.{Candidates, exactTopK}
+    for (parts <- Seq(1, 4); k <- Seq(1, 3, corpus.size + 5)) {
+      val got = exactTopK(corpusDf.repartition(parts), probeDf,
+          Candidates.All, k, score)
+        .select($"probe_id", $"rank", $"id", $"sim".cast("double"))
+        .as[(Long, Long, Long, Double)].collect()
+        .sortBy(r => (r._1, r._2)).toSeq
+      val want = probes.sortBy(_._1).flatMap { case (pid, p) =>
+        corpus.filter(_._1 != pid).map { case (id, c) => (id, ref(c, p)) }
+          .sortBy { case (id, sc) => (-sc, id) }.take(k).zipWithIndex
+          .map { case ((id, sc), r) => (pid, r + 1L, id, sc) }
+      }
+      assert(got == want, s"$name: parts=$parts k=$k")
+    }
+    for ((c, p) <- Seq((corpusDf.limit(0), probeDf), (corpusDf, probeDf.limit(0))))
+      assert(exactTopK(c, p, Candidates.All, 3, score).count() == 0,
+        s"$name: 0 rows")
+  }
+
+  /** 12 ids over 4 distinct patterns, so each score ties across ids and
+    * the id breaks the tie; ids 0 and 5 are also the probes.
+    */
+  private def tiedCorpus[A](patterns: Seq[A]): Seq[(Long, A)] =
+    (0 until 12).map(i => (i.toLong, patterns(i % patterns.size)))
+
+  test("exactTopK equals a driver sort-and-take under the guarded cosine") {
+    val vs = tiedCorpus(Seq(Seq(1f, 2f, -1f, 0.5f), Seq(-2f, 1f, 0.5f, 1f),
+      Seq(0f, 0f, 0f, 0f), Seq(1f, 1f, 1f, 1f)))
+    val probes = vs.filter(v => v._1 == 0L || v._1 == 5L)
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val (na, nb) = (math.sqrt(dot(a, a)), math.sqrt(dot(b, b)))
+      if (na > 0 && nb > 0) dot(a, b) / (na * nb) else 0.0
+    }
+    assertTopKMatches[Seq[Float], Seq[Float]]("cosine",
+      vs, Similarity.corpusSide(vs.toDF("id", "v"), $"id", $"v"),
+      probes, Similarity.probeSide(probes.toDF("id", "v"), $"id", $"v"),
+      Similarity.guardedSim($"__v", $"__p", $"__vn", $"__pn"), cos)
+  }
+
+  test("exactTopK equals a driver sort-and-take under a negated Hamming " +
+      "distance") {
+    val bits = tiedCorpus(Seq(Seq(0L, 5L), Seq(-1L, 3L), Seq(7L, 0L),
+      Seq(255L, 1L)))
+    val probes = bits.filter(v => v._1 == 0L || v._1 == 5L)
+    assertTopKMatches[Seq[Long], Seq[Long]]("hamming",
+      bits, bits.toDF("id", "__v"), probes, probes.toDF("probe_id", "__p"),
+      -graft.plans.NativeMath.hammingI64($"__v", $"__p"),
+      (a, b) => -a.zip(b).map { case (x, y) =>
+        java.lang.Long.bitCount(x ^ y) }.sum.toDouble)
+  }
+
+  test("exactTopK equals a driver sort-and-take under a PQ-ADC score") {
+    val codes = tiedCorpus(Seq(Seq(0, 1), Seq(1, 0), Seq(2, 2), Seq(0, 2)))
+    val luts = Seq(
+      (0L, Seq(Seq(0.5, -1.0, 0.25), Seq(1.0, 0.0, -0.5))),
+      (5L, Seq(Seq(-0.5, 2.0, 0.0), Seq(0.125, 0.0, 0.75))))
+    assertTopKMatches[Seq[Int], Seq[Seq[Double]]]("adc",
+      codes, codes.toDF("id", "__code"), luts, luts.toDF("probe_id", "__lut"),
+      graft.plans.NativeMath.pqAdc($"__code", $"__lut"),
+      (c, lut) => c.indices.foldLeft(0.0)((acc, s) => acc + lut(s)(c(s))))
+  }
+
+  test("exactTopK equals a driver sort-and-take under an exact int64 dot") {
+    val qs = tiedCorpus(Seq(Seq(1000L, -2000L, 3L), Seq(-5L, 7000L, 0L),
+      Seq(0L, 0L, 0L), Seq(999L, 1L, -1L)))
+    val probes = qs.filter(v => v._1 == 0L || v._1 == 5L)
+    assertTopKMatches[Seq[Long], Seq[Long]]("dotI64",
+      qs, qs.toDF("id", "__v"), probes, probes.toDF("probe_id", "__p"),
+      graft.plans.NativeMath.dotI64($"__v", $"__p"),
+      (a, b) => a.zip(b).map { case (x, y) => x * y }.sum.toDouble)
+  }
+
+  test("matryoshkaFidelity returns 0 rows for an empty corpus") {
+    val empty = Seq((1L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+      .filter(lit(false))
+    assert(Similarity.matryoshkaFidelity(empty, "vec_id", "embedding",
+      Seq(1)).count() == 0)
   }
 }
