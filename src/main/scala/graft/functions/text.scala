@@ -30,7 +30,7 @@ object text {
     * space-joined. The unit set for MinHash/Jaccard near-dedup. Empty
     * when the document has fewer than n tokens.
     *
-    * Backed by the native `NGramsExpr` kernel — the equivalent
+    * Backed by the native `graft_ngrams` kernel — the equivalent
     * `array_distinct(transform(sequence, i -> concat_ws(slice)))`
     * combinator evaluates interpreted (higher-order functions skip
     * codegen) and was the top CPU line of the dedup pipeline; the
@@ -68,7 +68,7 @@ object text {
     "es" -> Seq("el", "los", "las", "y", "un", "una"))
 
   /** Occurrences (with repeats) of any of `words` in the token array.
-    * Backed by the native `ProfileCountExpr` kernel (the interpreted
+    * Backed by the native `graft_profile_count` kernel (the interpreted
     * `filter` lambda × 4 profiles was the text-metrics hot loop);
     * [[stopwordCountColumn]] is the combinator spec (TextSpec proves
     * them equal).
@@ -145,7 +145,7 @@ object text {
     * fold is expressible in any SQL dialect with list folds) and
     * stable, so it can key exact dedup across heterogeneous pipelines.
     *
-    * Backed by the native `RollingHashExpr` kernel — the per-character
+    * Backed by the native `graft_rolling_hash` kernel — the per-character
     * combinator fold ([[fingerprintColumn]]) evaluates interpreted and
     * was the top CPU line of the q38 prep pipeline; TextSpec proves the
     * two equal.

@@ -143,14 +143,9 @@ object Dedup {
       .persist()
     try {
       val store = readStore(spark, storeDir).map(_.select(col("__key")))
-      def bloomOf(df: DataFrame): Array[Byte] = {
-        val n = math.max(df.count(), 1L)
-        val bf = df.select(xxhash64(col("__key")).as("__h"))
-          .stat.bloomFilter("__h", n, fpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        bos.toByteArray
-      }
+      def bloomOf(df: DataFrame): Array[Byte] =
+        graft.plans.NativeHashes.bloomSketch(
+          df.select(xxhash64(col("__key")).as("__h")), "__h", fpp)
       val novel = store.fold(inBatch) { st =>
         val storeProbe = graft.plans.NativeHashes.bloomMightContain(
           xxhash64(col("__key")), bloomOf(st))
@@ -1913,13 +1908,9 @@ object Dedup {
     val evalGrams = evalGramHashes(evalDocs, textCol, n)
       .persist() // feeds the bloom build's count + sketch + the join
     try {
-      val nGrams = math.max(evalGrams.count(), 1L)
-      val bf = evalGrams.stat.bloomFilter("__dc_gh", nGrams, fpp)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
       // map-side: most grams never reach the join
-      val probe = graft.plans.NativeHashes.bloomMightContain(
-        col("__dc_gh"), bos.toByteArray)
+      val probe = graft.plans.NativeHashes.bloomMightContain(col("__dc_gh"),
+        graft.plans.NativeHashes.bloomSketch(evalGrams, "__dc_gh", fpp))
       // materialize before unpersist: the returned frame must not
       // re-plan against an evicted cache
       evalHits(docs, evalGrams, idCol, textCol, n, minHits, Some(probe))

@@ -354,7 +354,6 @@ object Retrieval {
   def mmrRerank(cands: DataFrame, queryCol: String, idCol: String,
       relCol: String, vecCol: String, k: Int, lam: Double,
       q: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
     val qv = transform(col(s"`$vecCol`"),
       e => round(e.cast("double") * q).cast("long"))
     val grouped = cands
@@ -367,9 +366,7 @@ object Retrieval {
     val ids = transform(col("__cl"), s => s.getField("id"))
     val rels = transform(col("__cl"), s => s.getField("rel"))
     val embs = transform(col("__cl"), s => s.getField("emb"))
-    val sel = GraftSqlBridge.column(graft.plans.MmrSelectExpr(
-      GraftSqlBridge.expression(ids), GraftSqlBridge.expression(rels),
-      GraftSqlBridge.expression(embs), k, lam))
+    val sel = graft.plans.NativeMath.mmrSelect(ids, rels, embs, k, lam)
     grouped.select(col("__mq"), posexplode(sel).as(Seq("__pos", "__id")))
       .select(col("__mq").as(queryCol),
         (col("__pos") + 1).cast("long").as("mmr_rank"),

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * The per-row and per-pair math runs in codegen'd native kernels
   * ([[graft.plans.NativeMath]]: `DotProduct64Expr`, `ArgMaxCosineExpr`,
-  * `TopCellsExpr`, PQ-ADC, Hamming), accumulating in double; the
+  * `graft_top_cells`, PQ-ADC, Hamming), accumulating in double; the
   * `...Column` combinators kept here are their value-identical
   * references.
   */
@@ -140,7 +140,12 @@ object Similarity {
 
     /** Exactly the listed `(probe_id, id)` pairs. For [[exactTopK]] they
       * are a shortlist already bounded per probe, and their other
-      * columns ride to the output.
+      * columns ride to the output. A corpus side of just `(id, __v)`
+      * gets its norm per listed pair, after the join: the form for a
+      * shortlist far smaller than the corpus. Spark moves no join below
+      * a projection that computes columns, so a norm (or a widening)
+      * projected with the corpus runs on every corpus row, listed or
+      * not.
       */
     final case class Listed(pairs: DataFrame) extends Candidates
   }
@@ -161,7 +166,10 @@ object Similarity {
         .join(probes.withColumn("__cell",
           explode(probeCells(col("__p"), cents, nprobe))), "__cell")
     case Candidates.Listed(pairs) =>
-      pairs.join(corpus, "id").join(probes, "probe_id")
+      val met = pairs.join(corpus, "id")
+      (if (corpus.columns.contains("__vn")) met
+       else met.withColumn("__vn", norm(col("__v"))))
+        .join(probes, "probe_id")
   }
 
   /** The verified score of a candidate pair: [[guardedSim]] over the
@@ -285,7 +293,7 @@ object Similarity {
     // exact re-rank over the shortlist only: vectors join back by id
     // (shortlist-bounded), probes broadcast
     exactTopK(
-      corpusSide(vecs, col(s"`$idCol`"), col(s"`$vecCol`"), widen = true),
+      vecs.select(col(s"`$idCol`").as("id"), col(s"`$vecCol`").as("__v")),
       broadcast(probeSide(probes, col(s"`$idCol`"), col(s"`$vecCol`"),
         widen = true)),
       Candidates.Listed(short), k)
@@ -373,7 +381,7 @@ object Similarity {
     val pool = exactTopK(corpusSide(codes(vecs), col(idCol), col(vecCol)),
       broadcast(probeSide(codes(probes), col(idCol), col(vecCol))),
       Candidates.All, k * margin)
-    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+    exactTopK(vecs.select(col(idCol).as("id"), col(vecCol).as("__v")),
       broadcast(probeSide(probes, col(idCol), col(vecCol))),
       Candidates.Listed(pool.select(col("probe_id"), col("id"))), k)
   }
@@ -584,7 +592,7 @@ object Similarity {
 
   /** The `nprobe` best cells for a probe vector, ranked by centroid
     * cosine (desc) with centroid order as tie-break — the native
-    * `TopCellsExpr` kernel (round 11: the combinator form re-derived
+    * `graft_top_cells` kernel (round 11: the combinator form re-derived
     * every centroid norm per row through interpreted lambdas — the
     * measured hot loop of the IVF candidate generator at √N
     * centroids). [[probeCellsColumn]] keeps the combinator as the
@@ -899,7 +907,7 @@ object Similarity {
     val short = exactTopK(codes, broadcast(p2), Candidates.All, shortlist,
         score = graft.plans.NativeMath.pqAdc(col("__code"), col("__lut")))
       .select(col("probe_id"), col("id"))
-    exactTopK(corpusSide(vecs, col(idCol), col(vecCol)),
+    exactTopK(vecs.select(col(idCol).as("id"), col(vecCol).as("__v")),
       broadcast(probeSide(probes, col(idCol), col(vecCol))),
       Candidates.Listed(short), k)
   }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{ArrayExists, ArrayFilter, ArrayTransform, Cast, Explode, Expression, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType, FloatType, LongType, StringType}
 
 import graft.functions.{ch, url}
 
@@ -19,6 +19,18 @@ object ChDialect {
 
   private def col(e: Expression): Column = GraftSqlBridge.column(e)
   private def ex(c: Column): Expression = GraftSqlBridge.expression(c)
+
+  /** A `String -> String` [[NetKernels]] call, NULL where it returns null. */
+  private def netString(name: String, fn: String,
+      args: Seq[Expression]): Expression =
+    NativeCall(name, s"NetKernels.$fn", args.take(1), Nil, StringType,
+      Seq(StringType))
+
+  /** A two-string [[StrDistKernels]] call. */
+  private def strDist(name: String, fn: String, dataType: DataType,
+      args: Seq[Expression]): Expression =
+    NativeCall(name, s"StrDistKernels.$fn", args.take(2), Nil, dataType,
+      Seq(StringType, StringType))
 
   private def litString(e: Expression, what: String): String = e match {
     case Literal(v, _) if v != null => v.toString
@@ -1735,8 +1747,8 @@ object ChDialect {
     // initcap/initcapUTF8: CH's word rule (letters after any
     // NON-ALPHANUMERIC capitalize — Spark's builtin only breaks on
     // whitespace), native kernel
-    "initcap" -> (args => InitcapChExpr(args.head)),
-    "initcapUTF8" -> (args => InitcapChExpr(args.head)),
+    "initcap" -> (args => netString("initcap", "initcapCh", args)),
+    "initcapUTF8" -> (args => netString("initcap", "initcapCh", args)),
     // string hash-sketch family over the engine's native kernels —
     // values are ENGINE-DEFINED (as CH's are CH-defined); use for
     // grouping/banding, spec-pinned rather than oracle-replayed.
@@ -1835,14 +1847,14 @@ object ChDialect {
     "levenshteinDistance" -> (args =>
       org.apache.spark.sql.catalyst.expressions.Levenshtein(
         args.head, args(1))),
-    "damerauLevenshteinDistance" -> (args =>
-      DamerauLevenshteinExpr(args.head, args(1))),
+    "damerauLevenshteinDistance" -> (args => strDist(
+      "damerauLevenshteinDistance", "damerauLevenshtein", LongType, args)),
     "jaroSimilarity" -> (args =>
-      JaroExpr(args.head, args(1), winkler = false)),
+      strDist("jaroSimilarity", "jaro", DoubleType, args)),
     "jaroWinklerSimilarity" -> (args =>
-      JaroExpr(args.head, args(1), winkler = true)),
+      strDist("jaroWinklerSimilarity", "jaroWinkler", DoubleType, args)),
     "stringJaccardIndex" -> (args =>
-      CharJaccardExpr(args.head, args(1))),
+      strDist("stringJaccardIndex", "charJaccard", DoubleType, args)),
     // hasToken(haystack, 'token'): the token must be cut on both sides
     // by non-alphanumerics (CH's tokenbf vocabulary)
     "hasToken" -> (args => {
@@ -1905,10 +1917,11 @@ object ChDialect {
         slice(arr, lit(1), sz - n))))
     }),
     // arrayAUC(scores, labels): tie-aware ROC AUC per row — exact
-    // integer midranks to one final division (NativeMath.ArrayAucExpr)
-    "arrayAUC" -> (args => ArrayAucExpr(
-      Cast(args.head, ArrayType(DoubleType)),
-      Cast(args(1), ArrayType(LongType)))),
+    // integer midranks to one final division (MathKernels.arrayAuc)
+    "arrayAUC" -> (args => NativeCall("arrayAUC", "MathKernels.arrayAuc",
+      Seq(Cast(args.head, ArrayType(DoubleType)),
+        Cast(args(1), ArrayType(LongType))), Nil, DoubleType,
+      Seq(ArrayType(DoubleType), ArrayType(LongType)))),
     // tupleElement(t, n) / tupleElement(t, 'name'): CH's struct access
     // by 1-based ordinal or by field name
     "tupleElement" -> (args => args(1) match {
@@ -2181,7 +2194,8 @@ object ChDialect {
           "^[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}$") &&
           forall(octets, o => o <= 255), lit(1L)).otherwise(lit(0L)))
     }),
-    "isIPv6String" -> (args => IsIpv6StringExpr(args.head)),
+    "isIPv6String" -> (args => NativeCall("isIPv6String",
+      "NetKernels.isIpv6", args.take(1), Nil, LongType, Seq(StringType))),
     // IPv4CIDRToRange('1.2.3.4', 24) → (lo, hi) dotted-quad tuple
     "IPv4CIDRToRange" -> (args => {
       val n = ch.ipv4StringToNum(col(args.head))
@@ -2193,14 +2207,22 @@ object ChDialect {
       ex(struct(ch.ipv4NumToString(lo).as("lo"),
         ch.ipv4NumToString(lo + mask).as("hi")))
     }),
-    "MACNumToString" -> (args =>
-      MacNumToStringExpr(Cast(args.head, LongType))),
-    "MACStringToNum" -> (args => MacStringToNumExpr(args.head)),
-    "base58Encode" -> (args => Base58EncodeExpr(args.head)),
-    "base58Decode" -> (args => Base58DecodeExpr(args.head)),
-    "soundex" -> (args => SoundexExpr(args.head)),
-    "idnaEncode" -> (args => IdnaEncodeExpr(args.head)),
-    "idnaDecode" -> (args => IdnaDecodeExpr(args.head)),
+    "MACNumToString" -> (args => NativeCall("MACNumToString",
+      "NetKernels.macNumToString", Seq(Cast(args.head, LongType)), Nil,
+      StringType, Seq(LongType))),
+    "MACStringToNum" -> (args => NativeCall("MACStringToNum",
+      "NetKernels.macStringToNum", args.take(1), Nil, LongType,
+      Seq(StringType))),
+    "base58Encode" -> (args =>
+      netString("base58Encode", "base58Encode", args)),
+    "base58Decode" -> (args =>
+      netString("base58Decode", "base58Decode", args)),
+    "soundex" -> (args =>
+      netString("soundex", "soundex", args)),
+    "idnaEncode" -> (args =>
+      netString("idnaEncode", "idnaEncode", args)),
+    "idnaDecode" -> (args =>
+      netString("idnaDecode", "idnaDecode", args)),
     // normalizeQuery: literals → placeholders, placeholder lists
     // collapse to `?..` (CH's query-log grouping normalizer) — pure
     // regex composition, replayable in any engine with RE2-safe

@@ -151,7 +151,8 @@ object Dictionaries {
   * plan ANALYZED before the refresh still carries its old map — by
   * design, matching CH where a running query keeps the dictionary
   * snapshot it started with; re-analyze (re-create the DataFrame)
-  * to pick up the new registration.
+  * to pick up the new registration. Bespoke, not a NativeCall: it
+  * probes a map, not a kernel, and unboxes by the value type.
   */
 case class DictLookupExpr(child: Expression, dictName: String,
     map: java.util.HashMap[Any, Any], valueType: DataType,

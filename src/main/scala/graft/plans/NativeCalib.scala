@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 /** Weighted isotonic regression (PAV) — the calibration kernel for
   * model-based quality filtering (X192, round 12): a quality
@@ -29,8 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 object NativeCalib {
 
   def isotonicFit(sumY: Column, cnt: Column): Column =
-    GraftSqlBridge.column(IsotonicFitExpr(
-      GraftSqlBridge.expression(sumY), GraftSqlBridge.expression(cnt)))
+    NativeCall.column("graft_isotonic_fit", "CalibKernels.pav",
+      Seq(sumY, cnt), Nil, ArrayType(DoubleType, containsNull = false),
+      Seq(ArrayType(LongType), ArrayType(LongType)))
 
   /** Step-function evaluation of a calibration table (round 13,
     * verdict ask #1 — X193's lookup kernel): `scores` is a SORTED
@@ -42,9 +41,9 @@ object NativeCalib {
     * corpus through an asof window partitioned by the group key.
     */
   def stepLookup(scores: Column, values: Column, x: Column): Column =
-    GraftSqlBridge.column(StepLookupExpr(
-      GraftSqlBridge.expression(scores), GraftSqlBridge.expression(values),
-      GraftSqlBridge.expression(x)))
+    NativeCall.column("graft_step_lookup", "CalibKernels.lookup",
+      Seq(scores, values, x), Nil, DoubleType,
+      Seq(ArrayType(LongType), ArrayType(DoubleType), LongType))
 }
 
 object CalibKernels {
@@ -124,58 +123,4 @@ object CalibKernels {
     if (values.isNullAt(i)) null
     else java.lang.Double.valueOf(values.getDouble(i))
   }
-}
-
-case class IsotonicFitExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType =
-    ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_isotonic_fit"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(sumY: Any, cnt: Any): Any =
-    CalibKernels.pav(sumY.asInstanceOf[ArrayData],
-      cnt.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("pavR")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object $r = graft.plans.CalibKernels.pav($a, $b);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }""")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class StepLookupExpr(first: Expression, second: Expression,
-    third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(LongType), ArrayType(DoubleType), LongType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_step_lookup"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(scores: Any, values: Any,
-      x: Any): Any =
-    CalibKernels.lookup(scores.asInstanceOf[ArrayData],
-      values.asInstanceOf[ArrayData], x.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("stepR")
-    nullSafeCodeGen(ctx, ev, (s, v, x) => s"""
-      Object $r = graft.plans.CalibKernels.lookup($s, $v, $x);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Double) $r).doubleValue(); }""")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Native Catalyst expressions for the two hash kernels that dominate
   * near-dedup CPU. The pure-Column formulations (Dedup.minHashSignature
@@ -14,9 +14,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * 64 hashes × ~200 shingles per document that interpretation is the
   * bottleneck of the whole pipeline (measured ~2 s for 5000 docs).
   * These expressions do the identical work in one tight JVM loop and
-  * stay inside whole-stage codegen (`doGenCode` emits a single static
-  * call), cutting the kernel to microseconds per row — the difference
-  * between a CPU-bound and a scan-bound dedup at 100 TB.
+  * stay inside whole-stage codegen (the generated code is a single
+  * static call), cutting the kernel to microseconds per row — the
+  * difference between a CPU-bound and a scan-bound dedup at 100 TB.
+  *
+  * Declaring a kernel: a static method of a `*Kernels` object
+  * ([[HashKernels]] here) plus one [[NativeCall]] line naming it with
+  * its plan name, constants, result type and input types. Result
+  * nullability follows the method's JVM return type: a primitive
+  * return is never NULL, a reference return is NULL when the kernel
+  * returns `null`; any NULL argument makes the call NULL. Every
+  * `Native*` object declares its kernels this way.
   *
   * Hash choice: Spark's own XXH64 (the `xxhash64` function's kernel) on
   * the shingle bytes, then XXH64.hashLong as the per-signature-slot
@@ -29,18 +37,26 @@ object NativeHashes {
   /** `Array[String] shingles -> Array[Long](k)` MinHash signature. */
   def minHashSignature64(shingles: Column, numHashes: Int): Column =
     GraftSqlBridge.column(
-      MinHashSignature64Expr(GraftSqlBridge.expression(shingles), numHashes))
+      minHash(GraftSqlBridge.expression(shingles), numHashes))
+  private[plans] def minHash(shingles: Expression, numHashes: Int) =
+    NativeCall("graft_minhash64", "HashKernels.minhash", Seq(shingles),
+      Seq(numHashes), ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(StringType)))
 
   /** `Array[String] tokens -> Long` 64-bit SimHash over distinct tokens. */
   def simHash64(tokens: Column): Column =
-    GraftSqlBridge.column(
-      SimHash64Expr(GraftSqlBridge.expression(tokens)))
+    GraftSqlBridge.column(simHash(GraftSqlBridge.expression(tokens)))
+  private[plans] def simHash(tokens: Expression) =
+    NativeCall("graft_simhash64", "HashKernels.simhash", Seq(tokens), Nil,
+      LongType, Seq(ArrayType(StringType)))
 
   /** `Array[String] tokens -> Array[String]` distinct space-joined
     * n-grams (first-occurrence order, empty when fewer than n tokens).
     */
   def nGrams(tokens: Column, n: Int): Column =
-    GraftSqlBridge.column(NGramsExpr(GraftSqlBridge.expression(tokens), n))
+    NativeCall.column("graft_ngrams", "HashKernels.ngrams", Seq(tokens),
+      Seq(n), ArrayType(StringType, containsNull = false),
+      Seq(ArrayType(StringType)))
 
   /** `String -> Long` rolling polynomial hash over the string's code
     * points: h = (h*31 + codepoint) mod p. Value-identical to the
@@ -50,7 +66,8 @@ object NativeHashes {
     * CPU line of the q38 prep pipeline.
     */
   def rollingHash(s: Column, p: Long): Column =
-    GraftSqlBridge.column(RollingHashExpr(GraftSqlBridge.expression(s), p))
+    NativeCall.column("graft_rolling_hash", "HashKernels.rollingHash",
+      Seq(s), Seq(p), LongType, Seq(StringType))
 
   /** `Array[String] tokens -> Long` hashed-feature linear score
     * (round 13, X198): Σ over tokens of `weights[rollingHash(tok) mod
@@ -61,9 +78,12 @@ object NativeHashes {
     * interpreted lambdas. `weights.length` IS the bucket count.
     */
   def hashedScore(tokens: Column, weights: IndexedSeq[Long],
-      p: Long): Column =
-    GraftSqlBridge.column(HashedScoreExpr(
-      GraftSqlBridge.expression(tokens), weights, p))
+      p: Long): Column = {
+    require(weights.nonEmpty, "hashedScore: empty weight table")
+    NativeCall.column("graft_hashed_score", "HashKernels.hashedScore",
+      Seq(tokens), Seq(weights.toArray, p), LongType,
+      Seq(ArrayType(StringType)))
+  }
 
   /** `Array[String] tokens -> Long` count of tokens (with repeats) that
     * belong to a fixed word set — value-identical to
@@ -71,9 +91,14 @@ object NativeHashes {
     * lambda × 4 language profiles was the hot loop of the text-metrics
     * stage.
     */
-  def profileCount(toks: Column, words: Seq[String]): Column =
-    GraftSqlBridge.column(
-      ProfileCountExpr(GraftSqlBridge.expression(toks), words))
+  def profileCount(toks: Column, words: Seq[String]): Column = {
+    // UTF8String keys, so tokens compare without decoding
+    val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+    words.foreach(w =>
+      set.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
+    NativeCall.column("graft_profile_count", "HashKernels.profileCount",
+      Seq(toks), Seq(set), LongType, Seq(ArrayType(StringType)))
+  }
 
   /** `Array[Long] elementHashes -> Array[Long]` hash of every
     * `window`-length sliding span: element i is the left fold
@@ -88,9 +113,12 @@ object NativeHashes {
     * mod p (the [[rollingHash]] contract) — the rolling identity
     * needs x < p.
     */
-  def spanHashes(elementHashes: Column, window: Int, p: Long): Column =
-    GraftSqlBridge.column(SpanHashesExpr(
-      GraftSqlBridge.expression(elementHashes), window, p))
+  def spanHashes(elementHashes: Column, window: Int, p: Long): Column = {
+    require(window >= 2, s"spanHashes: window must be >= 2, got $window")
+    NativeCall.column("graft_span_hashes", "HashKernels.spanHashes",
+      Seq(elementHashes), Seq[Any](window, p),
+      ArrayType(LongType, containsNull = true), Seq(ArrayType(LongType)))
+  }
 
   /** `Array[Long] -> Array[Long]` sliding-window minimum: element i is
     * the min of elements i..i+window-1 (window truncates at the array
@@ -102,8 +130,8 @@ object NativeHashes {
     * ~600 µs/doc interpreted vs µs native on the winnowing corpus.
     */
   def slidingMin(arr: Column, window: Int): Column =
-    GraftSqlBridge.column(SlidingMinExpr(
-      GraftSqlBridge.expression(arr), window))
+    NativeCall.column("graft_sliding_min", "HashKernels.slidingMin",
+      Seq(arr), Seq(window), ArrayType(LongType), Seq(ArrayType(LongType)))
 
   /** `Array[Long] spanHashes -> Array[Int]` 0-based TOKEN indices
     * covered by within-document REPEAT spans. A span at position i is
@@ -119,8 +147,9 @@ object NativeHashes {
     * with a hash→first-position map; result sorted ascending.
     */
   def repeatSpanDrops(spanHashes: Column, window: Int): Column =
-    GraftSqlBridge.column(RepeatSpanDropsExpr(
-      GraftSqlBridge.expression(spanHashes), window))
+    NativeCall.column("graft_repeat_span_drops",
+      "HashKernels.repeatSpanDrops", Seq(spanHashes), Seq(window),
+      ArrayType(IntegerType), Seq(ArrayType(LongType)))
 
   /** `Long hash -> Boolean` membership probe of a serialized Bloom
     * filter riding the plan — the transport Spark's own runtime-filter
@@ -128,10 +157,30 @@ object NativeHashes {
     * with the task binary, deserialized once per executor). Probes stay
     * inside whole-stage codegen. Filter size is set at BUILD time
     * (expected items × fpp), so the caller controls the shipped bytes.
+    * The bytes are a serialized `spark.util.sketch.BloomFilter` over
+    * 64-bit hashes (built by [[bloomSketch]]: the build side inserts
+    * with `putLong`, this probes `mightContainLong`).
     */
   def bloomMightContain(hash: Column, bloomBytes: Array[Byte]): Column =
-    GraftSqlBridge.column(BloomMightContainExpr(
-      GraftSqlBridge.expression(hash), bloomBytes))
+    NativeCall.column("graft_bloom_might_contain",
+      "HashKernels.bloomMightContain", Seq(hash),
+      Seq(BloomFilter.readFrom(bloomBytes)), BooleanType, Seq(LongType))
+
+  /** The serialized Bloom filter of the 64-bit hash column `hashCol` of
+    * `df`, sized for its row count at false-positive rate `fpp` — the
+    * sketch [[bloomMightContain]] probes. An empty frame gives an empty
+    * filter, which no hash probes true (Spark's `stat.bloomFilter`
+    * fails on empty input).
+    */
+  def bloomSketch(df: DataFrame, hashCol: String, fpp: Double): Array[Byte] = {
+    val n = df.count()
+    val bf =
+      if (n == 0L) BloomFilter.create(1L, fpp)
+      else df.stat.bloomFilter(hashCol, n, fpp)
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    bos.toByteArray
+  }
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` injects the
@@ -141,14 +190,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       FunctionIdentifier("graft_minhash64"),
-      new ExpressionInfo(classOf[MinHashSignature64Expr].getName,
-        "graft_minhash64"),
-      (args: Seq[Expression]) => MinHashSignature64Expr(args.head,
+      new ExpressionInfo(classOf[NativeCall].getName, "graft_minhash64"),
+      (args: Seq[Expression]) => NativeHashes.minHash(args.head,
         args(1).eval().asInstanceOf[Int])))
     ext.injectFunction((
       FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head)))
+      new ExpressionInfo(classOf[NativeCall].getName, "graft_simhash64"),
+      (args: Seq[Expression]) => NativeHashes.simHash(args.head)))
     // ClickHouse-named dialect functions (toMonday, notEmpty, uniqExact,
     // arrayElement, sumArray, ...) — see ChDialect
     ChDialect.functions.foreach { case (name, builder) =>
@@ -179,226 +227,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-case class MinHashSignature64Expr(child: Expression, numHashes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhash(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.minhash($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashKernels.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class NGramsExpr(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_ngrams"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.ngrams(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashKernels.ngrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class ProfileCountExpr(child: Expression, words: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_profile_count"
-
-  // one shared immutable set per expression instance; UTF8String keys
-  // so tokens compare without decoding
-  @transient private lazy val wordSet: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
-    val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-    words.foreach(w =>
-      s.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
-    s
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.profileCount(input.asInstanceOf[ArrayData], wordSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // materialize the word set once as a reference object in the
-    // generated class; the per-row code is a single static call
-    val setRef = ctx.addReferenceObj("graftWordSet", wordSet,
-      "java.util.HashSet")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.profileCount($c, $setRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SpanHashesExpr(child: Expression, window: Int, p: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(window >= 2, s"spanHashes: window must be >= 2, got $window")
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_span_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.spanHashes(input.asInstanceOf[ArrayData], window, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.spanHashes($c, $window, ${p}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class RepeatSpanDropsExpr(child: Expression, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(IntegerType)
-  override def prettyName: String = "graft_repeat_span_drops"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.repeatSpanDrops(input.asInstanceOf[ArrayData], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.repeatSpanDrops($c, $window)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SlidingMinExpr(child: Expression, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType)
-  override def prettyName: String = "graft_sliding_min"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.slidingMin(input.asInstanceOf[ArrayData], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.slidingMin($c, $window)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Membership probe of a serialized `spark.util.sketch.BloomFilter`
-  * over 64-bit hashes (build side inserts via `putLong`, this probes
-  * `mightContainLong` — the same kernel pair `DataFrameStatFunctions
-  * .bloomFilter` uses). The filter deserializes lazily once per
-  * (de)serialized expression instance and is shared by reference in
-  * generated code.
-  */
-case class BloomMightContainExpr(child: Expression, bytes: Array[Byte])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "graft_bloom_might_contain"
-
-  @transient private lazy val bloom =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
-
-  override protected def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftBloom", bloom,
-      "org.apache.spark.util.sketch.BloomFilter")
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class RollingHashExpr(child: Expression, p: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_rolling_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.rollingHash(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.rollingHash($c, ${p}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class HashedScoreExpr(child: Expression, weights: IndexedSeq[Long],
-    p: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(weights.nonEmpty, "hashedScore: empty weight table")
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hashed_score"
-
-  @transient private lazy val wArr: Array[Long] = weights.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.hashedScore(input.asInstanceOf[ArrayData], wArr, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("graftHashedWeights", wArr, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashKernels.hashedScore($c, $wRef, ${p}L)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Tight-loop kernels shared by interpreted eval and generated code. */
 object HashKernels {
+
+  def bloomMightContain(hash: Long, bloom: BloomFilter): Boolean =
+    bloom.mightContainLong(hash)
 
   /** Σ weights[rollingHash(tok) mod weights.length] over non-null
     * tokens — the hashed linear classifier's inference loop.

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
@@ -64,41 +64,58 @@ object NativeMath {
     * (the q209 hot path).
     */
   def pqEncode64(v: Column, books: Column): Column =
-    GraftSqlBridge.column(
-      PqEncodeExpr(GraftSqlBridge.expression(v), GraftSqlBridge.expression(books)))
+    NativeCall.column("graft_pq_encode", "MathKernels.pqEncode",
+      Seq(v, books), Nil, ArrayType(IntegerType, containsNull = false),
+      Seq(ArrayType(DoubleType), ArrayType(ArrayType(ArrayType(DoubleType)))))
 
   /** Nearest-codeword index for ONE sub-vector against one subspace's
     * codebook — the training-assignment kernel (same semantics as one
     * slot of [[pqEncode64]]).
     */
   def pqNearestSub(sub: Column, book: Column): Column =
-    GraftSqlBridge.column(
-      PqNearestSubExpr(GraftSqlBridge.expression(sub), GraftSqlBridge.expression(book)))
+    NativeCall.column("graft_pq_nearest", "MathKernels.pqNearest",
+      Seq(sub, book), Nil, IntegerType,
+      Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType))))
 
   /** ADC score: sum over s of `lut(s)(codes(s))` — the PQ scan kernel,
     * index-ordered accumulation (bit-identical to the zip_with fold).
     */
   def pqAdc(codes: Column, lut: Column): Column =
-    GraftSqlBridge.column(
-      PqAdcExpr(GraftSqlBridge.expression(codes), GraftSqlBridge.expression(lut)))
+    NativeCall.column("graft_pq_adc", "MathKernels.pqAdc", Seq(codes, lut),
+      Nil, DoubleType,
+      Seq(ArrayType(IntegerType), ArrayType(ArrayType(DoubleType))))
 
-  /** Tie-aware ROC AUC of per-row (scores, labels) arrays — see
-    * [[ArrayAucExpr]].
-    */
-  def arrayAuc(scores: Column, labels: Column): Column =
-    GraftSqlBridge.column(
-      ArrayAucExpr(GraftSqlBridge.expression(scores),
-        GraftSqlBridge.expression(labels)))
-
-  /** The `nprobe` best centroid ids for a vector, ranked by cosine
-    * desc with centroid id as tie-break — the native form of the IVF
-    * probe ranking (see [[TopCellsExpr]]); value-identical to the
-    * `zip_with` + `array_sort` combinator it replaces.
+  /** The `nprobe` best centroid ids for a vector — cosine desc,
+    * centroid id ascending as tie-break, zero-norm sides scoring 0.0 —
+    * in one codegen'd pass over a precomputed primitive centroid table.
+    * Value-identical (same dot/norm doubles, same total order) to the
+    * `zip_with(ids, cents, …)` + `array_sort(comparator)` + `slice`
+    * combinator it replaces, which evaluated interpreted lambdas per
+    * centroid per row and re-derived every centroid norm per row — the
+    * measured hot loop of the IVF candidate generator at √N centroids.
+    * The centroid table and its norms are constants of the call
+    * (reference objects in codegen), not a child literal.
     */
   def topCells(v: Column, cents: Array[(Long, Seq[Double])],
-      nprobe: Int): Column =
-    GraftSqlBridge.column(TopCellsExpr(GraftSqlBridge.expression(v),
-      cents.map(_._2.toArray), cents.map(_._1), nprobe))
+      nprobe: Int): Column = {
+    require(nprobe >= 1, "topCells: nprobe >= 1")
+    val cs = cents.map(_._2.toArray)
+    val norms = cs.map(c => math.sqrt(MathKernels.dotArr(c, c)))
+    NativeCall.column("graft_top_cells", "MathKernels.topCells", Seq(v),
+      Seq(cs, norms, cents.map(_._1), nprobe),
+      ArrayType(LongType, containsNull = false), Seq(ArrayType(DoubleType)))
+  }
+
+  /** Greedy MMR selection — see [[MathKernels.mmrSelect]]; once per
+    * QUERY row over a bounded shortlist.
+    */
+  def mmrSelect(ids: Column, rels: Column, embs: Column, k: Int,
+      lam: Double): Column =
+    NativeCall.column("mmrselectexpr", "MathKernels.mmrSelect",
+      Seq(ids, rels, embs), Seq[Any](k, lam),
+      ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(LongType), ArrayType(DoubleType),
+        ArrayType(ArrayType(LongType))))
 
   /** Sign-bit packing of an embedding (round 13, X201): bit j of word
     * w = 1 iff `v[64w + j] > 0` — the 1-bit binary quantization real
@@ -106,17 +123,21 @@ object NativeMath {
     * float32); distance becomes XOR + popcount ([[hammingI64]]).
     */
   def packSignBits(v: Column): Column =
-    GraftSqlBridge.column(PackSignBitsExpr(GraftSqlBridge.expression(v)))
+    NativeCall.column("graft_pack_sign_bits", "MathKernels.packSignBits",
+      Seq(v), Nil, ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(DoubleType)))
 
   /** Hamming distance of two sign-bit-packed arrays: Σ popcount(a⊕b).
     * One tight codegen'd loop per PAIR — the candidate-volume hot
     * path of binary ANN.
     */
   def hammingI64(a: Column, b: Column): Column =
-    GraftSqlBridge.column(HammingI64Expr(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+    NativeCall.column("graft_hamming_i64", "MathKernels.hammingI64",
+      Seq(a, b), Nil, LongType, Seq(ArrayType(LongType), ArrayType(LongType)))
 }
 
+// bespoke, not a NativeCall: its input types and generated call depend
+// on whether each child is array<float>
 case class DotProduct64Expr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
 
@@ -167,7 +188,8 @@ case class DotProduct64Expr(left: Expression, right: Expression)
 
 /** Long-array twin of [[DotProduct64Expr]]: exact int64 accumulation,
   * NULL on length mismatch or null element, ArithmeticException on
-  * overflow — all identical to the ANSI long-fold combinator.
+  * overflow — all identical to the ANSI long-fold combinator. Bespoke,
+  * not a NativeCall: a primitive result that can still be NULL.
   */
 case class DotProductI64Expr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -195,6 +217,8 @@ case class DotProductI64Expr(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
+// bespoke, not a NativeCall: its generated call depends on whether the
+// centroid child is foldable
 case class ArgMaxCosineExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
 
@@ -241,47 +265,6 @@ case class ArgMaxCosineExpr(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** The `nprobe` best centroid ids for a vector — cosine desc,
-  * centroid id ascending as tie-break, zero-norm sides scoring 0.0 —
-  * in one codegen'd pass over a precomputed primitive centroid table.
-  * Value-identical (same dot/norm doubles, same total order) to the
-  * `zip_with(ids, cents, …)` + `array_sort(comparator)` + `slice`
-  * combinator it replaces, which evaluated interpreted lambdas per
-  * centroid per row and re-derived every centroid norm per row — the
-  * measured hot loop of the IVF candidate generator at √N centroids.
-  * The centroid table lives IN the expression (reference objects in
-  * codegen), not as a child literal.
-  */
-case class TopCellsExpr(child: Expression, cents: Array[Array[Double]],
-    ids: Array[Long], nprobe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ImplicitCastInputTypes {
-
-  require(nprobe >= 1, "topCells: nprobe >= 1")
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_top_cells"
-
-  @transient private lazy val norms: Array[Double] =
-    cents.map(c => math.sqrt(MathKernels.dotArr(c, c)))
-
-  override protected def nullSafeEval(v: Any): Any =
-    MathKernels.topCells(v.asInstanceOf[ArrayData], cents, norms, ids,
-      nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftTcCents", cents, "double[][]")
-    val normsRef = ctx.addReferenceObj("graftTcNorms", norms, "double[]")
-    val idsRef = ctx.addReferenceObj("graftTcIds", ids, "long[]")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      ${ev.value} = graft.plans.MathKernels.topCells($v, $centsRef,
-        $normsRef, $idsRef, $nprobe);""")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
 }
 
 object MathKernels {
@@ -400,9 +383,17 @@ object MathKernels {
     new GenericArrayData(picked.map(j => ids.getLong(order(j))).toArray)
   }
 
-  /** Tie-aware AUC over (scores, labels): doubled midranks of scores,
-    * positive-rank sum, exact integers to the final division. Null on
-    * length mismatch or a single-class label array.
+  /** ClickHouse `arrayAUC(scores, labels)` (`clickhouse.com/docs/
+    * sql-reference/functions/array-functions#arrayauc`): area under the
+    * ROC curve of per-row score/label arrays — the eval-harness
+    * primitive (ranking quality of a scorer against binary relevance,
+    * one row per query). Mann–Whitney form with tie-aware midranks:
+    * AUC = (2·R₊ − P(P+1)) / (2·P·N), every term an exact integer
+    * (doubled midranks stay integral), one final IEEE division — so the
+    * DuckDB oracle replays it bit-for-bit with window functions.
+    * Mismatched lengths or a single-class label array return NULL
+    * (CH errors / returns nan respectively — compared surfaces need the
+    * total form).
     */
   def arrayAuc(scores: ArrayData, labels: ArrayData): Any = {
     val n = scores.numElements()
@@ -622,7 +613,7 @@ object MathKernels {
   }
 
   /** The `nprobe` best centroid IDS by (cosine desc, id asc) — the
-    * native IVF probe ranking (see [[graft.plans.TopCellsExpr]]).
+    * native IVF probe ranking (see [[NativeMath.topCells]]).
     */
   def topCells(v: ArrayData, cents: Array[Array[Double]],
       norms: Array[Double], ids: Array[Long], nprobe: Int): ArrayData = {
@@ -655,133 +646,6 @@ object MathKernels {
     }
     bestI
   }
-}
-
-case class PqEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(DoubleType), ArrayType(ArrayType(ArrayType(DoubleType))))
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-
-  override protected def nullSafeEval(v: Any, books: Any): Any =
-    MathKernels.pqEncode(v.asInstanceOf[ArrayData],
-      books.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.MathKernels.pqEncode($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-case class PqNearestSubExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_pq_nearest"
-
-  override protected def nullSafeEval(sub: Any, book: Any): Any =
-    MathKernels.pqNearest(sub.asInstanceOf[ArrayData],
-      book.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.MathKernels.pqNearest($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-case class PqAdcExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(IntegerType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_pq_adc"
-
-  override protected def nullSafeEval(codes: Any, lut: Any): Any =
-    MathKernels.pqAdc(codes.asInstanceOf[ArrayData],
-      lut.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.MathKernels.pqAdc($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-/** ClickHouse `arrayAUC(scores, labels)` (`clickhouse.com/docs/
-  * sql-reference/functions/array-functions#arrayauc`): area under the
-  * ROC curve of per-row score/label arrays — the eval-harness
-  * primitive (ranking quality of a scorer against binary relevance,
-  * one row per query). Mann–Whitney form with tie-aware midranks:
-  * AUC = (2·R₊ − P(P+1)) / (2·P·N), every term an exact integer
-  * (doubled midranks stay integral), one final IEEE division — so the
-  * DuckDB oracle replays it bit-for-bit with window functions.
-  * Mismatched lengths or a single-class label array return NULL
-  * (CH errors / returns nan respectively — compared surfaces need the
-  * total form).
-  */
-case class ArrayAucExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(DoubleType), ArrayType(org.apache.spark.sql.types.LongType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "arrayAUC"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(scores: Any, labels: Any): Any =
-    MathKernels.arrayAuc(scores.asInstanceOf[ArrayData],
-      labels.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val auc = ctx.freshName("auc")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object $auc = graft.plans.MathKernels.arrayAuc($a, $b);
-      if ($auc == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((Double) $auc).doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-/** Greedy MMR selection — see [[MathKernels.mmrSelect]]. Evaluated
-  * once per QUERY row over a bounded shortlist (CodegenFallback is
-  * fine: the expression is not on a corpus-sized path).
-  */
-case class MmrSelectExpr(ids: Expression, rels: Expression,
-    embs: Expression, k: Int, lam: Double)
-  extends Expression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(ids, rels, embs)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = ids.eval(input)
-    val r = rels.eval(input)
-    val e = embs.eval(input)
-    if (a == null || r == null || e == null) null
-    else MathKernels.mmrSelect(a.asInstanceOf[ArrayData],
-      r.asInstanceOf[ArrayData], e.asInstanceOf[ArrayData], k, lam)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(ids = newChildren(0), rels = newChildren(1), embs = newChildren(2))
 }
 
 /** Inverse standard-normal CDF (Acklam's rational approximation,
@@ -821,45 +685,4 @@ object InvNorm {
         ((((d(0) * q + d(1)) * q + d(2)) * q + d(3)) * q + 1.0)
     }
   }
-}
-
-case class PackSignBitsExpr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pack_sign_bits"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any =
-    MathKernels.packSignBits(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.MathKernels.packSignBits($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class HammingI64Expr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hamming_i64"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MathKernels.hammingI64(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.MathKernels.hammingI64($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Network / encoding vocabulary kernels backing the engine's
@@ -212,108 +211,6 @@ object NetKernels {
     catch { case _: IllegalArgumentException => null }
 }
 
-abstract class NetStringExpr extends UnaryExpression
-    with ImplicitCastInputTypes {
-  def kernel: String
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("net")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      UTF8String $tmp = graft.plans.NetKernels.$kernel($c);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp; }
-    """)
-  }
-}
-
-case class IsIpv6StringExpr(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "isIPv6String"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.isIpv6(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NetKernels.isIpv6($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class MacNumToStringExpr(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "MACNumToString"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.macNumToString(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NetKernels.macNumToString($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class MacStringToNumExpr(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "MACStringToNum"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.macStringToNum(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NetKernels.macStringToNum($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class Base58EncodeExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "base58Encode"
-  override def prettyName: String = "base58Encode"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.base58Encode(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class Base58DecodeExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "base58Decode"
-  override def prettyName: String = "base58Decode"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.base58Decode(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class SoundexExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "soundex"
-  override def prettyName: String = "soundex"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.soundex(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class IdnaEncodeExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "idnaEncode"
-  override def prettyName: String = "idnaEncode"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.idnaEncode(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class IdnaDecodeExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "idnaDecode"
-  override def prettyName: String = "idnaDecode"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.idnaDecode(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
 /** String-distance kernels backing the engine's fuzzy-matching
   * vocabulary (`clickhouse.com/docs/sql-reference/functions/
   * string-functions#editdistance` neighborhood): classical
@@ -425,64 +322,12 @@ object StrDistKernels {
   }
 }
 
-case class DamerauLevenshteinExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "damerauLevenshteinDistance"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StrDistKernels.damerauLevenshtein(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.StrDistKernels.damerauLevenshtein($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-case class JaroExpr(left: Expression, right: Expression,
-    winkler: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String =
-    if (winkler) "jaroWinklerSimilarity" else "jaroSimilarity"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (winkler) StrDistKernels.jaroWinkler(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-    else StrDistKernels.jaro(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (winkler) "jaroWinkler" else "jaro"
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.StrDistKernels.$fn($a, $b)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
-case class CharJaccardExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "stringJaccardIndex"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StrDistKernels.charJaccard(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.StrDistKernels.charJaccard($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression) = copy(left = newLeft, right = newRight)
-}
-
 /** CH `toTypeName(x)`: the ClickHouse-vocabulary name of the
   * argument's type — introspection sugar for runbooks; resolves at
   * plan time (constant per column), CH names for the common types and
-  * Spark's `simpleString` for anything exotic.
+  * Spark's `simpleString` for anything exotic. Bespoke, not a
+  * NativeCall: its value is a function of the child's type, not of a
+  * row.
   */
 case class ToTypeNameExpr(child: Expression) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -517,15 +362,6 @@ case class ToTypeNameExpr(child: Expression) extends UnaryExpression
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     UTF8String.fromString(chName(child.dataType))
 
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
-case class InitcapChExpr(child: Expression) extends NetStringExpr {
-  override def kernel: String = "initcapCh"
-  override def prettyName: String = "initcap"
-  override protected def nullSafeEval(input: Any): Any =
-    NetKernels.initcapCh(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)
 }

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Native kernels for the X180 time-series family (round 12, verdict
   * ask #6 — the same interpreted-HOF-hot-loop class wave 17/20
@@ -30,11 +28,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 object NativeSeries {
 
   def periodFFT(arr: Column): Column =
-    GraftSqlBridge.column(SeriesPeriodFFTExpr(GraftSqlBridge.expression(arr)))
+    NativeCall.column("seriesPeriodDetectFFT", "SeriesKernels.periodFFT",
+      Seq(arr), Nil, DoubleType, Seq(ArrayType(DoubleType)))
 
   def stl(arr: Column, period: Column): Column =
-    GraftSqlBridge.column(SeriesStlExpr(GraftSqlBridge.expression(arr),
-      GraftSqlBridge.expression(period)))
+    NativeCall.column("seriesDecomposeSTL", "SeriesKernels.stl",
+      Seq(arr, period), Nil,
+      ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = true),
+      Seq(ArrayType(DoubleType), IntegerType))
 }
 
 object SeriesKernels {
@@ -148,52 +149,4 @@ object SeriesKernels {
       new GenericArrayData(trend), new GenericArrayData(resid),
       new GenericArrayData(baseline)))
   }
-}
-
-case class SeriesPeriodFFTExpr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "seriesPeriodDetectFFT"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(arr: Any): Any =
-    SeriesKernels.periodFFT(arr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("fftP")
-    nullSafeCodeGen(ctx, ev, a => s"""
-      Object $r = graft.plans.SeriesKernels.periodFFT($a);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((Double) $r).doubleValue(); }""")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class SeriesStlExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType), IntegerType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = true),
-      containsNull = true)
-  override def prettyName: String = "seriesDecomposeSTL"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(arr: Any, p: Any): Any =
-    SeriesKernels.stl(arr.asInstanceOf[ArrayData], p.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("stlR")
-    nullSafeCodeGen(ctx, ev, (a, p) => s"""
-      Object $r = graft.plans.SeriesKernels.stl($a, $p);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }""")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

@@ -172,6 +172,26 @@ class DedupSpec extends SparkSpec {
       plan.contains("WholeStageCodegen"), plan)
   }
 
+  test("the Bloom operators run on 0-row input") {
+    import org.apache.spark.sql.functions.col
+    val none = Seq.empty[(Long, String)].toDF("id", "t")
+    val fp = text.fingerprint(col("t"))
+    // an empty batch over an empty and a non-empty store
+    for (seed <- Seq(none, Seq((1L, "alpha text")).toDF("id", "t"))) {
+      val store = s"${tempDir("bloom_empty")}/store"
+      Dedup.incrementalDedupBloom(seed, fp, "id", store).count()
+      assert(Dedup.incrementalDedupBloom(none, fp, "id", store).count() == 0L)
+    }
+    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val noEval = docs.limit(0)
+    val clean = Dedup.decontaminateBloom(docs, noEval, "doc_id", "text", n = 2)
+      .select($"doc_id", $"eval_hits", $"contaminated")
+      .as[(Long, Long, Boolean)].collect().toSeq
+    assert(clean == Seq((1L, 0L, false)))
+    assert(Dedup.decontaminateBloom(noEval, noEval, "doc_id", "text", n = 2)
+      .count() == 0L)
+  }
+
   test("maxBucket drops are observable, not silent") {
     import org.apache.spark.sql.Observation
     // 5 identical docs (one bucket of width 5) + the planted near-dups

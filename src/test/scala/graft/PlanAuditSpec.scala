@@ -66,6 +66,19 @@ class PlanAuditSpec extends SparkSpec {
       val p = plan(q)
       assert(trimmedProbeExchanges(p) == 1, s"$q: $p")
     }
+    // q290's re-rank norms only the shortlisted corpus rows: the
+    // projection computing the corpus norm sits above the shortlist
+    // join, never over the full corpus scan
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val rerank = SparkEntry.queries("q290_binary_hamming_ann")(spark, dir)
+      .queryExecution.sparkPlan
+    val norms = rerank.collect {
+      case p: ProjectExec if p.output.exists(_.name == "__vn") => p }
+    assert(norms.nonEmpty, rerank)
+    for (n <- norms) assert(
+      n.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"a corpus norm over the full corpus scan:\n$rerank")
   }
 
   test("q61/q63: asof and range joins never take a nested-loop plan") {
